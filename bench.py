@@ -198,10 +198,10 @@ def run_bench(spark, sf_dir: str) -> dict:
                 os.path.join(stream_in, f"chunk-{i:03d}.parquet"),
             )
 
-    def _stream(mode: str, max_files_per_trigger: int | None = None):
+    def _stream(max_files_per_trigger: int | None = None):
         from scylla_cdc_source_connector_spark.streaming.engine import run_stream
 
-        root = f"/tmp/sccs_bench_stream_{mode}_{max_files_per_trigger or 0}"
+        root = f"/tmp/sccs_bench_stream_{max_files_per_trigger or 0}"
         shutil.rmtree(root, ignore_errors=True)
         scfg = EngineConfig(
             include_before=IncludeMode.FULL,
@@ -214,7 +214,6 @@ def run_bench(spark, sf_dir: str) -> dict:
             spark,
             scfg,
             stream_in,
-            mode=mode,
             max_files_per_trigger=max_files_per_trigger,
         )
         q.awaitTermination(3600)
@@ -253,10 +252,10 @@ def run_bench(spark, sf_dir: str) -> dict:
     stream_samples: list[float] = []
     ctrl_samples: list[float] = []
     ctrl_out = "/tmp/sccs_bench_ctrl_write"
-    env_out = "/tmp/sccs_bench_stream_vectorized_0/out"
+    env_out = "/tmp/sccs_bench_stream_0/out"
     for _ in range(4):
         t0 = time.time()
-        _stream("vectorized")
+        _stream()
         stream_samples.append(round(time.time() - t0, 3))
         batch_dirs = [
             os.path.join(env_out, p)
@@ -288,7 +287,7 @@ def run_bench(spark, sf_dir: str) -> dict:
     # pending-state carryover): per-batch emit-latency percentiles
     q_mb = timed(
         "cdc_streaming_microbatched",
-        lambda: _stream("vectorized", max_files_per_trigger=1),
+        lambda: _stream(max_files_per_trigger=1),
     )
     extra["emit_latency"] = _batch_latency_pcts(q_mb)
 
@@ -408,67 +407,6 @@ def run_bench(spark, sf_dir: str) -> dict:
         return res["ndv"]["clip_id"]
 
     extra["iceberg_stats_ndv_clips"] = timed("iceberg_stats", _table_stats)
-
-    # reference-shaped per-group state machine, capped input (it is the
-    # slow path by construction; measured for the comparison record)
-    stateful_rows = min(n_changelog_rows, 5000)
-    stateful_in = "/tmp/sccs_bench_stream_in_stateful"
-    if not os.path.isdir(stateful_in) or not os.listdir(stateful_in):
-        os.makedirs(stateful_in, exist_ok=True)
-        pdf = __import__("pandas").read_parquet(cl_path).head(stateful_rows)
-        from scylla_cdc_source_connector_spark.fixtures import (
-            write_changelog_chunk,
-        )
-
-        write_changelog_chunk(pdf, os.path.join(stateful_in, "chunk-000.parquet"))
-
-    def _stream_stateful():
-        from scylla_cdc_source_connector_spark.streaming.engine import run_stream
-
-        root = "/tmp/sccs_bench_stream_stateful"
-        shutil.rmtree(root, ignore_errors=True)
-        scfg = EngineConfig(
-            include_before=IncludeMode.FULL,
-            include_after=IncludeMode.FULL,
-            checkpoint_dir=f"{root}/ck",
-            output_dir=f"{root}/out",
-            lineage_dir=f"{root}/lin",
-        )
-        q = run_stream(spark, scfg, stateful_in, mode="stateful")
-        q.awaitTermination(3600)
-
-    timed("cdc_pipeline_streaming_stateful_5k", _stream_stateful)
-    extra["events_per_sec_stateful"] = round(
-        stateful_rows / timings["cdc_pipeline_streaming_stateful_5k"], 1
-    )
-
-    def _stream_tws():
-        """Same per-RowKey state machine on transformWithStateInPandas
-        (RocksDB state + event-time timers) — old vs new stateful API,
-        same capped input."""
-        from scylla_cdc_source_connector_spark.streaming.engine import run_stream
-
-        root = "/tmp/sccs_bench_stream_tws"
-        shutil.rmtree(root, ignore_errors=True)
-        scfg = EngineConfig(
-            include_before=IncludeMode.FULL,
-            include_after=IncludeMode.FULL,
-            checkpoint_dir=f"{root}/ck",
-            output_dir=f"{root}/out",
-            lineage_dir=f"{root}/lin",
-        )
-        q = run_stream(spark, scfg, stateful_in, mode="tws")
-        q.awaitTermination(3600)
-
-    from scylla_cdc_source_connector_spark.streaming.correlation_tws import (
-        tws_available,
-    )
-
-    if tws_available():
-        timed("cdc_pipeline_streaming_tws_5k", _stream_tws)
-        extra["events_per_sec_tws"] = round(
-            stateful_rows / timings["cdc_pipeline_streaming_tws_5k"], 1
-        )
 
     # 3. audio validation path (vectorized decode + stats over postimages)
     def _audio():

@@ -10,6 +10,8 @@ Checks encode the scale invariants the engine is designed around:
   2. default include modes read NO payload columns from the scan
   3. partition predicates reach the parquet scan (PushedFilters)
   4. salted aggregation = exactly two exchanges (salted partial + combine)
+  5. the streaming sink's own per-batch plan, replay markers included =
+     ONE exchange, no join, and a marker scan that reads no payload
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import contextlib
 import io
 import os
 import re
+import shutil
 import sys
 
 
@@ -114,39 +117,43 @@ def main() -> None:
         "normalize stage must not add an exchange"
     )
 
-    # streaming-sink correlation mode: the one exchange is the stream
-    # repartition (HashPartitioning(stream_id) satisfies the finer group
-    # key), and the per-shard ordered write rides it — the payload crosses
+    # streaming sink: the audit builds the sink's OWN per-batch plan
+    # (sink_envelopes) with replay markers present.  The one exchange is
+    # the stream repartition (HashPartitioning(stream_id) satisfies the
+    # finer group key); the markers ride it, so the plan has no join, and
+    # the per-shard ordered write rides it too — the payload crosses
     # exactly ONE exchange end-to-end in the sink (PLANS.md §7)
-    from scylla_cdc_source_connector_spark.operators.correlation import (
-        correlate_batch,
-        is_complete_expr,
-        mask_unused_images,
-        needs_delta_flags,
-    )
-    from scylla_cdc_source_connector_spark.operators.projection import (
-        build_envelopes,
+    from scylla_cdc_source_connector_spark.streaming.sink import (
+        emitted_markers,
+        sink_envelopes,
     )
 
     cfg_full = EngineConfig(
         include_before=IncludeMode.FULL, include_after=IncludeMode.FULL
     )
-    corr_s = mask_unused_images(
-        correlate_batch(
-            cl,
-            delta_flags=needs_delta_flags(cfg_full),
-            require_delta=False,
-            cluster_by_stream=True,
-        ),
-        cfg_full,
-    )
-    env_s = build_envelopes(
-        corr_s.filter(is_complete_expr(cfg_full)),
-        cfg_full,
-        processing_ts_ms=F.lit(0),
+    emitted_dir = "/tmp/sccs_plan_audit_emitted"
+    shutil.rmtree(emitted_dir, ignore_errors=True)
+    cdc_envelopes(
+        cl.limit(2_000), cfg_full, processing_ts_ms=F.lit(0)
+    ).write.parquet(emitted_dir)
+    env_s = sink_envelopes(
+        cl, emitted_markers(spark, [emitted_dir]), cfg_full
     ).sortWithinPartitions("`cdc$time_us`", "`cdc$batch_seq_no`")
-    rs = audit(env_s, "streaming sink: stream-clustered correlate + ordered emit")
+    rs = audit(env_s, "streaming sink: correlate with replay markers + ordered emit")
     assert rs["exchanges"] == 1, "sink payload must cross exactly ONE exchange"
+    sink_txt = _capture(env_s)
+    assert "BroadcastExchange" not in sink_txt, "sink plan must not broadcast"
+    assert "SortMergeJoin" not in sink_txt, "sink plan must not join"
+    marker_scans = [
+        re.search(r"ReadSchema: (.*)", node).group(1)
+        for node in sink_txt.split("\n\n")
+        if emitted_dir in node and "ReadSchema:" in node
+    ]
+    assert len(marker_scans) == 1, "expected one marker scan"
+    assert "bytes" not in marker_scans[0] and "transcript" not in marker_scans[0], (
+        "marker scan must read the slim key columns only"
+    )
+    shutil.rmtree(emitted_dir, ignore_errors=True)
 
     # composed training recipe: ONE plan tree (no self-join re-executing
     # the upstream), exactly THREE exchanges — correlation, latest-state
@@ -170,8 +177,6 @@ def main() -> None:
     if not spark.catalog.tableExists(tbl):
         # in-memory catalog forgets tables between sessions; clear the
         # stale warehouse location or saveAsTable fails
-        import shutil
-
         shutil.rmtree(f"/tmp/sccs_warehouse/{tbl}", ignore_errors=True)
         (
             cl.limit(20_000).write.bucketBy(8, "clip_id")
@@ -280,7 +285,7 @@ def main() -> None:
         "sink status path must not collect per-group keys to the driver"
     )
     r11 = audit(
-        sink_mod._incomplete_group_keys(cl, cfg_full, DEFAULT_TABLE, hwm=0),
+        sink_mod._incomplete_group_keys(cl, None, cfg_full, DEFAULT_TABLE, hwm=0),
         "sink incomplete-keys status plan (metadata-only)",
     )
     assert r11["exchanges"] == 1, "status plan = one slim hash aggregation"

@@ -337,9 +337,7 @@ def headline(rows: int) -> dict:
         lineage_dir=f"{STREAM_ROOT}/lin",
     )
     t0 = time.time()
-    q = run_stream(
-        spark, scfg, IN_DIR, mode="vectorized", max_files_per_trigger=1
-    )
+    q = run_stream(spark, scfg, IN_DIR, max_files_per_trigger=1)
     q.awaitTermination(3600)
     out["streaming_microbatched_sec"] = round(time.time() - t0, 3)
     out["events_per_sec_streaming"] = round(

@@ -7,8 +7,9 @@ It re-expresses the reference's dataflow semantics — sharded windowed CDC
 scan, pre/delta/post image correlation, change-type classification, envelope
 projection, offset/lineage tracking, exactly-once emit — as idiomatic
 PySpark: DataFrame expressions compiled by Catalyst, Structured Streaming
-with watermarks for the confidence window, `applyInPandasWithState` for the
-per-key correlation state machine, and Arrow-vectorized pandas UDFs for the
+with a confidence-window watermark, one codegen'd correlation aggregation
+per micro-batch (pending state for cross-batch waits, replay markers for
+re-delivered rows), and Arrow-vectorized pandas UDFs for the
 audio payload path (zero per-row Python).
 
 Reference semantics citations use file:line of /root/reference.

@@ -10,7 +10,7 @@ Event mix per FIXTURES.md F2: ~70% INSERT, ~20% UPDATE (with PRE/POST_IMAGE
 rows), ~9% DELETE (with PRE_IMAGE), ~1% PARTITION_DELETE; ~1% hot clip_ids
 (skew); a small fraction of type-grouped batches ([pre,pre,delta,delta,
 post,post] — the CdcBatchPreimageMisalignmentIT ordering) and of exact
-duplicates (exercising dropDuplicatesWithinWatermark); ≥2 generations with a
+duplicates (exercising the replay drop); ≥2 generations with a
 clean time boundary.
 
 Everything is numpy/pandas vectorized so bench-scale generation (millions of
@@ -292,7 +292,7 @@ def make_changelog(
         rows.groupby(["stream_id", "t_us"]).cumcount().astype(np.int32)
     )
 
-    # --- exact duplicates (exercise dropDuplicatesWithinWatermark) ---------
+    # --- exact duplicates (exercise the replay drop) -----------------------
     rng2 = np.random.default_rng(spec.seed + 2)
     delta_mask = rows["cdc$operation"].isin(
         [OP_ROW_INSERT, OP_ROW_UPDATE, OP_ROW_DELETE, OP_PARTITION_DELETE]

@@ -8,20 +8,19 @@ In Scylla's CDC log the images accompanying a delta share its cdc$time
 (same write), so correlation is keyed by (clip_id, cdc$time) — the Spark-
 native equivalent of RowKey.java:48-58 (TaskId + PK values).
 
-Two implementations:
+`correlate_batch` is the one correlator: a single hash aggregation (ONE
+shuffle on the correlation key, map-side partial agg, whole-stage
+codegen; no Python).  `max(when(op==X, struct(...)))` collapses the
+type-grouped batch ordering ([pre,pre,delta,delta,post,post] —
+CdcBatchPreimageMisalignmentIT.java:21-98) because grouping is by key,
+not arrival order; exact duplicates collapse for free.
 
-* `correlate_batch` — a single hash aggregation (ONE shuffle on the
-  correlation key, map-side partial agg, whole-stage codegen; no Python).
-  Batch/micro-batch path.  `max(when(op==X, struct(...)))` collapses the
-  type-grouped batch ordering ([pre,pre,delta,delta,post,post] —
-  CdcBatchPreimageMisalignmentIT.java:21-98) because grouping is by key,
-  not arrival order; exact duplicates collapse for free (the dedup the
-  north_rule asks from dropDuplicatesWithinWatermark is subsumed here for
-  the batch path).
-
-* `correlate_stream` (streaming/correlation_state.py) — the
-  applyInPandasWithState operator for cross-micro-batch waits with the
-  15 s incomplete-task timeout (C4, ScyllaChangesConsumer.java:37,147-185).
+The batch pipeline runs it once over the whole changelog.  The streaming
+sink (streaming/sink.py make_correlating_sink) runs it once per
+micro-batch: cross-batch waits ride a pending-state table with the 15 s
+incomplete-task timeout (C4, ScyllaChangesConsumer.java:37,147-185), and
+replays of rows whose group a committed batch already emitted are
+recognised by OP_EMITTED marker rows (`mark_emitted=True`).
 """
 
 from __future__ import annotations
@@ -33,6 +32,7 @@ from scylla_cdc_source_connector_spark.config import EngineConfig
 from scylla_cdc_source_connector_spark.schemas import (
     DEFAULT_TABLE,
     DELTA_OPS,
+    OP_EMITTED,
     OP_PARTITION_DELETE,
     OP_POST_IMAGE,
     OP_PRE_IMAGE,
@@ -110,6 +110,7 @@ def correlate_batch(
     table: TableModel = DEFAULT_TABLE,
     require_delta: bool = True,
     cluster_by_stream: bool = False,
+    mark_emitted: bool = False,
 ) -> DataFrame:
     """Group CDC log rows by (pk columns..., cdc$time) and pivot the
     operation types into pre_image / delta / post_image structs.  The
@@ -146,6 +147,10 @@ def correlate_batch(
     for the batch/bucketed paths: a bucketed-by-clip_id table satisfies
     the (pk, time) grouping with ZERO exchange, and an explicit
     repartition would force one back in.
+
+    mark_emitted=True (the streaming sink) adds a boolean `emitted`
+    column: True for a group holding an OP_EMITTED marker row, i.e. one
+    a committed micro-batch already emitted.
     """
     op = F.col("`cdc$operation`")
     seq = F.col("`cdc$batch_seq_no`")
@@ -174,6 +179,8 @@ def correlate_batch(
             F.max("`cdc$stream_id`").alias("cdc$stream_id"),
             F.max("generation").alias("generation"),
         ]
+    if mark_emitted:
+        tail_aggs.append(F.bool_or(op.eqNullSafe(OP_EMITTED)).alias("emitted"))
     agg = grouped.agg(
         last(op == OP_PRE_IMAGE, base_struct).alias("pre_image"),
         last(op == OP_POST_IMAGE, base_struct).alias("post_image"),

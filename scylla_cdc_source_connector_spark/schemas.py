@@ -30,6 +30,10 @@ OP_POST_IMAGE = 9
 #: image row.  Reference: the consume() switch ScyllaChangesConsumer.java:187-249.
 DELTA_OPS = (OP_ROW_UPDATE, OP_ROW_INSERT, OP_ROW_DELETE, OP_PARTITION_DELETE)
 
+#: sink-internal marker row: the key of a group a committed micro-batch
+#: already emitted (outside the reference's op range, never in a changelog)
+OP_EMITTED = -1
+
 #: Debezium Envelope.Operation codes (ScyllaChangeRecordEmitter.java:94-110)
 OP_CODE_CREATE = "c"
 OP_CODE_UPDATE = "u"

@@ -2336,6 +2336,10 @@ def read_changelog(
                         .drop("__pv")
                     )
         parts.append(deleted.select(*data_cols, *_CHANGELOG_COLS))
+    if not parts:
+        # e.g. a range whose only content is equality deletes over a
+        # history with no data rows: nothing changed row-wise
+        return spark.createDataFrame([], out_schema)
     import functools
 
     out = functools.reduce(lambda a, b: a.unionByName(b), parts)
@@ -4351,15 +4355,22 @@ def materialize_increment(
     if head == -1 or head == last:
         return {"consumed": [], "rows": 0, "hwm": last}
     line = _ancestors_of(md, head)
-    last_seq = (
-        None
-        if last is None
-        else next(
-            x["sequence-number"]
-            for x in md["snapshots"]
-            if x["snapshot-id"] == last
+    last_seq = None
+    if last is not None:
+        last_seq = next(
+            (
+                x["sequence-number"]
+                for x in md["snapshots"]
+                if x["snapshot-id"] == last
+            ),
+            None,
         )
-    )
+        if last_seq is None:
+            raise ValueError(
+                f"hwm snapshot {last} of {state_path} expired from table "
+                "history; re-seed the output directory or widen "
+                "expire_snapshots keep_last"
+            )
     new_snaps = [
         s["snapshot-id"]
         for s in snapshots(location)

@@ -65,7 +65,6 @@ def run_tables(
     specs: list[TableSpec],
     *,
     available_now: bool = True,
-    mode: str = "vectorized",
     max_files_per_trigger: int | None = None,
     generation: int | None = None,
 ) -> dict:
@@ -92,7 +91,6 @@ def run_tables(
             table_cfg(cfg, spec.name),
             spec.input_path,
             available_now=available_now,
-            mode=mode,
             max_files_per_trigger=max_files_per_trigger,
             table=spec.table,
             generation=generation,

@@ -1,10 +1,11 @@
-"""The streaming CDC engine: source → watermark → stateful correlation →
+"""The streaming CDC engine: source → confidence window → correlation →
 envelope projection → exactly-once sink, sequenced per generation.
 
 Lifecycle mirror of SURVEY §3.2:
   spark.readStream (changelog dir; Iceberg in production, parquet file
-  source locally) → withWatermark(confidence window) → correlation state
-  machine → envelope select → foreachBatch exactly-once sink (checkpointed).
+  source locally) → foreachBatch correlating sink (confidence-window
+  filter, per-batch correlation with pending state and replay markers,
+  envelope select, exactly-once write; checkpointed).
 
 Generation rollover (SURVEY §2.1 "Generation", ScyllaConnector.java:70-97 /
 ScyllaMasterTransport.areTasksFullyConsumedUntil:50-70): the stream set is
@@ -21,16 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scylla_cdc_source_connector_spark.config import EngineConfig
-from scylla_cdc_source_connector_spark.operators.projection import build_envelopes
 from scylla_cdc_source_connector_spark.schemas import DEFAULT_TABLE, TableModel
-from scylla_cdc_source_connector_spark.streaming.correlation_state import (
-    correlate_stream,
-    reassemble_correlated,
-)
-from scylla_cdc_source_connector_spark.streaming.sink import (
-    make_correlating_sink,
-    make_sink,
-)
+from scylla_cdc_source_connector_spark.streaming.sink import make_correlating_sink
 
 
 def generation_cfg(cfg: EngineConfig, generation: int) -> EngineConfig:
@@ -141,30 +134,6 @@ def read_changelog_stream(
     return reader.parquet(path)
 
 
-def streaming_envelopes(
-    changelog: DataFrame, cfg: EngineConfig, impl: str = "apply"
-) -> DataFrame:
-    """Streaming plan: watermarked stateful correlation + projection.
-    Dedup of exact duplicate log rows happens inside the correlation state
-    (last-writer-wins slots) — the generation-aware stateful dedup join of
-    the north_rule; images the config doesn't need are ignored by the
-    state machine just like TaskInfo.Basic/Before/After no-op setters.
-
-    impl="apply": applyInPandasWithState (correlation_state.py).
-    impl="tws":   transformWithStateInPandas (correlation_tws.py) — same
-    semantics on the Spark 4.x StatefulProcessor API (RocksDB-only state,
-    explicit per-key event-time eviction timers)."""
-    if impl == "tws":
-        from scylla_cdc_source_connector_spark.streaming.correlation_tws import (
-            correlate_stream_tws,
-        )
-
-        correlated = reassemble_correlated(correlate_stream_tws(changelog, cfg))
-    else:
-        correlated = reassemble_correlated(correlate_stream(changelog, cfg))
-    return build_envelopes(correlated, cfg)
-
-
 def run_stream(
     spark: SparkSession,
     cfg: EngineConfig,
@@ -173,12 +142,9 @@ def run_stream(
     generation: int | None = None,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    mode: str = "vectorized",
     source_format: str = "parquet",
-    state_store: str = "rocksdb",
     table: TableModel = DEFAULT_TABLE,
     adopt_schema: bool = False,
-    dedup_within_watermark: bool = False,
 ):
     """Start one streaming query writing to the exactly-once sink.
     Returns the StreamingQuery (await it / stop it at the call site).
@@ -193,24 +159,12 @@ def run_stream(
     resumes the file-source offsets with the new schema — the
     micro-batch analog of the per-row schema swap.
 
-    mode="vectorized" (default): correlation runs as the codegen'd hash
-    aggregation inside foreachBatch with an explicit pending-state table
-    for cross-micro-batch waits (make_correlating_sink) — zero Python on
-    the hot path, the 10^12-row configuration.
-    mode="stateful": applyInPandasWithState correlation operator
-    (streaming/correlation_state.py) — per-group Python; kept as the
-    literal mapping of the reference's per-RowKey TaskInfo state machine.
-    Its state store defaults to RocksDB (state_store="rocksdb"): at
-    10^12 keys the HDFS-backed in-memory provider holds every key of a
-    partition on-heap, while RocksDB spills to local SSD and checkpoints
-    changelogs — pass "memory" to get the default provider back.
-    mode="tws": the same state machine on Spark 4.x's
-    transformWithStateInPandas (streaming/correlation_tws.py) — RocksDB
-    state (required by the operator) + explicit per-key event-time
-    eviction timers instead of GroupStateTimeout.
+    Correlation runs in the foreachBatch sink (make_correlating_sink):
+    the codegen'd hash aggregation per micro-batch, an explicit
+    pending-state table for cross-micro-batch waits, and marker rows of
+    the envelopes emitted inside the confidence window, so a replayed
+    changelog row is emitted once — zero Python on the hot path.
     """
-    if mode not in ("vectorized", "stateful", "tws"):
-        raise ValueError(f"unknown correlation mode: {mode!r}")
     if cfg.dedup_index or cfg.audio_normalize_sr:
         from scylla_cdc_source_connector_spark.config import IncludeMode
 
@@ -229,38 +183,6 @@ def run_stream(
             spark.read.option("mergeSchema", "true").parquet(input_path).schema
         )
         table = adopt(table, observed)
-    if mode in ("stateful", "tws") and table is not DEFAULT_TABLE:
-        raise ValueError(
-            f"mode={mode!r} supports only the default table model; use "
-            "the vectorized mode for generalized/adopted schemas"
-        )
-    if mode in ("stateful", "tws"):
-        if mode == "tws":
-            from scylla_cdc_source_connector_spark.streaming.correlation_tws import (
-                tws_available,
-            )
-
-            if state_store != "rocksdb":
-                raise ValueError(
-                    "transformWithStateInPandas requires the RocksDB state "
-                    "store"
-                )
-            if not tws_available():
-                raise RuntimeError(
-                    "mode='tws' needs the `protobuf` package (PySpark's "
-                    "StatefulProcessor state-server protocol); it is not "
-                    "installed in this runtime — use mode='stateful' or "
-                    "'vectorized'"
-                )
-        provider = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-            if state_store == "rocksdb"
-            else "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-        )
-        # read once at query start and pinned into the checkpoint
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     changelog = read_changelog_stream(
         spark,
         input_path,
@@ -297,33 +219,8 @@ def run_stream(
         floor_us = int(_time.time() * 1_000_000) - cfg.initial_lookback_ms * 1000
         changelog = changelog.filter(F.col("`cdc$time_us`") >= floor_us)
 
-    # north_rule's literal stateful dedup join: exact replays of a
-    # changelog row (same key + stream timestamp + op + batch seq —
-    # e.g. an at-least-once upstream writer re-appending a window) are
-    # dropped by Spark's dropDuplicatesWithinWatermark BEFORE correlation,
-    # with state bounded by the confidence-window watermark.  The
-    # correlation aggregation is last-writer-wins per slot, so this is a
-    # correctness no-op — it exists to shed replayed bytes before they
-    # ride the correlation shuffle (at 10^12 rows a 1% replay rate is
-    # 10^10 rows of shuffle traffic saved).
-    if dedup_within_watermark:
-        changelog = changelog.withWatermark(
-            "`cdc$time`", f"{cfg.confidence_window_ms} milliseconds"
-        ).dropDuplicatesWithinWatermark(
-            [
-                *table.pk_columns,
-                "cdc$time_us",
-                "cdc$operation",
-                "cdc$batch_seq_no",
-            ]
-        )
-    if mode == "vectorized":
-        out, sink_fn = changelog, make_correlating_sink(cfg, table=table)
-    else:
-        impl = "tws" if mode == "tws" else "apply"
-        out, sink_fn = streaming_envelopes(changelog, cfg, impl=impl), make_sink(cfg)
     writer = (
-        out.writeStream.foreachBatch(sink_fn)
+        changelog.writeStream.foreachBatch(make_correlating_sink(cfg, table=table))
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
         # cfg.table disambiguates concurrent per-table queries of one
@@ -397,7 +294,7 @@ def run_iceberg_meta_stream(
     (version-hint -> vN.metadata.json -> manifest list -> manifests) and
     this loop turns each unconsumed snapshot — in sequence-number order —
     into ONE ordered micro-batch through the SAME exactly-once foreachBatch
-    sink the file-stream path uses (vectorized mode; snapshot == the
+    sink the file-stream path uses (snapshot == the
     reference's CDC query window, ScyllaStreamingChangeEventSource.java:
     53-103, with the snapshot sequence number playing the window offset).
 

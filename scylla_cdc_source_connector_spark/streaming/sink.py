@@ -66,7 +66,7 @@ def batch_output_path(cfg: EngineConfig, batch_id: int) -> str:
 
 
 def pending_path(cfg: EngineConfig, batch_id: int) -> str:
-    """Carry-over state of the vectorized correlator: raw changelog rows of
+    """Carry-over state of the correlating sink: raw changelog rows of
     groups still incomplete AFTER processing batch_id (versioned per batch
     so a replayed batch rebuilds identical state — exactly-once)."""
     return os.path.join(cfg.output_dir, "_pending", f"batch_id={batch_id}")
@@ -291,66 +291,46 @@ def _obs_get(obs: Observation, defaults: dict) -> dict:
         return dict(defaults)
 
 
-def make_sink(cfg: EngineConfig):
-    """foreachBatch body.  Usage:
-    writeStream.foreachBatch(make_sink(cfg)).option("checkpointLocation",...)
-    """
-    os.makedirs(cfg.lineage_dir, exist_ok=True)
-    os.makedirs(cfg.output_dir, exist_ok=True)
-    heartbeat = _make_heartbeat_emitter(cfg)
+def emitted_markers(
+    spark: SparkSession, paths: list[str], table: TableModel = DEFAULT_TABLE
+) -> DataFrame:
+    """OP_EMITTED marker rows for the groups the batch dirs `paths`
+    emitted: the slim key columns (cdc$stream_id, generation, pk...,
+    cdc$time, cdc$time_us) read with an explicit schema — no inference
+    job, and the payload is never scanned."""
+    from pyspark.sql.types import StructType
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        t0 = time.time()
-        if os.path.exists(lineage_path(cfg, batch_id)):
-            # replay of an already-committed batch (crash after commit,
-            # before checkpoint advance): idempotent no-op
-            return
+    from scylla_cdc_source_connector_spark.schemas import OP_EMITTED
 
-        # per-shard ordered emit + offsets (SourceInfo.offset() analog)
-        n, shards, n_quar, n_dups = _write_batch(batch_df, batch_id, cfg)
-        heartbeat(batch_df.sparkSession, batch_id, n, shards)
-
-        # atomic lineage commit: tmp + rename (heartbeat on empty batches)
-        _commit_lineage(
-            cfg,
-            batch_id,
-            {
-                "batch_id": batch_id,
-                "n_records": n,
-                "n_quarantined": n_quar,
-                "n_dup_pairs": n_dups,
-                "shards": shards,
-                "committed_at_ms": int(time.time() * 1000),
-                "sink_seconds": round(time.time() - t0, 3),
-            },
-        )
-
-    return sink
+    cl = table.changelog_schema()
+    keys = [
+        "cdc$stream_id", "generation", *table.pk_columns, "cdc$time", "cdc$time_us"
+    ]
+    return (
+        spark.read.schema(StructType([cl[c] for c in keys]))
+        .parquet(*paths)
+        .withColumn("cdc$operation", F.lit(OP_EMITTED))
+    )
 
 
-def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
-    """foreachBatch body over the RAW changelog stream — the vectorized
-    (default) correlation mode.
+def sink_envelopes(
+    rows: DataFrame,
+    markers: DataFrame | None,
+    cfg: EngineConfig,
+    table: TableModel = DEFAULT_TABLE,
+    obs: Observation | None = None,
+) -> DataFrame:
+    """The correlating sink's per-batch envelope plan.
 
-    The per-group Python of applyInPandasWithState is the reference's
-    per-row consume() loop reborn (ScyllaChangesConsumer.java:187-249) —
-    at 10^12 rows that is the bottleneck.  This sink instead runs the
-    whole-stage-codegen'd `correlate_batch` hash aggregation (ONE shuffle,
-    map-side partial agg, zero Python) inside each micro-batch and carries
-    the cross-batch waits — groups whose write batch was split by a
-    micro-batch boundary — in an explicit pending-state table:
+    `rows` (new arrivals ∪ carried pending rows) and the OP_EMITTED
+    `markers` are correlated together; a group holding a marker was
+    already emitted by a committed batch, so it is a replay and is
+    dropped.  The envelopes are those of the complete, unmarked groups.
+    `obs` observes, while the plan executes, the max event time
+    (`max_ev`) and the count of incomplete unmarked groups (`n_inc`).
 
-      batch N input  = micro-batch rows ∪ pending(batch N-1)
-      complete groups → envelopes → idempotent batch_id=N output
-      incomplete, not expired → pending(batch N), committed in the same
-      lineage record (tmp+rename) → replay-safe
-
-    Stale eviction (C4, ScyllaChangesConsumer.java:147-185): incomplete
-    groups older than hwm − incomplete_task_timeout are dropped, where
-    hwm = max event time seen so far (the engine-maintained watermark,
-    persisted in lineage as `max_event_us` — the streaming analog of the
-    confidence window S2).
-    """
+    The markers ride the correlation's ONE exchange (the repartition on
+    cdc$stream_id), so the plan has no join and no second exchange."""
     from scylla_cdc_source_connector_spark.operators.correlation import (
         correlate_batch,
         is_complete_expr,
@@ -361,6 +341,92 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
         build_envelopes,
     )
 
+    if markers is not None:
+        rows = rows.unionByName(markers, allowMissingColumns=True)
+    # require_delta=False: groups whose delta hasn't arrived yet
+    # (micro-batch or admission boundary between a group's images and its
+    # delta — Scylla batch order puts preimages FIRST) must reach the
+    # pending table instead of being silently dropped
+    corr = mask_unused_images(
+        correlate_batch(
+            rows,
+            delta_flags=needs_delta_flags(cfg),
+            require_delta=False,
+            table=table,
+            cluster_by_stream=True,
+            mark_emitted=True,
+        ),
+        cfg,
+    )
+    fresh = ~F.col("emitted")
+    complete = is_complete_expr(cfg)
+    if obs is not None:
+        corr = corr.observe(
+            obs,
+            F.max("`cdc$time_us`").alias("max_ev"),
+            F.count(F.when(fresh & ~complete, F.lit(1))).alias("n_inc"),
+        )
+    return build_envelopes(corr.filter(fresh & complete), cfg, table=table)
+
+
+def _window_markers(
+    spark: SparkSession,
+    cfg: EngineConfig,
+    table: TableModel,
+    bids: list[int],
+    hwm: int,
+) -> DataFrame | None:
+    """Marker rows for the groups committed batches emitted inside the
+    confidence window [hwm − confidence_window, hwm] — the only groups a
+    row that passes the confidence filter can belong to.  Lineage is
+    walked back from the newest batch and stops at the first whose
+    `max_event_us` (monotone) is below the window."""
+    if not hwm:
+        return None
+    floor = hwm - cfg.confidence_window_ms * 1000
+    paths = []
+    for bid in reversed(bids):
+        if read_lineage_one(cfg, bid).get("max_event_us", floor - 1) < floor:
+            break
+        if os.path.isdir(batch_output_path(cfg, bid)):
+            paths.append(batch_output_path(cfg, bid))
+    if not paths:
+        return None
+    return emitted_markers(spark, paths, table).filter(
+        F.col("`cdc$time_us`") >= floor
+    )
+
+
+def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
+    """foreachBatch body over the RAW changelog stream — the engine's one
+    streaming correlator.
+
+    The sink runs the whole-stage-codegen'd `correlate_batch` hash
+    aggregation (ONE shuffle, map-side partial agg, zero Python) inside
+    each micro-batch and carries the cross-batch waits — groups whose
+    write batch was split by a micro-batch boundary — in an explicit
+    pending-state table:
+
+      batch N input  = micro-batch rows ∪ pending(batch N-1)
+                       ∪ markers of groups emitted inside the window
+      complete, unmarked groups → envelopes → idempotent batch_id=N output
+      incomplete, unmarked, not expired → pending(batch N), committed in
+      the same lineage record (tmp+rename) → replay-safe
+
+    Replays: a CDC log row is keyed by (cdc$stream_id, cdc$time,
+    cdc$batch_seq_no), so a re-delivered row is the same row and must be
+    emitted once.  Within a batch the aggregation collapses it; across
+    batches the envelopes already emitted inside the confidence window
+    are the state (sink_envelopes): a group holding a marker is not
+    emitted, not counted as incomplete and not carried in pending.
+    Rows older than the window are dropped by the confidence filter.
+
+    Stale eviction (C4, ScyllaChangesConsumer.java:147-185): incomplete
+    groups older than hwm − incomplete_task_timeout are dropped, where
+    hwm = max event time seen so far (the engine-maintained watermark,
+    persisted in lineage as `max_event_us` — the streaming analog of the
+    confidence window S2).
+    """
     os.makedirs(cfg.lineage_dir, exist_ok=True)
     os.makedirs(cfg.output_dir, exist_ok=True)
     heartbeat = _make_heartbeat_emitter(cfg)
@@ -468,46 +534,20 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
             deferred = ranked.filter(F.col("__rn") > budget).drop("__rn")
             all_rows = ranked.filter(F.col("__rn") <= budget).drop("__rn")
 
-        # require_delta=False: groups whose delta hasn't arrived yet
-        # (micro-batch or admission boundary between a group's images and
-        # its delta — Scylla batch order puts preimages FIRST) must reach
-        # the pending table instead of being silently dropped
-        # cluster_by_stream: the correlation's one exchange is a
-        # repartition on cdc$stream_id (HashPartitioning(stream) satisfies
-        # the finer grouping), so the correlated rows — and the envelopes
-        # built from them — arrive already clustered per shard and the
-        # ordered write below skips its own repartition.  The payload
-        # crosses exactly ONE exchange end-to-end in the sink.
-        corr = mask_unused_images(
-            correlate_batch(
-                all_rows,
-                delta_flags=needs_delta_flags(cfg),
-                require_delta=False,
-                table=table,
-                cluster_by_stream=True,
-            ),
-            cfg,
-        )
         try:
             # Watermark + incomplete-group bookkeeping ride the write pass
             # itself as an Observation on the correlated rows (evaluated
             # while the plan executes — no second execution, no second
             # source scan, so numInputRows stays an honest per-row count).
-            # The Observation carries SCALARS ONLY (max event time + an
-            # incomplete-group count): per-group keys never travel to the
-            # driver, so a poison batch where every group is boundary-split
-            # costs executor work, not driver memory.  When the count says
-            # incomplete groups exist, their keys are computed by the
-            # distributed metadata-only status plan below.
-            complete = is_complete_expr(cfg)
+            # The Observation carries SCALARS ONLY: per-group keys never
+            # travel to the driver, so a poison batch where every group is
+            # boundary-split costs executor work, not driver memory.  When
+            # the count says incomplete groups exist, their keys are
+            # computed by the distributed metadata-only status plan below.
             group_keys = [*table.pk_columns, "cdc$time"]
+            markers = _window_markers(spark, cfg, table, bids, prev_hwm)
             obs = Observation(f"sink-status-{batch_id}")
-            observed = corr.observe(
-                obs,
-                F.max("`cdc$time_us`").alias("max_ev"),
-                F.count(F.when(~complete, F.lit(1))).alias("n_inc"),
-            )
-            env = build_envelopes(observed.filter(complete), cfg, table=table)
+            env = sink_envelopes(all_rows, markers, cfg, table, obs=obs)
             # the ONE payload pass: scan → correlate → envelope → ordered
             # write (stats come off a pruned read-back inside _write_batch)
             phases: dict[str, float] = {}
@@ -533,7 +573,9 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
             pend = None
             n_extra_scans = 0
             if n_inc:
-                inc_keys = _incomplete_group_keys(all_rows, cfg, table, hwm)
+                inc_keys = _incomplete_group_keys(
+                    all_rows, markers, cfg, table, hwm
+                )
                 # no broadcast hint: inc_keys is tiny for ordinary
                 # boundary splits and AQE picks broadcast then, but a
                 # poison all-incomplete batch must not be forced through
@@ -610,11 +652,16 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
 
 
 def _incomplete_group_keys(
-    all_rows: DataFrame, cfg: EngineConfig, table: TableModel, hwm: int
+    all_rows: DataFrame,
+    markers: DataFrame | None,
+    cfg: EngineConfig,
+    table: TableModel,
+    hwm: int,
 ) -> DataFrame:
     """Distributed metadata-only status plan: the group keys of
-    correlation groups that are incomplete under cfg's include modes and
-    not yet expired at the engine watermark `hwm`.
+    correlation groups that are incomplete under cfg's include modes, not
+    yet expired at the engine watermark `hwm`, and hold no OP_EMITTED
+    marker (a replay of an emitted group is dropped, not carried).
 
     Re-derives group completeness from the RAW batch input with a slim
     aggregation over (pk, cdc$time, cdc$operation, cdc$batch_seq_no,
@@ -630,10 +677,13 @@ def _incomplete_group_keys(
     )
     from scylla_cdc_source_connector_spark.schemas import (
         DELTA_OPS,
+        OP_EMITTED,
         OP_POST_IMAGE,
         OP_PRE_IMAGE,
     )
 
+    if markers is not None:
+        all_rows = all_rows.unionByName(markers, allowMissingColumns=True)
     op = F.col("`cdc$operation`")
     seq = F.col("`cdc$batch_seq_no`")
     is_delta = op.isin(list(DELTA_OPS))
@@ -647,6 +697,7 @@ def _incomplete_group_keys(
             "__delta_op"
         ),
         F.max("`cdc$time_us`").alias("__ev_us"),
+        F.bool_or(op.eqNullSafe(OP_EMITTED)).alias("__emitted"),
     )
     done = is_complete_expr(
         cfg,
@@ -655,9 +706,9 @@ def _incomplete_group_keys(
         has_post=F.col("__n_post") > 0,
     )
     ttl_floor = hwm - cfg.incomplete_task_timeout_ms * 1000
-    return st.filter(~done & (F.col("__ev_us") >= F.lit(ttl_floor))).select(
-        *[f"`{c}`" for c in group_keys]
-    )
+    return st.filter(
+        ~done & ~F.col("__emitted") & (F.col("__ev_us") >= F.lit(ttl_floor))
+    ).select(*[f"`{c}`" for c in group_keys])
 
 
 def _write_batch(
@@ -668,15 +719,15 @@ def _write_batch(
     stream_clustered: bool = False,
 ) -> tuple[int, list[dict]]:
     """Idempotent per-batch output write + per-shard offset stats
-    (shared by make_sink and make_correlating_sink).
+    (shared by make_correlating_sink and the snapshot backfills).
 
     The envelope plan executes ONCE, on the ordered write itself; the
     per-shard offset stats then come from a column-pruned scan of the
     parquet just written (4 metadata columns out of a payload-bearing
     row — the read-back never touches the audio bytes), which doubles as
     the emptiness probe.  (Running isEmpty / write / stats as three
-    separate actions re-executed the whole upstream plan — in vectorized
-    mode that re-ran the correlation aggregation — three times per
+    separate actions re-executed the whole upstream plan — in the
+    correlating sink that re-ran the correlation aggregation — three times per
     micro-batch; caching the envelope instead was measured WORSE: the
     before+after full images make the cache ~2× the payload, and
     materializing it cost more than the second pass it saved.)
@@ -931,7 +982,10 @@ def expire_emitted(
     gone — so expiry is invisible to every reader except that old rows
     stop being served, exactly like segment deletion on a Kafka topic.
     The newest batch is always kept (its pending-state dir may still be
-    the next batch's carry-over input).
+    the next batch's carry-over input).  The correlating sink recognises
+    a replayed row by the envelopes committed batches emitted inside the
+    confidence window, so replays of an expired batch's groups are no
+    longer recognised: keep the window's batches if replays can arrive.
 
     Like Kafka retention vs consumer lag, expiry by default does NOT
     wait for downstream consumers (apply/corpus/records `_applied`

@@ -65,8 +65,9 @@ def main() -> None:
                          "than N files into exactly-once sub-batches "
                          "(backpressure for bulk-import snapshots)")
     ap.add_argument("--identifier-columns", default=None,
-                    help="feed mode: comma-separated key columns for "
-                         "UPDATE_BEFORE/UPDATE_AFTER pairing")
+                    help="feed and records modes: comma-separated key "
+                         "columns for UPDATE_BEFORE/UPDATE_AFTER pairing "
+                         "(required by --mode records)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

@@ -86,6 +86,22 @@ def _before_for_update(pre, post, modified, include_pk):
     return d
 
 
+def is_complete(cfg: EngineConfig, op, has_pre: bool, has_post: bool) -> bool:
+    """Completion predicate (TaskInfo.java variants): is a group whose
+    delta has `op` and whose needed images are present complete?"""
+    if op == 2:  # insert: no preimage exists
+        return not cfg.needs_postimage or has_post
+    if op == 1:  # update
+        return (not cfg.needs_preimage or has_pre) and (
+            not cfg.needs_postimage or has_post
+        )
+    if op == 4:  # delete: no postimage exists
+        return not cfg.needs_preimage or has_pre
+    if op == 5:  # partition delete: preimage only when version-gated
+        return not cfg.wait_preimage_for_partition_delete or has_pre
+    return False
+
+
 def expected_envelopes(changelog: pd.DataFrame, cfg: EngineConfig) -> list[dict]:
     """Compute the expected emitted records (dynamic ts_ms excluded)."""
     pk_after = PkPlacement.PAYLOAD_AFTER in cfg.pk_placements
@@ -121,16 +137,7 @@ def expected_envelopes(changelog: pd.DataFrame, cfg: EngineConfig) -> list[dict]
             post = None
 
         # completion predicate (TaskInfo.java) — incomplete groups dropped
-        if op == 2 and cfg.needs_postimage and post is None:
-            continue
-        if op == 1 and (
-            (cfg.needs_preimage and pre is None)
-            or (cfg.needs_postimage and post is None)
-        ):
-            continue
-        if op == 4 and cfg.needs_preimage and pre is None:
-            continue
-        if op == 5 and cfg.wait_preimage_for_partition_delete and pre is None:
+        if not is_complete(cfg, op, pre is not None, post is not None):
             continue
 
         modified = _modified_cols(delta)

@@ -158,11 +158,10 @@ def test_correlation_counts_on_fixture(spark, changelog_df, changelog_pdf):
 
 
 def test_completion_predicate_parity_exhaustive(spark):
-    """The streaming state machine's python completion predicate
-    (correlation_state._is_complete) and the batch path's columnar
-    expression (is_complete_expr) must agree on EVERY (op, has_pre,
-    has_post, include-mode) combination — TaskInfoTest's matrix, checked
-    across both implementations."""
+    """The row-by-row oracle's completion predicate (oracle_ref.
+    is_complete) and the engine's columnar expression (is_complete_expr)
+    must agree on EVERY (op, has_pre, has_post, include-mode) combination
+    — TaskInfoTest's matrix, checked against an independent oracle."""
     import itertools
 
     from pyspark.sql import functions as F
@@ -170,9 +169,7 @@ def test_completion_predicate_parity_exhaustive(spark):
     from scylla_cdc_source_connector_spark.operators.correlation import (
         is_complete_expr,
     )
-    from scylla_cdc_source_connector_spark.streaming.correlation_state import (
-        _is_complete,
-    )
+    from tests.oracle_ref import is_complete
 
     ops = [1, 2, 4, 5, 0, 9, 99]  # update, insert, delete, partition-del, images, junk
     cfgs = [
@@ -208,7 +205,7 @@ def test_completion_predicate_parity_exhaustive(spark):
             ).collect()
         }
         for i, (op, has_pre, has_post) in enumerate(cases):
-            want = _is_complete(cfg, op, has_pre, has_post)
+            want = is_complete(cfg, op, has_pre, has_post)
             assert bool(got[i]) == bool(want), (cfg, op, has_pre, has_post)
 
 

@@ -269,7 +269,7 @@ def test_iceberg_stream_crash_restart_and_growth(spark, tmp_root, ice_pdf):
     # table keeps growing: later append -> only the new snapshot runs.
     # Fresh rows (new clip ids, event times bumped past the high-water
     # mark): an append, not a replay — replay semantics are pinned by
-    # the dedup_within_watermark tests in test_streaming.py.
+    # test_iceberg_stream_reappended_rows_emitted_once below.
     import pandas as pd
 
     from scylla_cdc_source_connector_spark.fixtures import write_changelog_chunk
@@ -290,6 +290,31 @@ def test_iceberg_stream_crash_restart_and_growth(spark, tmp_root, ice_pdf):
         spark.read.parquet(f"{loc}/data"), cfg, processing_ts_ms=F.lit(0)
     )
     assert res3["emitted_total"] == ref.count()
+
+
+def test_iceberg_stream_reappended_rows_emitted_once(spark, tmp_root, ice_pdf):
+    """A later snapshot that re-appends the rows of an earlier one (an
+    at-least-once upstream writer retrying a commit) is a replay: its
+    groups were already emitted, so the stream emits nothing for them and
+    still equals the batch plan, with no duplicate (key, time)."""
+    loc, sids = _ice_table(tmp_root, ice_pdf, "ice_tbl_replay", n_snaps=2)
+    copy = f"{loc}/data/chunk-000-replay.parquet"
+    shutil.copyfile(f"{loc}/data/chunk-000.parquet", copy)
+    s3 = im.append_files(loc, [copy], timestamp_ms=3000)
+    cfg = _cfg(tmp_root, "ice_replay")
+
+    res = run_iceberg_meta_stream(spark, cfg, loc)
+    assert res["consumed"] == [*sids, s3]
+    last = sink_mod.read_lineage(cfg)[-1]
+    assert last["n_records"] == 0 and not last["has_pending"]
+
+    got = sink_mod.read_emitted(spark, cfg)
+    ref = cdc_envelopes(
+        spark.read.parquet(f"{loc}/data"), cfg, processing_ts_ms=F.lit(0)
+    )
+    cols = ["clip_id", "`cdc$time_us`", F.col("value.op").alias("op")]
+    assert got.select(*cols).exceptAll(ref.select(*cols)).count() == 0
+    assert ref.select(*cols).exceptAll(got.select(*cols)).count() == 0
 
 
 def test_iceberg_empty_snapshot_is_heartbeat(spark, tmp_root, ice_pdf):
@@ -4133,3 +4158,54 @@ def test_continuation_soak_mirror_feed_records_stats(spark, tmp_root, ice_pdf):
     nd = pf.ndv_estimates(mir)
     assert nd["stale"] is False
     assert nd["ndv"]["clip_id"] == im.read_table(spark, mir).count()
+
+
+def test_changelog_feed_expired_hwm_raises(spark, tmp_root):
+    """A feed whose hwm snapshot was expired from table history refuses
+    with a ValueError naming the snapshot (not a bare StopIteration)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    loc = _kv_table(tmp_root, "ice_feed_expired", n_files=2, rows_per=3)
+    feed = f"{tmp_root}/ice_feed_expired_out"
+    shutil.rmtree(feed, ignore_errors=True)
+    assert im.maintain_changelog_feed(spark, loc, feed)["hwm"] == 2
+    for i in (2, 3):
+        pq.write_table(
+            pa.table({"k": [f"n{i}"], "v": [i]}), f"{loc}/data/n{i}.parquet"
+        )
+        im.append_files(loc, [f"{loc}/data/n{i}.parquet"], timestamp_ms=10 + i)
+    im.expire_snapshots(loc, keep_last=1)
+    with pytest.raises(ValueError, match="hwm snapshot 2 .*expired"):
+        im.maintain_changelog_feed(spark, loc, feed)
+
+
+def test_read_changelog_equality_deletes_only_is_empty(spark, tmp_root):
+    """A range whose only content is equality deletes over a history with
+    no data rows yields an empty changelog with the output schema."""
+    import pyspark.sql.types as T
+
+    loc = f"{tmp_root}/ice_eq_only"
+    shutil.rmtree(loc, ignore_errors=True)
+    im.create_table(
+        loc,
+        T.StructType(
+            [
+                T.StructField("k", T.StringType(), False),
+                T.StructField("v", T.LongType(), False),
+            ]
+        ),
+    )
+    keys = spark.createDataFrame([("k0",)], "k string")
+    im.write_equality_deletes(spark, loc, keys, ["k"], timestamp_ms=1)
+    cl = im.read_changelog(spark, loc)
+    assert cl.count() == 0
+    assert cl.columns == [
+        "k",
+        "v",
+        "_change_type",
+        "_change_ordinal",
+        "_commit_snapshot_id",
+        "_sequence_number",
+        "_commit_timestamp_ms",
+    ]

@@ -68,12 +68,11 @@ def tmp_root_mod(tmp_path_factory):
     return str(tmp_path_factory.mktemp("quarantine"))
 
 
-@pytest.mark.parametrize("mode", ["vectorized", "stateful"])
+@pytest.mark.parametrize("mode", ["vectorized"])
 def test_quarantine_diverts_poison_rows(spark, tmp_root_mod, poisoned, mode):
     d, bad_keys, _ = poisoned
     cfg = _cfg(tmp_root_mod, f"q_{mode}")
-    q = run_stream(spark, cfg, d, available_now=True, max_files_per_trigger=1,
-                   mode=mode)
+    q = run_stream(spark, cfg, d, available_now=True, max_files_per_trigger=1)
     q.awaitTermination(300)
 
     quar = sink_mod.read_quarantined(spark, cfg)

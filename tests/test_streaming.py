@@ -9,7 +9,6 @@ window (ScyllaConnectorConfig.java:171-184)."""
 from __future__ import annotations
 
 import datetime as dt
-import glob
 import os
 
 import numpy as np
@@ -29,20 +28,8 @@ from scylla_cdc_source_connector_spark.streaming.engine import (
     run_stream,
 )
 from scylla_cdc_source_connector_spark.schemas import NON_PK_COLUMNS
-from scylla_cdc_source_connector_spark.streaming.correlation_tws import (
-    tws_available,
-)
 
 BASE_US = 1_704_067_200_000_000
-
-# transformWithStateInPandas needs protobuf (state-server protocol); absent
-# in this container — the tws param skips with the reason visible.
-TWS = pytest.param(
-    "tws",
-    marks=pytest.mark.skipif(
-        not tws_available(), reason="protobuf not installed (tws state API)"
-    ),
-)
 
 
 def _write_chunks(pdf: pd.DataFrame, d: str, n_chunks: int):
@@ -95,16 +82,16 @@ def stream_pdf(stream_spec):
     return make_changelog(stream_spec)
 
 
-@pytest.mark.parametrize("mode", ["vectorized", "stateful", TWS])
+@pytest.mark.parametrize("mode", ["vectorized"])
 def test_stream_matches_batch(spark, tmp_root, stream_pdf, mode):
     """Row-for-row parity: streaming (chunked arrivals, cross-batch
-    correlation) equals the single-shot batch plan — in BOTH correlation
-    modes (codegen'd foreachBatch aggregation / applyInPandasWithState)."""
+    correlation in the correlating sink) equals the single-shot batch
+    plan."""
     d = f"{tmp_root}/stream_in"
     _write_chunks(stream_pdf, d, n_chunks=5)
     cfg = _cfg(tmp_root, f"parity_{mode}")
 
-    q = run_stream(spark, cfg, d, available_now=True, max_files_per_trigger=1, mode=mode)
+    q = run_stream(spark, cfg, d, available_now=True, max_files_per_trigger=1)
     q.awaitTermination(300)
     assert not q.isActive
 
@@ -294,10 +281,13 @@ def test_metrics_surface(spark, tmp_root, stream_pdf):
     )["last_change_clip_id"]
 
 
-@pytest.mark.parametrize("mode", ["vectorized", "stateful", TWS])
+@pytest.mark.parametrize("mode", ["vectorized"])
 def test_late_data_beyond_watermark_dropped(spark, tmp_root, mode):
     """Confidence-window semantics: a delta arriving with event time older
-    than watermark (30 s) is dropped; one within the window is emitted."""
+    than watermark (30 s) is dropped; one within the window is emitted.
+    A replay (the same log row again, in a later micro-batch) of a group
+    already emitted is emitted once: an UPDATE delta and a
+    PARTITION_DELETE, each complete alone under include modes none."""
     cfg = _cfg(tmp_root, f"late_{mode}")
     d = f"{tmp_root}/late_in"
     os.makedirs(d, exist_ok=True)
@@ -327,18 +317,33 @@ def test_late_data_beyond_watermark_dropped(spark, tmp_root, mode):
     cfg = dataclasses.replace(cfg, include_before=IncludeMode.NONE, include_after=IncludeMode.NONE)
 
     # batch 1 advances watermark to 100-30 = 70 s
-    _write_one(pd.DataFrame([row("w", 0), row("x", 100)]), f"{d}/f0.parquet")
-    # batch 2: t=50 (< wm 70: DROP), t=95 (>= wm: keep)
-    _write_one(pd.DataFrame([row("too_late", 50), row("ok_late", 95)]), f"{d}/f1.parquet")
+    _write_one(
+        pd.DataFrame([row("w", 0), row("x", 100, op=1), row("p", 90, op=5)]),
+        f"{d}/f0.parquet",
+    )
+    # batch 2: t=50 (< wm 70: DROP), t=95 (>= wm: keep), and replays of
+    # x's UPDATE and p's PARTITION_DELETE (inside the window)
+    _write_one(
+        pd.DataFrame(
+            [
+                row("too_late", 50),
+                row("ok_late", 95),
+                row("x", 100, op=1),
+                row("p", 90, op=5),
+            ]
+        ),
+        f"{d}/f1.parquet",
+    )
 
-    q = run_stream(spark, cfg, d, available_now=True, max_files_per_trigger=1, mode=mode)
+    q = run_stream(spark, cfg, d, available_now=True, max_files_per_trigger=1)
     q.awaitTermination(300)
 
     got = sink_mod.read_emitted(spark, cfg)
-    clips = {r["clip_id"] for r in got.select("clip_id").collect()}
+    clips = [r["clip_id"] for r in got.select("clip_id").collect()]
     assert "ok_late" in clips
     assert "too_late" not in clips
-    assert {"w", "x"} <= clips
+    assert {"w", "x", "p"} <= set(clips)
+    assert clips.count("x") == 1 and clips.count("p") == 1
 
 
 def test_heartbeat_records_on_empty_window(spark, tmp_root, stream_pdf):
@@ -502,41 +507,12 @@ def test_iceberg_source_seam(spark):
     }
 
 
-def test_stateful_mode_rocksdb_state_store(spark, tmp_root, stream_pdf):
-    """SURVEY §4: the stateful correlation mode runs on the RocksDB state
-    store provider (rocksdbjni is baked into pyspark).  Verifies the
-    provider took effect by checking the query's state checkpoint layout
-    AND output parity with the batch plan."""
-    d = f"{tmp_root}/rocks_in"
-    _write_chunks(stream_pdf.iloc[:300], d, n_chunks=2)
-    cfg = _cfg(tmp_root, "rocks")
-    q = run_stream(
-        spark, cfg, d, available_now=True, max_files_per_trigger=1,
-        mode="stateful", state_store="rocksdb",
-    )
-    q.awaitTermination(300)
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .endswith("RocksDBStateStoreProvider")
-    )
-    # RocksDB provider checkpoints zip/changelog files, not .delta files
-    state_files = glob.glob(
-        os.path.join(cfg.checkpoint_dir, "state", "**", "*"), recursive=True
-    )
-    assert state_files, "no state checkpoint written"
-    assert not any(f.endswith(".delta") for f in state_files), (
-        "HDFS-backed provider layout found; RocksDB provider not in effect"
-    )
-    got = sink_mod.read_emitted(spark, cfg)
-    assert got.count() > 0
-
-
 def test_dedup_within_watermark_drops_replays(spark, tmp_root, stream_pdf):
-    """north_rule's literal stateful dedup join: exact replays of
-    changelog rows (at-least-once upstream writer) are shed by
-    dropDuplicatesWithinWatermark BEFORE correlation; emitted envelopes
-    match the batch reference over the replay-free input, and the dedup
-    state operator is present in the streaming plan."""
+    """Exact replays of changelog rows (an at-least-once upstream writer)
+    are emitted once: within a micro-batch the correlation collapses
+    them, across micro-batches the sink's emitted-group markers drop
+    them.  Emitted envelopes match the batch reference over the
+    replay-free input."""
     d = f"{tmp_root}/dedup_wm_in"
     # replay ~20% of rows: once within the same chunk, once in the next
     pdf = stream_pdf.reset_index(drop=True)
@@ -558,21 +534,11 @@ def test_dedup_within_watermark_drops_replays(spark, tmp_root, stream_pdf):
         )
 
     # a watermark delay wider than the fixture's time span: no row is
-    # late, so the ONLY row-shedding in the plan is the dedup operator
+    # late, so the ONLY row-shedding is the replay drop
     cfg = _cfg(tmp_root, "dedup_wm", confidence_window_ms=10**9)
-    q = run_stream(
-        spark, cfg, d, available_now=True, max_files_per_trigger=1,
-        dedup_within_watermark=True,
-    )
+    q = run_stream(spark, cfg, d, available_now=True, max_files_per_trigger=1)
     q.awaitTermination(300)
     assert not q.isActive
-    progress = q.recentProgress
-    state_ops = [
-        op["operatorName"]
-        for p in progress
-        for op in p.get("stateOperators", [])
-    ]
-    assert "dedupeWithinWatermark" in state_ops
 
     got = sink_mod.read_emitted(spark, cfg)
     ref_d = f"{tmp_root}/dedup_wm_ref"
