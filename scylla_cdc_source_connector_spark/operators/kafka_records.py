@@ -336,10 +336,10 @@ def maintain_kafka_records(
 ) -> int:
     """Exactly-once Kafka-record emission: serialize every committed-but-
     unconverted envelope batch to wire records under
-    `output_dir/_records/batch_id=N`, mirroring the sink's own protocol —
-    only committed batches are consumed, record dirs are idempotent
-    overwrites keyed by the SINK batch id, and `_applied` markers
-    (apply.py protocol) commit progress afterwards, so a crash anywhere
+    `output_dir/_records/batch_id=N` on the one progress protocol
+    (streaming/increment.py) — only committed batches are consumed,
+    record dirs are idempotent overwrites keyed by the SINK batch id, and
+    `_applied` markers commit progress afterwards, so a crash anywhere
     re-converges.  Returns records written this pass.
 
     Catch-up is ONE Spark job regardless of backlog size (the reference
@@ -376,27 +376,13 @@ def maintain_kafka_records(
     `topic` column (single-topic streams)."""
     import os
 
+    from scylla_cdc_source_connector_spark.streaming import increment
     from scylla_cdc_source_connector_spark.streaming import sink as sink_mod
-    from scylla_cdc_source_connector_spark.streaming.apply import (
-        _mark_applied,
-        applied_batch_ids,
-        register_consumer,
-        split_consumable,
-    )
 
     target = os.path.join(cfg.output_dir, "_records")
-    register_consumer(cfg, target, name="records")
-    done = set(applied_batch_ids(target))
-    todo = sorted(set(sink_mod.committed_batch_ids(cfg)) - done)
-    if not todo:
-        return 0
-    with_data, dir_less, expired = split_consumable(
-        cfg, todo, consumer="maintain_kafka_records", strict=strict
+    with_data = increment.unapplied_batches(
+        cfg, target, name="records", strict=strict
     )
-    for bid in dir_less:
-        _mark_applied(
-            target, [bid], 0, extra={"expired": True} if bid in expired else None
-        )
     if not with_data:
         return 0
 
@@ -459,7 +445,7 @@ def maintain_kafka_records(
     n_total = 0
     for bid in with_data:
         n = int(counts.get(bid, 0))
-        _mark_applied(target, [bid], n)
+        increment.mark_applied(target, [bid], n)
         n_total += n
     return n_total
 
@@ -469,7 +455,7 @@ def read_kafka_records(spark, cfg):
     marked applied — exactly-once like the emit stream)."""
     import os
 
-    from scylla_cdc_source_connector_spark.streaming.apply import (
+    from scylla_cdc_source_connector_spark.streaming.increment import (
         applied_batch_ids,
     )
 
@@ -640,8 +626,20 @@ def changelog_kafka_envelopes(
         # the COMMIT SEQUENCE, not the per-call ordinal: stable across
         # maintenance passes and monotone even when commit timestamps tie,
         # so (cdc$time_us, cdc$batch_seq_no) really is a replayable
-        # per-key order
-        F.col("__seq").cast("int").alias("cdc$batch_seq_no"),
+        # per-key order.  The column is an int: a sequence past 2^31 - 1
+        # raises in-plan instead of wrapping silently
+        F.when(
+            F.col("__seq") > 2147483647,
+            F.raise_error(
+                F.lit(
+                    "commit sequence number exceeds the int range of "
+                    "cdc$batch_seq_no"
+                )
+            ),
+        )
+        .otherwise(F.col("__seq"))
+        .cast("int")
+        .alias("cdc$batch_seq_no"),
     )
 
 

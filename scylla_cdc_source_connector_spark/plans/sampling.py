@@ -37,6 +37,9 @@ from pyspark.sql import functions as F
 
 from scylla_cdc_source_connector_spark.functions.text import tokens_expr
 
+#: most strata temperature_budgets brings to the driver
+MAX_STRATA = 10_000
+
 
 def speech_rate_check(
     clips: DataFrame,
@@ -269,7 +272,8 @@ def temperature_budgets(
 
     Driver-side math over ONE small aggregate (one row per stratum —
     strata are (lang, source)-sized, ≪ corpus; same C≪N defensibility as
-    the IVF centroid collect).  Returns {stratum tuple: budget}."""
+    the IVF centroid collect; more than MAX_STRATA strata raise rather
+    than flood the driver).  Returns {stratum tuple: budget}."""
     if alpha < 0:
         raise ValueError("alpha must be >= 0")
     if total_budget <= 0:
@@ -282,8 +286,14 @@ def temperature_budgets(
     rows = (
         df.groupBy(*strata_cols)
         .agg(F.sum(w).alias("__w"))
+        .limit(MAX_STRATA + 1)
         .collect()
     )
+    if len(rows) > MAX_STRATA:
+        raise ValueError(
+            f"temperature_budgets: {strata_cols} has more than {MAX_STRATA} "
+            "strata; stratify on coarser columns"
+        )
     avail = {tuple(r[c] for c in strata_cols): float(r["__w"]) for r in rows}
     if not avail:
         return {}

@@ -3956,7 +3956,8 @@ def maintain_iceberg_table(
     equivalent is `sink.py:iceberg_emit` + `ICEBERG_SINK_OPTIONS`).
     Returns the number of snapshots committed this pass.
 
-    Protocol (same as the apply/records consumers, apply.py):
+    Protocol (the one progress protocol, streaming/increment.py, shared
+    with the apply/records consumers):
     - only COMMITTED sink batches (lineage present) are consumed, in
       batch-id order — snapshot sequence == sink batch order;
     - idempotent across crashes twice over: each snapshot's summary
@@ -3979,33 +3980,24 @@ def maintain_iceberg_table(
     the sink), so metadata-only merging is its ONLY lever against
     O(batches) planning cost.
     """
+    from scylla_cdc_source_connector_spark.streaming import increment
     from scylla_cdc_source_connector_spark.streaming import sink as sink_mod
-    from scylla_cdc_source_connector_spark.streaming.apply import (
-        _mark_applied,
-        applied_batch_ids,
-        register_consumer,
-        split_consumable,
-    )
 
-    register_consumer(cfg, location, name="iceberg_table")
-    done = set(applied_batch_ids(location))
-    todo = [b for b in sink_mod.committed_batch_ids(cfg) if b not in done]
-    if not todo:
+    with_data = increment.unapplied_batches(
+        cfg, location, name="iceberg_table", strict=strict
+    )
+    if not with_data:
         return 0
 
-    first_time = not os.path.exists(_version_hint(location))
-    with_data, _dir_less, expired = split_consumable(
-        cfg, todo, consumer="iceberg_table", strict=strict
-    )
-    if first_time and with_data:
+    if not os.path.exists(_version_hint(location)):
         schema = spark.read.parquet(
             sink_mod.batch_output_path(cfg, with_data[0])
         ).schema
         create_table(location, schema)
-    stamped = _stamped_batch_ids(location) if not first_time else set()
+    stamped = _stamped_batch_ids(location)
     committed = 0
-    for bid in sorted(todo):
-        if bid in with_data and bid not in stamped:
+    for bid in with_data:
+        if bid not in stamped:
             out_dir = sink_mod.batch_output_path(cfg, bid)
             files = sorted(
                 os.path.join(out_dir, f)
@@ -4020,12 +4012,7 @@ def maintain_iceberg_table(
                 summary_extra={"sccs-batch-id": str(bid)},
             )
             committed += 1
-        _mark_applied(
-            location,
-            [bid],
-            0,
-            extra={"expired": True} if bid in expired else None,
-        )
+        increment.mark_applied(location, [bid], 0)
     if rewrite_manifests_every and committed:
         md = current_metadata(location)
         cur = next(
@@ -4089,7 +4076,8 @@ def maintain_latest_state_mirror(
       deletes hit only strictly-older data files (spec rule).
 
     Exactly-once: batches merge in batch-id order, each snapshot summary
-    stamps `sccs-batch-ids`, `_applied` markers commit progress — a crash
+    stamps `sccs-batch-ids`, `_applied` markers commit progress (the one
+    progress protocol, streaming/increment.py) — a crash
     between the snapshot commit and the markers cannot double-merge on
     rerun, and replayed older batches are never re-applied, so deleted
     keys stay deleted (no tombstone rows needed, unlike apply.py whose
@@ -4118,13 +4106,8 @@ def maintain_latest_state_mirror(
 
     from scylla_cdc_source_connector_spark.config import IncludeMode
     from scylla_cdc_source_connector_spark.schemas import DEFAULT_TABLE
+    from scylla_cdc_source_connector_spark.streaming import increment
     from scylla_cdc_source_connector_spark.streaming import sink as sink_mod
-    from scylla_cdc_source_connector_spark.streaming.apply import (
-        _mark_applied,
-        applied_batch_ids,
-        register_consumer,
-        split_consumable,
-    )
 
     if table is None:
         table = DEFAULT_TABLE
@@ -4143,15 +4126,12 @@ def maintain_latest_state_mirror(
                 location, older_than_ms=remove_orphans_older_than_ms
             )
 
-    register_consumer(cfg, location, name="iceberg_latest")
-    done = set(applied_batch_ids(location))
-    todo = [b for b in sink_mod.committed_batch_ids(cfg) if b not in done]
-    if not todo:
+    with_data = increment.unapplied_batches(
+        cfg, location, name="iceberg_latest", strict=strict
+    )
+    if not with_data:
         _reclaim_orphans()
         return 0
-    with_data, _dir_less, expired = split_consumable(
-        cfg, todo, consumer="iceberg_latest", strict=strict
-    )
     merge_bids = sorted(set(with_data) - _stamped_batch_ids(location))
     committed = 0
     if merge_bids:
@@ -4265,13 +4245,7 @@ def maintain_latest_state_mirror(
                 committed += 1
         finally:
             upserts.unpersist()
-    for bid in sorted(todo):
-        _mark_applied(
-            location,
-            [bid],
-            0,
-            extra={"expired": True} if bid in expired else None,
-        )
+    increment.mark_applied(location, with_data, 0)
     if (
         rewrite_deletes_at is not None
         and delete_mode == "position"
@@ -4314,44 +4288,37 @@ def materialize_increment(
     identity_extra: dict,
     build_df,
 ):
-    """The ONE copy of the incremental exactly-once materialization
-    protocol both the changelog feed and the wire-record pipeline run on:
+    """The incremental exactly-once materialization both the changelog
+    feed and the wire-record pipeline run on, over the one progress
+    protocol (streaming/increment.py):
 
-    - stream identity = {table: abspath} ∪ identity_extra, compared
-      through a JSON round-trip on both sides (tuples can never mismatch
-      a stored list) — a directory serves exactly one stream;
+    - stream identity = {table: abspath} ∪ identity_extra, checked in
+      canonical JSON form (increment.check_identity) — a directory
+      serves exactly one stream;
     - `build_df(last_hwm, head)` returns the pass's rows WITH a `batch`
       column (the committing snapshot id); they land under
       `out_dir/batch=<id>/` by idempotent dynamic-partition overwrite
       (reruns of a crashed pass rewrite the same dirs byte-for-byte);
-    - the high-water mark commits LAST via atomic rename of
-      `out_dir/<state_name>`, so a crash anywhere replays at most one
+    - the high-water mark commits LAST via increment.write_json_atomic
+      of `out_dir/<state_name>`, so a crash anywhere replays at most one
       pass, never duplicates or skips a snapshot;
     - replace snapshots advance the hwm without rows (maintenance never
       disturbs consumers); an EXPIRED hwm refuses loudly downstream in
       read_changelog (the retention-gap rule every consumer follows).
 
     Returns {"consumed": [snapshot ids], "rows": n, "hwm": head}."""
-    import json as _json
-
     from pyspark.sql import functions as F
+
+    from scylla_cdc_source_connector_spark.streaming import increment
 
     md = current_metadata(location)
     head = md["current-snapshot-id"]
     state_path = os.path.join(out_dir, state_name)
-    identity = _json.loads(
-        _json.dumps({"table": os.path.abspath(location), **identity_extra})
-    )
-    last = None
-    if os.path.exists(state_path):
-        with open(state_path) as fh:
-            st = _json.load(fh)
-        if {k: st.get(k) for k in identity} != identity:
-            raise ValueError(
-                "output directory belongs to a different stream identity "
-                f"({sorted(identity)}); one directory serves one"
-            )
-        last = st["hwm"]
+    identity = {"table": os.path.abspath(location), **identity_extra}
+    st = increment.read_json(state_path)
+    if st:
+        increment.check_identity(state_path, st, identity, what="stream")
+    last = st.get("hwm")
     if head == -1 or head == last:
         return {"consumed": [], "rows": 0, "hwm": last}
     line = _ancestors_of(md, head)
@@ -4392,10 +4359,7 @@ def materialize_increment(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             out.unpersist()
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump({**identity, "hwm": head}, fh)
-    os.replace(tmp, state_path)
+    increment.write_json_atomic(state_path, {**identity, "hwm": head})
     return {"consumed": new_snaps, "rows": n, "hwm": head}
 
 

@@ -20,14 +20,13 @@ Execution shape (100 TB target):
 - idempotent + resumable: merge is a pure last-writer-wins function of
   (target, upserts), so re-applying after a crash converges; `_applied`
   marker files (written AFTER the bucket overwrite commits) record
-  progress, mirroring the sink's own lineage protocol.  In production
+  progress — the one progress protocol, streaming/increment.py.  In production
   the same plan is one Iceberg `MERGE INTO target USING upserts` —
   documented here because this container has no Iceberg runtime.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,105 +34,11 @@ from pyspark.sql import functions as F
 
 from scylla_cdc_source_connector_spark.config import EngineConfig, IncludeMode
 from scylla_cdc_source_connector_spark.schemas import DEFAULT_TABLE, TableModel
+from scylla_cdc_source_connector_spark.streaming import increment
 from scylla_cdc_source_connector_spark.streaming import sink as sink_mod
 
 #: version/tombstone bookkeeping columns stored alongside the image
 _META = ("__ts_us", "__deleted")
-
-
-def applied_batch_ids(target_dir: str) -> list[int]:
-    d = os.path.join(target_dir, "_applied")
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f.split("-")[1].split(".")[0])
-        for f in os.listdir(d)
-        if f.startswith("batch-") and f.endswith(".json")
-    )
-
-
-def _mark_applied(
-    target_dir: str,
-    batch_ids: list[int],
-    n_upserts: int,
-    *,
-    extra: dict | None = None,
-) -> None:
-    d = os.path.join(target_dir, "_applied")
-    os.makedirs(d, exist_ok=True)
-    for bid in batch_ids:
-        tmp = os.path.join(d, f"batch-{bid}.json.tmp")
-        rec = {"batch_id": bid, "n_upserts": n_upserts}
-        if extra:
-            rec.update(extra)
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp, os.path.join(d, f"batch-{bid}.json"))
-
-
-def register_consumer(cfg: EngineConfig, target_dir: str, *, name: str) -> None:
-    """Record a downstream exactly-once consumer (apply / corpus /
-    records) with the sink, so `expire_emitted(keep_min_applied=True)`
-    can refuse to expire batches the consumer hasn't applied yet — the
-    Kafka analog is retention honouring consumer lag.  Idempotent; keyed
-    by name, last registration of a name wins."""
-    d = os.path.join(cfg.output_dir, "_consumers")
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f"{name}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"name": name, "target_dir": os.path.abspath(target_dir)}, fh)
-    os.replace(tmp, os.path.join(d, f"{name}.json"))
-
-
-def registered_consumers(cfg: EngineConfig) -> dict[str, str]:
-    """name -> applied-marker target dir of every registered consumer."""
-    d = os.path.join(cfg.output_dir, "_consumers")
-    if not os.path.isdir(d):
-        return {}
-    out = {}
-    for f in sorted(os.listdir(d)):
-        if f.endswith(".json"):
-            with open(os.path.join(d, f)) as fh:
-                rec = json.load(fh)
-            out[rec["name"]] = rec["target_dir"]
-    return out
-
-
-def split_consumable(
-    cfg: EngineConfig, todo: list[int], *, consumer: str, strict: bool = False
-) -> tuple[list[int], list[int], set[int]]:
-    """Partition committed-but-unapplied batch ids into (with_data,
-    dir_less, expired⊆dir_less).  A dir-less batch whose lineage says
-    n_records > 0 was expired (expire_emitted) before this consumer
-    caught up — its rows are unrecoverable.  strict=True raises;
-    otherwise a RuntimeWarning is emitted and the caller marks the batch
-    applied with an {"expired": true} marker so the loss is auditable."""
-    with_data: list[int] = []
-    dir_less: list[int] = []
-    for bid in todo:
-        if os.path.isdir(sink_mod.batch_output_path(cfg, bid)):
-            with_data.append(bid)
-        else:
-            dir_less.append(bid)
-    expired = {
-        bid
-        for bid in dir_less
-        if sink_mod.read_lineage_one(cfg, bid).get("n_records", 0) > 0
-    }
-    if expired:
-        msg = (
-            f"{consumer}: {len(expired)} committed batch(es) expired before "
-            f"this consumer applied them (ids {sorted(expired)[:10]}"
-            f"{'…' if len(expired) > 10 else ''}) — their rows are "
-            "permanently absent downstream. Run expire_emitted with "
-            "keep_min_applied=True to prevent this."
-        )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
-    return with_data, dir_less, expired
 
 
 def _bucket_expr(table: TableModel, n_buckets: int):
@@ -175,21 +80,9 @@ def materialize_latest(
             "materialize_latest needs full after-images "
             "(cfg.include_after=FULL) — partial images cannot be merged"
         )
-    register_consumer(cfg, target_dir, name="apply")
-    committed = sink_mod.committed_batch_ids(cfg)
-    todo = sorted(set(committed) - set(applied_batch_ids(target_dir)))
+    todo = increment.unapplied_batches(cfg, target_dir, name="apply")
     if not todo:
         return 0
-    with_data, dir_less, expired = split_consumable(
-        cfg, todo, consumer="materialize_latest"
-    )
-    for bid in dir_less:
-        _mark_applied(
-            target_dir, [bid], 0, extra={"expired": True} if bid in expired else None
-        )
-    if not with_data:
-        return 0
-    todo = with_data
     paths = [sink_mod.batch_output_path(cfg, bid) for bid in todo]
     env = spark.read.parquet(*paths)
 
@@ -268,7 +161,7 @@ def materialize_latest(
             spark.conf.set(
                 "spark.sql.sources.partitionOverwriteMode", prev_dyn
             )
-        _mark_applied(target_dir, todo, n)
+        increment.mark_applied(target_dir, todo, n)
         return n
     finally:
         upserts.unpersist()

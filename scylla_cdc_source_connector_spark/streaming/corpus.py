@@ -2,8 +2,8 @@
 
 `plans/training_pipeline.training_corpus` is the one-shot recipe; this
 module is its STREAMING counterpart: it consumes the exactly-once sink's
-committed envelope batches (same lineage protocol as
-`streaming/apply.py`) and maintains a log-structured corpus of
+committed envelope batches (the one progress protocol,
+`streaming/increment.py`) and maintains a log-structured corpus of
 quality-gated, trimmed, fixed-window, fingerprint-deduplicated audio
 segments that tracks the table — updates replace a clip's segments,
 deletes retire them.
@@ -52,18 +52,14 @@ re-enters.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scylla_cdc_source_connector_spark.config import EngineConfig, IncludeMode
+from scylla_cdc_source_connector_spark.streaming import increment
 from scylla_cdc_source_connector_spark.streaming import sink as sink_mod
-from scylla_cdc_source_connector_spark.streaming.apply import (
-    _mark_applied,
-    applied_batch_ids,
-)
 
 #: resolved corpus columns (read_corpus output)
 CORPUS_COLUMNS = (
@@ -115,8 +111,8 @@ def maintain_corpus(
 
     A committed batch whose output dir was expired before this consumer
     applied it is warned about and recorded as {"expired": true} in its
-    applied marker — never silently treated as empty (see
-    apply.split_consumable)."""
+    applied marker — never silently treated as empty (the progress
+    protocol's consumer cursor, increment.unapplied_batches)."""
     from scylla_cdc_source_connector_spark import audio
     from scylla_cdc_source_connector_spark.audio_segment import segment_clips
     from scylla_cdc_source_connector_spark.audio_vad import trim_clips
@@ -126,23 +122,7 @@ def maintain_corpus(
             "maintain_corpus needs include_after=FULL — the post-image "
             "payload must ride the envelope"
         )
-    from scylla_cdc_source_connector_spark.streaming.apply import (
-        register_consumer,
-        split_consumable,
-    )
-
-    register_consumer(cfg, target_dir, name="corpus")
-    committed = sink_mod.committed_batch_ids(cfg)
-    todo = sorted(set(committed) - set(applied_batch_ids(target_dir)))
-    if not todo:
-        return 0
-    with_data, dir_less, expired = split_consumable(
-        cfg, todo, consumer="maintain_corpus"
-    )
-    for b in dir_less:
-        _mark_applied(
-            target_dir, [b], 0, extra={"expired": True} if b in expired else None
-        )
+    with_data = increment.unapplied_batches(cfg, target_dir, name="corpus")
     if not with_data:
         return 0
     bid = max(with_data)  # merged log rows land under the lead id
@@ -325,8 +305,8 @@ def maintain_corpus(
         if f.endswith(".parquet")
     )
     # constituents applied at 0 rows; the lead id carries the count
-    _mark_applied(target_dir, [b for b in with_data if b != bid], 0)
-    _mark_applied(target_dir, [bid], n_appended)
+    increment.mark_applied(target_dir, [b for b in with_data if b != bid], 0)
+    increment.mark_applied(target_dir, [bid], n_appended)
     return n_appended
 
 

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from scylla_cdc_source_connector_spark.config import EngineConfig
+from scylla_cdc_source_connector_spark.streaming.sink import committed_batch_ids
 
 #: persisted index schema (DDL)
 FP_INDEX_SCHEMA = "clip_id string, `cdc$time_us` long, fingerprint long"
@@ -55,14 +56,6 @@ def fp_index_root(cfg: EngineConfig) -> str:
 
 def dup_pairs_path(cfg: EngineConfig, batch_id: int) -> str:
     return os.path.join(cfg.output_dir, "_dup_pairs", f"batch_id={batch_id}")
-
-
-def _committed_ids(cfg: EngineConfig) -> set[int]:
-    from scylla_cdc_source_connector_spark.streaming.sink import (
-        committed_batch_ids,
-    )
-
-    return set(committed_batch_ids(cfg))
 
 
 def _index_dirs(cfg: EngineConfig, committed: set[int]) -> list[str]:
@@ -90,7 +83,7 @@ def _index_dirs(cfg: EngineConfig, committed: set[int]) -> list[str]:
 
 def read_fp_index(spark: SparkSession, cfg: EngineConfig) -> DataFrame:
     """Committed fingerprint index, latest version per clip."""
-    dirs = _index_dirs(cfg, _committed_ids(cfg))
+    dirs = _index_dirs(cfg, set(committed_batch_ids(cfg)))
     if not dirs:
         return spark.createDataFrame([], FP_INDEX_SCHEMA)
     raw = spark.read.schema(FP_INDEX_SCHEMA).parquet(*dirs)
@@ -104,7 +97,7 @@ def read_dup_pairs(spark: SparkSession, cfg: EngineConfig) -> DataFrame:
     """All committed newly-discovered duplicate pairs
     (clip_id, match_clip_id, hamming, batch_id)."""
     root = os.path.join(cfg.output_dir, "_dup_pairs")
-    committed = _committed_ids(cfg)
+    committed = set(committed_batch_ids(cfg))
     paths = [
         os.path.join(root, d)
         for d in (os.listdir(root) if os.path.isdir(root) else [])
@@ -197,7 +190,7 @@ def maintain_dedup_index(
     try:
         if new_fp.isEmpty():
             return 0
-        committed = _committed_ids(cfg)
+        committed = set(committed_batch_ids(cfg))
         old = read_fp_index(spark, cfg).select(
             "clip_id", "fingerprint", F.lit(False).alias("is_new")
         )

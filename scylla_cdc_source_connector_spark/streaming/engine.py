@@ -398,38 +398,24 @@ def run_iceberg_meta_stream(
             skipped.append(b["snapshot_id"])
             continue
         if max_files_per_batch is None:
-            if seq in committed:
-                skipped.append(b["snapshot_id"])
-                continue
-            manifests_skipped += b["manifests_skipped"]
-            files_skipped += b["files_skipped"]
-            if b["files"]:
-                df = spark.read.schema(table.changelog_schema()).parquet(
-                    *b["files"]
+            # one batch per snapshot, its id the sequence number
+            chunks, bids = [b["files"]], [seq]
+        else:
+            # split mode: deterministic sorted-file chunks, each its own
+            # exactly-once sub-batch (bid = seq * stride + chunk index)
+            files = sorted(b["files"])
+            chunks = [
+                files[i : i + max_files_per_batch]
+                for i in range(0, len(files), max_files_per_batch)
+            ] or [[]]
+            if len(chunks) >= _SPLIT_STRIDE:
+                raise ValueError(
+                    f"snapshot {b['snapshot_id']} splits into {len(chunks)} "
+                    f"sub-batches (>= {_SPLIT_STRIDE}); raise max_files_per_batch"
                 )
-            else:
-                # empty snapshot = the heartbeat case: run the sink anyway
-                # so lineage/offsets advance exactly like an empty CDC
-                # window (K4)
-                df = spark.createDataFrame([], table.changelog_schema())
-            sink_fn(df, seq)
-            consumed.append(b["snapshot_id"])
-            continue
-        # split mode: deterministic sorted-file chunks, each its own
-        # exactly-once sub-batch (bid = seq * stride + chunk index)
-        files = sorted(b["files"])
-        chunks = [
-            files[i : i + max_files_per_batch]
-            for i in range(0, len(files), max_files_per_batch)
-        ] or [[]]
-        if len(chunks) >= _SPLIT_STRIDE:
-            raise ValueError(
-                f"snapshot {b['snapshot_id']} splits into {len(chunks)} "
-                f"sub-batches (>= {_SPLIT_STRIDE}); raise max_files_per_batch"
-            )
+            bids = [seq * _SPLIT_STRIDE + ci for ci in range(len(chunks))]
         ran = False
-        for ci, chunk in enumerate(chunks):
-            bid = seq * _SPLIT_STRIDE + ci
+        for bid, chunk in zip(bids, chunks):
             if bid in committed:
                 continue
             if chunk:
@@ -437,6 +423,9 @@ def run_iceberg_meta_stream(
                     *chunk
                 )
             else:
+                # empty snapshot = the heartbeat case: run the sink anyway
+                # so lineage/offsets advance exactly like an empty CDC
+                # window (K4)
                 df = spark.createDataFrame([], table.changelog_schema())
             sink_fn(df, bid)
             ran = True
@@ -505,18 +494,11 @@ def run_initial_snapshot_then_stream(
     pipeline (ONE exchange); 'r' rows spread over `snapshot_streams`
     synthetic shards so the per-shard ordered write parallelizes.
     """
-    import json as _json
     import time as _time
 
     from scylla_cdc_source_connector_spark.plans.pipeline import cdc_envelopes
-    from scylla_cdc_source_connector_spark.schemas import (
-        OP_POST_IMAGE,
-        OP_ROW_INSERT,
-    )
     from scylla_cdc_source_connector_spark.sources import iceberg_meta
-    from scylla_cdc_source_connector_spark.streaming.apply import (
-        applied_batch_ids,
-    )
+    from scylla_cdc_source_connector_spark.streaming import increment
     from scylla_cdc_source_connector_spark.streaming.sink import (
         _commit_lineage,
         _write_batch,
@@ -531,32 +513,23 @@ def run_initial_snapshot_then_stream(
     os.makedirs(cfg.output_dir, exist_ok=True)
 
     # ---- pin the handoff point (fresh start) or reload it (resume) ----
-    marker = os.path.join(cfg.lineage_dir, "_snapshot_phase.json")
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            phase = _json.load(fh)
-        if phase["n_chunks"] != n_chunks:
-            raise ValueError(
-                f"bootstrap was started with n_chunks={phase['n_chunks']}; "
-                f"resuming with {n_chunks} would re-chunk the key space"
-            )
-    else:
-        applied = applied_batch_ids(mirror_location)
+    def handoff() -> dict:
+        applied = increment.applied_batch_ids(mirror_location)
         if not applied:
             raise ValueError(
                 f"mirror {mirror_location} has no _applied markers — "
                 "nothing to snapshot from; run run_iceberg_meta_stream "
                 "directly for a full-history bootstrap"
             )
-        phase = {
-            "hwm": max(applied),
-            "n_chunks": n_chunks,
-            "mirror": os.path.abspath(mirror_location),
-        }
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(phase, fh)
-        os.replace(tmp, marker)
+        return {"hwm": max(applied), "mirror": os.path.abspath(mirror_location)}
+
+    # a different n_chunks would re-chunk the key space
+    phase = increment.pin(
+        os.path.join(cfg.lineage_dir, "_snapshot_phase.json"),
+        {"n_chunks": n_chunks},
+        what="bootstrap",
+        init=handoff,
+    )
     hwm = phase["hwm"]
 
     identity = (
@@ -732,11 +705,11 @@ def run_adhoc_resnapshot(
 
     Returns {"request_id", "batch_ids", "chunks_run", "n_rows"}.
     """
-    import json as _json
     import time as _time
 
     from scylla_cdc_source_connector_spark.plans.pipeline import cdc_envelopes
     from scylla_cdc_source_connector_spark.sources import iceberg_meta
+    from scylla_cdc_source_connector_spark.streaming import increment
     from scylla_cdc_source_connector_spark.streaming.sink import (
         _commit_lineage,
         _write_batch,
@@ -749,28 +722,18 @@ def run_adhoc_resnapshot(
     os.makedirs(cfg.lineage_dir, exist_ok=True)
     os.makedirs(cfg.output_dir, exist_ok=True)
     safe = "".join(c if c.isalnum() or c in "-_" else "_" for c in request_id)
-    marker = os.path.join(cfg.lineage_dir, f"_resnapshot_{safe}.json")
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            block = _json.load(fh)
-        if block["n_chunks"] != n_chunks:
-            raise ValueError(
-                f"resnapshot {request_id!r} was started with n_chunks="
-                f"{block['n_chunks']}; resuming with {n_chunks} would "
-                "re-chunk the key space"
-            )
-    else:
-        committed = committed_batch_ids(cfg)
-        floor = min([b for b in committed if b < 0], default=0)
-        block = {
-            "request_id": request_id,
-            "base": floor - n_chunks,
-            "n_chunks": n_chunks,
-        }
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(block, fh)
-        os.replace(tmp, marker)
+
+    def allocate() -> dict:
+        floor = min([b for b in committed_batch_ids(cfg) if b < 0], default=0)
+        return {"request_id": request_id, "base": floor - n_chunks}
+
+    # a different n_chunks would re-chunk the key space
+    block = increment.pin(
+        os.path.join(cfg.lineage_dir, f"_resnapshot_{safe}.json"),
+        {"n_chunks": n_chunks},
+        what="resnapshot request",
+        init=allocate,
+    )
 
     pk = table.pk_columns
     state = iceberg_meta.read_table(

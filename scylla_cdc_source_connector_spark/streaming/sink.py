@@ -29,7 +29,6 @@ offsets past empty windows (K4, ScyllaWorkerTransport.java:58-79).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -40,21 +39,17 @@ from pyspark.sql import functions as F
 from scylla_cdc_source_connector_spark.config import EngineConfig
 from scylla_cdc_source_connector_spark.retry import with_retries
 from scylla_cdc_source_connector_spark.schemas import DEFAULT_TABLE, TableModel
+from scylla_cdc_source_connector_spark.streaming import increment
 
 
 def _commit_lineage(cfg: EngineConfig, batch_id: int, rec: dict) -> None:
-    """Atomic lineage commit (tmp + rename), retried with the reference's
-    backoff policy on transient I/O errors (K6) — a failed commit would
-    otherwise kill the streaming query even though the batch output is
-    already idempotently written."""
-
-    def write() -> None:
-        tmp = lineage_path(cfg, batch_id) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp, lineage_path(cfg, batch_id))
-
-    with_retries(write)
+    """Atomic lineage commit (increment.write_json_atomic), retried with
+    the reference's backoff policy on transient I/O errors (K6) — a
+    failed commit would otherwise kill the streaming query even though
+    the batch output is already idempotently written."""
+    with_retries(
+        lambda: increment.write_json_atomic(lineage_path(cfg, batch_id), rec)
+    )
 
 
 def lineage_path(cfg: EngineConfig, batch_id: int) -> str:
@@ -81,50 +76,25 @@ def stamp_source(cfg: EngineConfig, identity: str) -> None:
     resume silently skip snapshots as 'already committed'.  The first
     run stamps `lineage_dir/_source.json`; a later run with a DIFFERENT
     identity fails loudly instead."""
-    os.makedirs(cfg.lineage_dir, exist_ok=True)
-    p = os.path.join(cfg.lineage_dir, "_source.json")
-    if os.path.isfile(p):
-        with open(p) as fh:
-            prev = json.load(fh)["identity"]
-        if prev != identity:
-            raise ValueError(
-                f"lineage dir {cfg.lineage_dir} belongs to source {prev!r}; "
-                f"refusing to resume it as {identity!r} — use a fresh "
-                "output/lineage namespace per source"
-            )
-        return
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"identity": identity}, fh)
-    os.replace(tmp, p)
+    increment.pin(
+        os.path.join(cfg.lineage_dir, "_source.json"),
+        {"identity": identity},
+        what="source",
+    )
 
 
 def committed_batch_ids(cfg: EngineConfig) -> list[int]:
-    if not os.path.isdir(cfg.lineage_dir):
-        return []
-    out = []
-    for f in os.listdir(cfg.lineage_dir):
-        if f.startswith("batch-") and f.endswith(".json"):
-            out.append(int(f[len("batch-") : -len(".json")]))
-    return sorted(out)
+    return increment.batch_ids(cfg.lineage_dir)
 
 
 def read_lineage(cfg: EngineConfig) -> list[dict]:
     """All committed lineage records, batch order."""
-    out = []
-    for bid in committed_batch_ids(cfg):
-        with open(lineage_path(cfg, bid)) as fh:
-            out.append(json.load(fh))
-    return out
+    return [read_lineage_one(cfg, bid) for bid in committed_batch_ids(cfg)]
 
 
 def read_lineage_one(cfg: EngineConfig, batch_id: int) -> dict:
     """One committed lineage record ({} if the batch never committed)."""
-    p = lineage_path(cfg, batch_id)
-    if not os.path.isfile(p):
-        return {}
-    with open(p) as fh:
-        return json.load(fh)
+    return increment.read_json(lineage_path(cfg, batch_id))
 
 
 def read_emitted(
@@ -441,11 +411,7 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
         # hwm is monotone, and a later batch without pending means earlier
         # pending state was consumed (each batch rewrites the pending table)
         bids = committed_batch_ids(cfg)
-        if bids:
-            with open(lineage_path(cfg, bids[-1])) as fh:
-                latest = json.load(fh)
-        else:
-            latest = {}
+        latest = read_lineage_one(cfg, bids[-1]) if bids else {}
         prev_hwm = latest.get("max_event_us", 0)
         prev_pending = (
             latest["batch_id"] if latest.get("has_pending") else None
@@ -989,11 +955,11 @@ def expire_emitted(
 
     Like Kafka retention vs consumer lag, expiry by default does NOT
     wait for downstream consumers (apply/corpus/records `_applied`
-    markers) — those consumers detect the loss (apply.split_consumable
-    warns and records {"expired": true}).  Pass keep_min_applied=True to
-    refuse to expire any batch a REGISTERED consumer
-    (apply.register_consumer — the apply/corpus/records maintainers
-    register themselves) hasn't applied yet: the retention-honours-
+    markers) — those consumers detect the loss (increment.
+    unapplied_batches warns and records {"expired": true}).  Pass
+    keep_min_applied=True to refuse to expire any batch a REGISTERED
+    consumer (every consumer registers itself through
+    increment.unapplied_batches) hasn't applied yet: the retention-honours-
     consumer-lag mode, guaranteeing no consumer ever loses a data-bearing
     batch."""
     if keep_last < 1:
@@ -1004,17 +970,9 @@ def expire_emitted(
         records_path,
     )
 
-    applied_by_all: set[int] | None = None
-    if keep_min_applied:
-        from scylla_cdc_source_connector_spark.streaming.apply import (
-            applied_batch_ids,
-            registered_consumers,
-        )
-
-        applied_by_all = set(bids)
-        for _, target in sorted(registered_consumers(cfg).items()):
-            applied_by_all &= set(applied_batch_ids(target))
-
+    applied_by_all = (
+        increment.applied_by_all(cfg, bids) if keep_min_applied else None
+    )
     for bid in bids[:-keep_last] if len(bids) > keep_last else []:
         if applied_by_all is not None and bid not in applied_by_all:
             continue  # a lagging registered consumer still needs it

@@ -17,10 +17,10 @@ from scylla_cdc_source_connector_spark.fixtures import (
 )
 from scylla_cdc_source_connector_spark.plans.pipeline import cdc_envelopes
 from scylla_cdc_source_connector_spark.streaming.apply import (
-    applied_batch_ids,
     materialize_latest,
     read_latest,
 )
+from scylla_cdc_source_connector_spark.streaming.increment import applied_batch_ids
 from scylla_cdc_source_connector_spark.streaming.engine import run_stream
 
 
@@ -116,6 +116,28 @@ def test_reapply_is_noop_and_idempotent(spark, tmp_root, apply_setup):
         read_latest(spark, target).select("clip_id", "__ts_us").collect()
     )
     assert again == before
+
+
+def test_reapply_over_negative_batch_ids(spark, tmp_root, apply_setup):
+    """Snapshot backfills commit NEGATIVE sink batch ids (`batch--1.json`);
+    a consumer's second pass over them is a no-op, not a parse error."""
+    import shutil
+
+    from scylla_cdc_source_connector_spark.streaming import sink as sink_mod
+
+    _, src = apply_setup
+    cfg = _cfg(tmp_root, "apply_neg")
+    shutil.copytree(src.output_dir, cfg.output_dir)
+    shutil.copytree(src.lineage_dir, cfg.lineage_dir)
+    first = sink_mod.committed_batch_ids(cfg)[0]
+    shutil.copytree(
+        sink_mod.batch_output_path(cfg, first), sink_mod.batch_output_path(cfg, -1)
+    )
+    shutil.copy(sink_mod.lineage_path(cfg, first), sink_mod.lineage_path(cfg, -1))
+    target = f"{tmp_root}/apply_neg_target"
+    assert materialize_latest(spark, cfg, target_dir=target) > 0
+    assert materialize_latest(spark, cfg, target_dir=target) == 0
+    assert applied_batch_ids(target) == sink_mod.committed_batch_ids(cfg)
 
 
 def test_incremental_equals_oneshot(spark, tmp_root, apply_setup):

@@ -20,7 +20,7 @@ from scylla_cdc_source_connector_spark.fixtures import (
 from scylla_cdc_source_connector_spark.plans.training_pipeline import (
     training_corpus,
 )
-from scylla_cdc_source_connector_spark.streaming.apply import applied_batch_ids
+from scylla_cdc_source_connector_spark.streaming.increment import applied_batch_ids
 from scylla_cdc_source_connector_spark.streaming.corpus import (
     maintain_corpus,
     read_corpus,

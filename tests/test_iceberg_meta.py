@@ -2737,13 +2737,16 @@ def test_initial_snapshot_then_stream(spark, tmp_root, ice_pdf):
     from scylla_cdc_source_connector_spark.streaming.engine import (
         run_initial_snapshot_then_stream,
     )
+    from scylla_cdc_source_connector_spark.streaming.increment import (
+        applied_batch_ids,
+    )
 
     loc, _sids = _ice_table(tmp_root, ice_pdf, "ice_boot_src", n_snaps=4)
     cfg_a = _cfg(tmp_root, "ice_boot_a")
     run_iceberg_meta_stream(spark, cfg_a, loc)
     mir = f"{tmp_root}/ice_boot_mirror"
     im.maintain_latest_state_mirror(spark, cfg_a, mir)
-    hwm_ids = apply_mod.applied_batch_ids(mir)
+    hwm_ids = applied_batch_ids(mir)
     assert max(hwm_ids) == 4
     mirror_rows = im.read_table(spark, mir).count()
 
@@ -3848,15 +3851,12 @@ def test_iceberg_stream_split_identity_under_source_identity(
 
 def test_heavy_hitters_and_join_advisor(spark, tmp_root):
     """The Misra-Gries summary finds a planted hot key within its
-    additive error bound, and advise_join turns manifests + NDV + heavy
-    hitters into the broadcast / sort-merge / salt decision without
-    scanning data."""
+    additive error bound."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pyspark.sql.types as T
 
-    from scylla_cdc_source_connector_spark.plans import advisor
     from scylla_cdc_source_connector_spark.sources import puffin as pf
 
     # big side: one hot user (40% of rows) + uniform tail
@@ -3879,17 +3879,6 @@ def test_heavy_hitters_and_join_advisor(spark, tmp_root):
     im.append_files(big, [f"{big}/data/f0.parquet"], timestamp_ms=1)
     res = pf.compute_table_stats(spark, big)
     assert res["rows"]["user"] == n
-    # small side: a dimension table
-    small = f"{tmp_root}/adv_small"
-    shutil.rmtree(small, ignore_errors=True)
-    os.makedirs(f"{small}/data")
-    im.create_table(small, sch)
-    pq.write_table(
-        pa.table({"user": ["whale", "u1"], "v": [0, 1]}),
-        f"{small}/data/f0.parquet",
-    )
-    im.append_files(small, [f"{small}/data/f0.parquet"], timestamp_ms=1)
-
     hh = pf.heavy_hitters(big, "user")
     assert hh["rows"] == n and not hh["stale"]
     top_hash, top_count = hh["hitters"][0]
@@ -3903,22 +3892,26 @@ def test_heavy_hitters_and_join_advisor(spark, tmp_root):
     jvm_hash = whale.select(F.xxhash64("user").alias("h")).collect()[0]["h"]
     assert top_hash == (int(jvm_hash) + (1 << 63)) % (1 << 64)
 
-    # advisor: small side broadcasts
-    adv = advisor.advise_join(spark, big, small, "user")
-    assert adv["strategy"] == "broadcast" and adv["build_side"] == "right"
-    # force sort-merge: tiny threshold -> skew detected on the whale
-    adv2 = advisor.advise_join(
-        spark, big, small, "user", broadcast_threshold_bytes=1,
-        shuffle_partitions=8, skew_factor=2.0,
+
+def test_changelog_kafka_envelopes_seq_overflow_raises(spark):
+    """cdc$batch_seq_no is an int: a commit sequence past 2^31 - 1 raises
+    in-plan instead of wrapping to a negative order key."""
+    from scylla_cdc_source_connector_spark.operators.kafka_records import (
+        changelog_kafka_envelopes,
     )
-    assert adv2["strategy"] == "sort_merge"
-    assert adv2["skew"]["detected"] is True
-    assert adv2["skew"]["salt_factor"] >= 2
-    # profile surface
-    prof = advisor.table_profile(spark, big, key="user")
-    assert prof["rows"] == n and prof["files"] == 1
-    assert prof["ndv"] > 2500  # ~3001 distinct users
-    assert prof["top_share"] > 0.2
+
+    def env(seq):
+        cl = spark.createDataFrame(
+            [("k1", 1, "INSERT", 0, 7, seq, 1000)],
+            "k string, v long, _change_type string, _change_ordinal int, "
+            "_commit_snapshot_id long, _sequence_number long, "
+            "_commit_timestamp_ms long",
+        )
+        return changelog_kafka_envelopes(cl, ["k"])
+
+    assert env(2**31 - 1).collect()[0]["cdc$batch_seq_no"] == 2**31 - 1
+    with pytest.raises(Exception, match="exceeds the int range"):
+        env(2**31).collect()
 
 
 def test_changelog_kafka_envelopes(spark, tmp_root):

@@ -340,6 +340,24 @@ def test_temperature_budgets_math(spark):
         temperature_budgets(df, ["lang"], total_budget=0)
 
 
+def test_temperature_budgets_refuses_high_cardinality(spark):
+    """A stratum column with more distinct values than MAX_STRATA raises
+    instead of collecting every stratum to the driver."""
+    from scylla_cdc_source_connector_spark.plans.sampling import (
+        MAX_STRATA,
+        temperature_budgets,
+    )
+
+    df = spark.range(MAX_STRATA + 1).withColumnRenamed("id", "lang")
+    with pytest.raises(ValueError, match=f"more than {MAX_STRATA} strata"):
+        temperature_budgets(df, ["lang"], total_budget=100)
+    # exactly MAX_STRATA strata still plan (each capped at its one row)
+    at_cap = temperature_budgets(
+        df.limit(MAX_STRATA), ["lang"], total_budget=2 * MAX_STRATA
+    )
+    assert len(at_cap) == MAX_STRATA
+
+
 def test_temperature_mix_selection(spark):
     from scylla_cdc_source_connector_spark.plans.sampling import (
         temperature_budgets,

@@ -758,7 +758,7 @@ def test_retention_honours_lagging_consumer(spark, tmp_root, stream_pdf):
     from scylla_cdc_source_connector_spark.operators.kafka_records import (
         maintain_kafka_records,
     )
-    from scylla_cdc_source_connector_spark.streaming.apply import (
+    from scylla_cdc_source_connector_spark.streaming.increment import (
         applied_batch_ids,
         registered_consumers,
     )
@@ -817,6 +817,109 @@ def test_retention_honours_lagging_consumer(spark, tmp_root, stream_pdf):
         warnings.simplefilter("error")  # no stray warning in strict path
         with pytest.raises(RuntimeError, match="expired before"):
             maintain_kafka_records(spark, cfg, strict=True)
+
+
+@pytest.fixture(scope="module")
+def expired_stream(spark, tmp_root, stream_pdf):
+    """A committed stream whose data-bearing batches, all but the newest,
+    were expired before any consumer applied them."""
+    d = f"{tmp_root}/loss_in"
+    _write_chunks(stream_pdf.iloc[:900], d, n_chunks=3)
+    cfg = _cfg(tmp_root, "loss")
+    q = run_stream(spark, cfg, d, available_now=True, max_files_per_trigger=1)
+    q.awaitTermination(300)
+    sink_mod.expire_emitted(cfg, keep_last=1)
+    lost = [
+        b
+        for b in sink_mod.committed_batch_ids(cfg)
+        if not os.path.isdir(sink_mod.batch_output_path(cfg, b))
+        and sink_mod.read_lineage_one(cfg, b).get("n_records", 0) > 0
+    ]
+    assert lost, "fixture should have data-bearing expired batches"
+    return cfg, lost
+
+
+def _loss_consumer(name: str):
+    """(call(spark, cfg, target, **kw), marker dir of `target`, takes
+    strict) for each committed-batch consumer."""
+    from scylla_cdc_source_connector_spark.operators.kafka_records import (
+        maintain_kafka_records,
+    )
+    from scylla_cdc_source_connector_spark.sources import iceberg_meta as im
+    from scylla_cdc_source_connector_spark.streaming.apply import (
+        materialize_latest,
+    )
+    from scylla_cdc_source_connector_spark.streaming.corpus import (
+        maintain_corpus,
+    )
+
+    return {
+        "materialize_latest": (
+            lambda s, c, t, **kw: materialize_latest(s, c, target_dir=t, **kw),
+            False,
+        ),
+        "maintain_corpus": (
+            lambda s, c, t, **kw: maintain_corpus(s, c, target_dir=t, **kw),
+            False,
+        ),
+        # the records consumer's target is fixed under the sink's output
+        "maintain_kafka_records": (
+            lambda s, c, t, **kw: maintain_kafka_records(s, c, **kw),
+            True,
+        ),
+        "maintain_iceberg_table": (im.maintain_iceberg_table, True),
+        "maintain_latest_state_mirror": (im.maintain_latest_state_mirror, True),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "consumer",
+    [
+        "materialize_latest",
+        "maintain_corpus",
+        "maintain_kafka_records",
+        "maintain_iceberg_table",
+        "maintain_latest_state_mirror",
+    ],
+)
+def test_consumer_detects_expired_batches(
+    spark, tmp_root, expired_stream, consumer
+):
+    """Every committed-batch consumer warns about a batch expired before
+    it applied it, records the loss as an {"expired": true} applied
+    marker, and raises under strict=True where it takes strict."""
+    import json as _json
+    import shutil
+    import warnings
+
+    cfg, lost = expired_stream
+    call, takes_strict = _loss_consumer(consumer)
+
+    def target_of(tag):
+        if consumer == "maintain_kafka_records":
+            return os.path.join(cfg.output_dir, "_records")
+        return f"{tmp_root}/loss_{consumer}_{tag}"
+
+    target = target_of("lenient")
+    with pytest.warns(RuntimeWarning, match="expired before"):
+        call(spark, cfg, target)
+    for b in lost:
+        marker = os.path.join(target, "_applied", f"batch-{b}.json")
+        with open(marker) as fh:
+            assert _json.load(fh)["expired"] is True
+    assert sorted(
+        int(f[len("batch-") : -len(".json")])
+        for f in os.listdir(os.path.join(target, "_applied"))
+    ) == sink_mod.committed_batch_ids(cfg)
+
+    if not takes_strict:
+        return
+    strict_target = target_of("strict")
+    shutil.rmtree(os.path.join(strict_target, "_applied"), ignore_errors=True)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # no stray warning in strict path
+        with pytest.raises(RuntimeError, match="expired before"):
+            call(spark, cfg, strict_target, strict=True)
 
 
 def test_iceberg_sink_seam(spark, stream_pdf):
