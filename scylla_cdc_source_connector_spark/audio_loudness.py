@@ -134,18 +134,6 @@ def k_weight_mag2(sr: int, n_fft: int) -> np.ndarray:
     return _biquad_mag2(bs, as_, w) * _biquad_mag2(bh, ah, w)
 
 
-def _parseval_weights(sr: int, n_fft: int) -> np.ndarray:
-    """Weights so that (|rfft(x)|^2 . w) / n_fft^2 == mean((k*x)^2):
-    K-weighting |H|^2 times the rfft bin multiplicity (2 for interior
-    bins, 1 for DC and — when n_fft is even — Nyquist)."""
-    w = k_weight_mag2(sr, n_fft)
-    d = np.full(n_fft // 2 + 1, 2.0)
-    d[0] = 1.0
-    if n_fft % 2 == 0:
-        d[-1] = 1.0
-    return w * d
-
-
 def _segment_percentile(
     vals: np.ndarray,
     offsets: np.ndarray,

@@ -14,7 +14,7 @@ and the format cross-checks of ConfigSerializerUtil.java:213-369.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 
 
@@ -93,8 +93,6 @@ class EngineConfig:
 
     # partitioning / scale
     n_shards: int = 32
-    shuffle_partitions: int = 32
-    skew_salt_buckets: int = 8
 
     # feature gates (ScyllaChangesConsumer.java:98-102 version gate analog)
     preimages_enabled: bool = True
@@ -162,8 +160,6 @@ class EngineConfig:
     # instead (functions/dedup.py:hamming_near_dup_pairs docstring).
     dedup_index_max_hamming: int = 8
     dedup_index_compact_every: int = 8
-
-    extras: dict = field(default_factory=dict)
 
     @property
     def topic(self) -> str:

@@ -52,14 +52,6 @@ def canonical(schema) -> str:
     return json.dumps(schema, sort_keys=True, separators=(",", ":"))
 
 
-def _fields_of(schema) -> dict[str, object]:
-    if isinstance(schema, str):
-        schema = json.loads(schema)
-    if not (isinstance(schema, dict) and schema.get("type") == "record"):
-        return {}
-    return {f["name"]: f["type"] for f in schema.get("fields", [])}
-
-
 def _is_nullable(ftype) -> bool:
     return isinstance(ftype, list) and "null" in ftype
 

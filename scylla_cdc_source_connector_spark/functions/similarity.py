@@ -104,31 +104,6 @@ def brute_force_topk(
     return _topk_per_query(scored, k)
 
 
-def hyperplane_signature(
-    vec: Column, *, dim: int, n_planes: int = 12, seed: int = 42
-) -> Column:
-    """Deterministic random-hyperplane LSH signature (sign pattern packed
-    into a long).  Hyperplanes are literal constants — broadcast-free,
-    fully codegen'd.  NOTE: matching on the FULL signature has recall
-    (1 - theta/pi)^n_planes — use banded_hyperplane_buckets for candidate
-    generation; this packed form remains for compact fingerprinting."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    bits = []
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(float(v)) for v in planes[i]])
-        dot = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: (x * y).cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(dot > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def banded_hyperplane_buckets(
     vec: Column,
     *,

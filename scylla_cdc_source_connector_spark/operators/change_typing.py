@@ -10,8 +10,6 @@ Reference semantics:
   without dispatch (ScyllaChangesConsumer.java:234-249, :285-290).
 - F2 partition-delete admissibility: emitted only when the table has no
   clustering key (ScyllaChangesConsumer.isSinglePartitionDelete:271-283).
-- F4 modified-column detection: modified iff value non-null OR
-  cdc$deleted_<col> (ScyllaChangeRecordEmitter.java:361-398).
 """
 
 from __future__ import annotations
@@ -20,7 +18,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from scylla_cdc_source_connector_spark.schemas import (
-    NON_PK_COLUMNS,
     OP_CODE_CREATE,
     OP_CODE_DELETE,
     OP_CODE_UPDATE,
@@ -76,18 +73,3 @@ def admissible_only(df: DataFrame, *, table=None) -> DataFrame:
     if table is None or not table.has_clustering_key:
         return df
     return df.filter(F.col("`cdc$operation`") != OP_PARTITION_DELETE)
-
-
-def modified_expr(column: str) -> Column:
-    """F4: column is modified in a delta iff its value is non-null or it is
-    explicitly deleted (tri-state null-vs-unmodified)."""
-    return F.col(column).isNotNull() | F.coalesce(
-        F.col(f"`cdc$deleted_{column}`"), F.lit(False)
-    )
-
-
-def with_modified_flags(df: DataFrame) -> DataFrame:
-    """Adds a `_modified_<col>` boolean per non-PK column."""
-    for c in NON_PK_COLUMNS:
-        df = df.withColumn(f"_modified_{c}", modified_expr(c))
-    return df

@@ -411,21 +411,17 @@ def maintain_kafka_records(
         extra_cols=("batch_id",),
         pre_serialize=pre_serialize,
     )
-    prev_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            rec.repartition("batch_id", "`cdc$stream_id`")
-            .sortWithinPartitions(
-                "batch_id", "`cdc$stream_id`", "`cdc$time_us`", "`cdc$batch_seq_no`"
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("compression", cfg.output_compression)
-            .parquet(target)
+    (
+        rec.repartition("batch_id", "`cdc$stream_id`")
+        .sortWithinPartitions(
+            "batch_id", "`cdc$stream_id`", "`cdc$time_us`", "`cdc$batch_seq_no`"
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_dyn)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .option("compression", cfg.output_compression)
+        .parquet(target)
+    )
 
     # per-batch applied counts in ONE distributed job over the converted
     # output (batch_id is the partition column, so this is a pruned

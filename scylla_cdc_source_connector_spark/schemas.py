@@ -207,10 +207,6 @@ class TableModel:
         ]
         return T.StructType(fields)
 
-    def image_struct(self) -> T.StructType:
-        """The before/after image struct: full base row (nullable)."""
-        return T.StructType(self.base_fields())
-
     def key_struct(self) -> T.StructType:
         """Kafka key struct: PK columns in key-schema order
         (ScyllaSchema.computeKeySchema:155-184)."""
@@ -232,70 +228,5 @@ PK_COLUMNS = DEFAULT_TABLE.pk_columns
 NON_PK_COLUMNS = DEFAULT_TABLE.non_pk_columns
 
 
-def _base_fields() -> list[T.StructField]:
-    return DEFAULT_TABLE.base_fields()
-
-
 def changelog_schema() -> T.StructType:
     return DEFAULT_TABLE.changelog_schema()
-
-
-def image_struct() -> T.StructType:
-    return DEFAULT_TABLE.image_struct()
-
-
-def key_struct() -> T.StructType:
-    return DEFAULT_TABLE.key_struct()
-
-
-def source_struct() -> T.StructType:
-    """Source metadata struct (ScyllaSourceInfoStructMaker.java:13-35)."""
-    return T.StructType(
-        [
-            T.StructField("version", T.StringType(), False),
-            T.StructField("connector", T.StringType(), False),
-            T.StructField("name", T.StringType(), False),
-            T.StructField("ts_ms", T.LongType(), False),
-            T.StructField("ts_us", T.LongType(), False),
-            T.StructField("snapshot", T.StringType(), False),
-            T.StructField("db", T.StringType(), False),
-            T.StructField("keyspace_name", T.StringType(), False),
-            T.StructField("table_name", T.StringType(), False),
-        ]
-    )
-
-
-def envelope_schema() -> T.StructType:
-    """Kafka-record-shaped output row (SURVEY §1.1 "Output record";
-    envelope fields per ScyllaChangeRecordEmitter.java:577-610)."""
-    return T.StructType(
-        [
-            T.StructField("topic", T.StringType(), False),
-            T.StructField("key", key_struct(), False),
-            T.StructField(
-                "value",
-                T.StructType(
-                    [
-                        T.StructField("source", source_struct(), False),
-                        T.StructField("before", image_struct(), True),
-                        T.StructField("after", image_struct(), True),
-                        T.StructField("op", T.StringType(), False),
-                        T.StructField("ts_ms", T.LongType(), False),
-                    ]
-                ),
-                False,
-            ),
-            T.StructField(
-                "headers",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("k", T.StringType(), False),
-                            T.StructField("v", T.StringType(), False),
-                        ]
-                    )
-                ),
-                True,
-            ),
-        ]
-    )

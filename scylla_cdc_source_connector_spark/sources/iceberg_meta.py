@@ -34,6 +34,7 @@ Scope and honesty:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
@@ -1004,10 +1005,11 @@ def _commit_snapshot(
     Delete Files) under one content=DELETES manifest.
     operation: "append" (data only), "delete" (deletes only), "overwrite"
     (both — the row-level CDC merge shape), "replace" (compaction:
-    rewritten content, pair with carry_prior=False).  added_files delivers rows
-    only from "append" snapshots; delete/overwrite snapshots surface as
-    empty heartbeat batches on the streaming path (the jar path's
-    streaming-skip-delete/overwrite-snapshots).  Returns the snapshot id."""
+    rewritten content, pair with carry_prior=False).  The streaming path
+    delivers rows only from "append" snapshots (_snapshot_range); delete/
+    overwrite snapshots surface there as empty heartbeat batches.
+    Manifests are written by _write_manifest, the commit by
+    _commit_manifests.  Returns the snapshot id."""
     import pyarrow.parquet as pq
 
     md, base_v = _load_for_update(location)
@@ -1031,29 +1033,27 @@ def _commit_snapshot(
     token = uuid.uuid4().hex[:8]
     mdir = _meta_dir(location)
     schema = md["schemas"][md["current-schema-id"]]
-    spec_fields = md["partition-specs"][md["default-spec-id"]]["fields"]
+    spec_id = md["default-spec-id"]
+    spec_fields = md["partition-specs"][spec_id]["fields"]
     result_types = [_partition_result_type(f, schema) for f in spec_fields]
 
     def mk_entries(
         paths: list[str],
         content: int,
-        with_part: bool,
         equality_ids: list[int] | None = None,
     ):
-        entries, n_rows = [], 0
+        entries = []
         for p in paths:
             meta = pq.read_metadata(p)
-            n_rows += meta.num_rows
-            part = (
-                _file_partition_values(p, spec_fields, schema, result_types)
-                if (spec_fields and with_part)
-                else {}
-            )
             df = {
                 "content": content,
                 "file_path": os.path.abspath(p),
                 "file_format": "PARQUET",
-                "partition": part,
+                "partition": (
+                    _file_partition_values(p, spec_fields, schema, result_types)
+                    if (spec_fields and content == CONTENT_DATA)
+                    else {}
+                ),
                 "record_count": meta.num_rows,
                 "file_size_in_bytes": os.path.getsize(p),
                 "lower_bounds": None,
@@ -1074,103 +1074,37 @@ def _commit_snapshot(
                     "data_file": df,
                 }
             )
-        return entries, n_rows
+        return entries
 
-    new_manifests, n_rows = [], 0
+    write_manifest = functools.partial(
+        _write_manifest, md, spec_id=spec_id, seq=seq, snap_id=snap_id
+    )
+    new_manifests = []
     if data_files:
-        entries, n_rows = mk_entries(data_files, CONTENT_DATA, True)
-        manifest_path = os.path.join(mdir, f"manifest-{snap_id:020d}-{token}.avro")
-        avro.write_container(
-            manifest_path,
-            _entry_schema_for(spec_fields, result_types),
-            entries,
-            metadata={
-                "schema": json.dumps(schema),
-                "partition-spec": json.dumps(spec_fields),
-                "partition-spec-id": str(md["default-spec-id"]),
-                "format-version": "2",
-                "content": "data",
-            },
-        )
-        # per-manifest field summaries (spec §Manifest Lists): min/max
-        # bounds of each partition field across this manifest's entries —
-        # what lets a planner skip whole manifests without opening them
-        summaries = None
-        if spec_fields and entries:
-            summaries = []
-            for f, rtype in zip(spec_fields, result_types):
-                vals = [e["data_file"]["partition"][f["name"]] for e in entries]
-                summaries.append(
-                    {
-                        "contains_null": False,
-                        "contains_nan": None,
-                        "lower_bound": _bound_bytes(rtype, min(vals)),
-                        "upper_bound": _bound_bytes(rtype, max(vals)),
-                    }
-                )
         new_manifests.append(
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": md["default-spec-id"],
-                "content": CONTENT_DATA,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": summaries,
-            }
+            write_manifest(
+                os.path.join(mdir, f"manifest-{snap_id:020d}-{token}.avro"),
+                mk_entries(data_files, CONTENT_DATA),
+                CONTENT_DATA,
+                spec_fields=spec_fields,
+                result_types=result_types,
+            )
         )
-    n_del_rows = 0
     if delete_files or equality_deletes:
         # delete manifests carry NO partition tuple in this writer (the
         # delete rows name exact (file_path, pos) / key-value targets, so
         # a non-matching delete file is a no-op in the applying anti-join)
-        entries, n_del_rows = mk_entries(
-            delete_files, CONTENT_POSITION_DELETES, False
-        )
+        entries = mk_entries(delete_files, CONTENT_POSITION_DELETES)
         for p, eq_ids in equality_deletes or []:
-            e, n = mk_entries(
-                [p], CONTENT_EQUALITY_DELETES, False, equality_ids=eq_ids
-            )
-            entries.extend(e)
-            n_del_rows += n
-        manifest_path = os.path.join(mdir, f"manifest-{snap_id:020d}-{token}-d.avro")
-        avro.write_container(
-            manifest_path,
-            _DELETE_ENTRY_SCHEMA,
-            entries,
-            metadata={
-                "schema": json.dumps(schema),
-                "partition-spec": json.dumps([]),
-                "partition-spec-id": str(md["default-spec-id"]),
-                "format-version": "2",
-                "content": "deletes",
-            },
-        )
+            entries += mk_entries([p], CONTENT_EQUALITY_DELETES, eq_ids)
         new_manifests.append(
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": os.path.getsize(manifest_path),
-                "partition_spec_id": md["default-spec-id"],
-                "content": CONTENT_DELETES,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_del_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": None,
-            }
+            write_manifest(
+                os.path.join(mdir, f"manifest-{snap_id:020d}-{token}-d.avro"),
+                entries,
+                CONTENT_DELETES,
+            )
         )
+    rows = {m["content"]: m["added_rows_count"] for m in new_manifests}
 
     # manifest list = this snapshot's manifests + every live prior
     # manifest; carry_prior=False is the REPLACE shape (compaction): the
@@ -1178,55 +1112,13 @@ def _commit_snapshot(
     # prior manifest — data and delete alike — drops out of the scan
     prior = []
     if carry_prior and base_snap_id != -1:
-        cur = next(
-            s for s in md["snapshots"] if s["snapshot-id"] == base_snap_id
+        _, _, prior = avro.read_container(
+            _resolve_snapshot(md, base_snap_id)["manifest-list"]
         )
-        _, _, prior = avro.read_container(cur["manifest-list"])
         if carry_content == "data":
             # delete-file rewrite shape: prior DATA manifests stay live,
             # prior DELETE manifests are superseded by this commit's
             prior = [m for m in prior if m["content"] == CONTENT_DATA]
-    list_path = os.path.join(mdir, f"snap-{snap_id:020d}-{token}.avro")
-    avro.write_container(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
-        prior + new_manifests,
-        metadata={
-            "snapshot-id": str(snap_id),
-            "sequence-number": str(seq),
-            "format-version": "2",
-        },
-    )
-
-    md["snapshots"].append(
-        {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": base_snap_id if base_snap_id != -1 else None,
-            "sequence-number": seq,
-            "timestamp-ms": timestamp_ms,
-            "manifest-list": list_path,
-            "summary": {
-                "operation": operation,
-                "added-data-files": str(len(data_files)),
-                "added-delete-files": str(len(delete_files)),
-                "added-records": str(n_rows),
-                "added-position-deletes": str(n_del_rows),
-                **(summary_extra or {}),
-            },
-            "schema-id": md["current-schema-id"],
-        }
-    )
-    if branch is not None:
-        # snapshot-log is main's history (spec): branch commits move the
-        # ref only; the snapshot publishes to main via fast_forward
-        md["refs"][branch]["snapshot-id"] = snap_id
-    else:
-        md["snapshot-log"].append(
-            {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
-        )
-        md["current-snapshot-id"] = snap_id
-    md["last-sequence-number"] = seq
-    md["last-updated-ms"] = timestamp_ms
     if set_sort_order:
         # spec §Sort Orders: record how the rewritten files are clustered
         # so planners know the column-bound skipping is effective
@@ -1252,8 +1144,150 @@ def _commit_snapshot(
             existing = max(o["order-id"] for o in md["sort-orders"]) + 1
             md["sort-orders"].append({"order-id": existing, "fields": fields})
         md["default-sort-order-id"] = existing
-    _write_metadata(location, md, base_v + 1)
+    _commit_manifests(
+        location,
+        md,
+        base_v,
+        prior + new_manifests,
+        token=token,
+        parent=base_snap_id,
+        summary={
+            "operation": operation,
+            "added-data-files": str(len(data_files)),
+            "added-delete-files": str(len(delete_files)),
+            "added-records": str(rows.get(CONTENT_DATA, 0)),
+            "added-position-deletes": str(rows.get(CONTENT_DELETES, 0)),
+            **(summary_extra or {}),
+        },
+        timestamp_ms=timestamp_ms,
+        branch=branch,
+    )
     return snap_id
+
+
+def _write_manifest(
+    md: dict,
+    path: str,
+    entries: list[dict],
+    content: int,
+    *,
+    spec_id: int,
+    seq: int,
+    snap_id: int,
+    spec_fields: list[dict] = (),
+    result_types: list[str] = (),
+    min_seq: int | None = None,
+) -> dict:
+    """Write one manifest of `entries` (content DATA under partition spec
+    `spec_id`, or DELETES with no partition tuple) for snapshot `snap_id`
+    and return its manifest-list record: file and row counts by entry
+    status, and for a partitioned data manifest the per-field bound
+    summaries (spec §Manifest Lists, null-aware) that let a planner skip
+    the whole manifest without opening it."""
+    avro.write_container(
+        path,
+        _entry_schema_for(spec_fields, result_types)
+        if content == CONTENT_DATA
+        else _DELETE_ENTRY_SCHEMA,
+        entries,
+        metadata={
+            "schema": json.dumps(md["schemas"][md["current-schema-id"]]),
+            "partition-spec": json.dumps(list(spec_fields)),
+            "partition-spec-id": str(spec_id),
+            "format-version": "2",
+            "content": "data" if content == CONTENT_DATA else "deletes",
+        },
+    )
+    summaries = None
+    if spec_fields and entries:
+        summaries = []
+        for f, rtype in zip(spec_fields, result_types):
+            vals = [
+                (e["data_file"].get("partition") or {}).get(f["name"])
+                for e in entries
+            ]
+            nn = [v for v in vals if v is not None]
+            summaries.append(
+                {
+                    "contains_null": len(nn) < len(vals),
+                    "contains_nan": None,
+                    "lower_bound": _bound_bytes(rtype, min(nn)) if nn else None,
+                    "upper_bound": _bound_bytes(rtype, max(nn)) if nn else None,
+                }
+            )
+    added, existing = (
+        [e["data_file"]["record_count"] for e in entries if e["status"] == st]
+        for st in (ST_ADDED, ST_EXISTING)
+    )
+    return {
+        "manifest_path": path,
+        "manifest_length": os.path.getsize(path),
+        "partition_spec_id": spec_id,
+        "content": content,
+        "sequence_number": seq,
+        "min_sequence_number": seq if min_seq is None else min_seq,
+        "added_snapshot_id": snap_id,
+        "added_files_count": len(added),
+        "existing_files_count": len(existing),
+        "deleted_files_count": 0,
+        "added_rows_count": sum(added),
+        "existing_rows_count": sum(existing),
+        "deleted_rows_count": 0,
+        "partitions": summaries,
+    }
+
+
+def _commit_manifests(
+    location: str,
+    md: dict,
+    base_v: int,
+    manifests: list[dict],
+    *,
+    token: str,
+    parent: int,
+    summary: dict,
+    timestamp_ms: int,
+    branch: str | None = None,
+) -> None:
+    """Commit the next snapshot (id == sequence number) over `manifests`:
+    write its manifest list, append the snapshot record, advance main
+    (snapshot-log entry + current pointer) or the staging `branch`, bump
+    the sequence number and write metadata version `base_v` + 1."""
+    seq = snap_id = md["last-sequence-number"] + 1
+    list_path = os.path.join(_meta_dir(location), f"snap-{snap_id:020d}-{token}.avro")
+    avro.write_container(
+        list_path,
+        MANIFEST_FILE_SCHEMA,
+        manifests,
+        metadata={
+            "snapshot-id": str(snap_id),
+            "sequence-number": str(seq),
+            "format-version": "2",
+        },
+    )
+    md["snapshots"].append(
+        {
+            "snapshot-id": snap_id,
+            "parent-snapshot-id": parent if parent != -1 else None,
+            "sequence-number": seq,
+            "timestamp-ms": timestamp_ms,
+            "manifest-list": list_path,
+            "summary": summary,
+            "schema-id": md["current-schema-id"],
+        }
+    )
+    if branch is not None:
+        # snapshot-log is main's history (spec): branch commits move the
+        # ref only; the snapshot publishes to main via fast_forward
+        md["refs"][branch]["snapshot-id"] = snap_id
+    else:
+        md["snapshot-log"].append(
+            {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
+        )
+        md["current-snapshot-id"] = snap_id
+    md["last-sequence-number"] = seq
+    md["last-updated-ms"] = timestamp_ms
+    _write_metadata(location, md, base_v + 1)
 
 
 # ---------------------------------------------------------------------------
@@ -1444,6 +1478,130 @@ def _entry_pruned(part: dict, ranges: dict) -> bool:
     return False
 
 
+def _snapshot_range(
+    location: str,
+    *,
+    after_snapshot_id: int | None = None,
+    to_snapshot_id: int | None = None,
+    from_timestamp_ms: int | None = None,
+    partition_ranges: dict[str, tuple] | None = None,
+    files: str | None = "changes",
+) -> list[dict]:
+    """The one snapshot-range walk every incremental reader runs on, so
+    the stream, the changelog, the feed and the wire records resolve the
+    same snapshots and files for the same range (a replay resolves what
+    the first run did).  Returns, in commit order, MAIN's ancestry
+    (Iceberg's incremental-scan contract: snapshots staged on a branch or
+    stranded past a rollback are invisible until/unless published) with
+    after < sequence <= to — `after_snapshot_id` EXCLUSIVE, the resume
+    point; `to_snapshot_id` INCLUSIVE — skipping snapshots strictly older
+    than `from_timestamp_ms` (the initial-lookback analog, S3,
+    `scylla.initial.lookback.ms`):
+    [{snapshot_id, sequence_number, timestamp_ms, operation, data_files,
+      record_count, pos_delete_files, eq_delete_files: [{path,
+      equality_ids}], manifests_skipped, files_skipped}].
+
+    `files` picks what a snapshot delivers:
+    - None: nothing (the range only; no manifest is opened);
+    - "appends": the data files of "append" snapshots — the streaming
+      delivery rule (the jar path's streaming-skip-delete/overwrite-
+      snapshots): replace/delete/overwrite snapshots (manifest merges,
+      compaction, row-level deletes) are EMPTY batches, so lineage stays
+      monotone but no row is ever re-delivered, and their manifests are
+      never opened;
+    - "changes": data AND delete files of every snapshot but "replace"
+      ones — a delete/overwrite's deletes ARE the logical change, while
+      rewritten content (compaction, manifest and delete-file rewrites)
+      is not.
+    Only manifests the snapshot itself added are opened, and only their
+    ADDED entries count: a merged manifest (rewrite_manifests, or a real
+    Iceberg writer's merge) re-lists earlier snapshots' files as EXISTING
+    under a fresh added_snapshot_id — already delivered in their own
+    batch (EXISTING participates only in the full scans, scan_files).
+
+    `partition_ranges` ({partition_field: (lo, hi)} inclusive) prunes the
+    DATA side the same two metadata levels scan_files prunes batch reads
+    — the jarless analog of the reference's per-task `cdc$stream_id IN
+    (...)` scoping (ConfigSerializerUtil.java:39-52): whole manifests are
+    skipped unopened via the manifest-list field summaries, surviving
+    entries are filtered on their partition tuples, and each batch counts
+    `manifests_skipped` / `files_skipped`.  Delete files carry no
+    partition tuple in this writer, so the delete side never prunes (a
+    non-matching delete file only costs its metadata-scale read)."""
+    md = current_metadata(location)
+    ranges = partition_ranges or {}
+    specs = _specs_ctx(md) if ranges else {}
+    if ranges:
+        _check_ranges(ranges, specs)
+    after_seq = until_seq = None
+    if after_snapshot_id is not None:
+        try:
+            after_seq = _resolve_snapshot(md, after_snapshot_id)["sequence-number"]
+        except ValueError:
+            raise ValueError(
+                f"resume snapshot {after_snapshot_id} not in table history "
+                "(expired?); re-run with from_timestamp_ms"
+            ) from None
+    if to_snapshot_id is not None:
+        until_seq = _resolve_snapshot(md, to_snapshot_id)["sequence-number"]
+    main_line = _ancestors_of(md, md["current-snapshot-id"])
+    out = []
+    for s in sorted(md["snapshots"], key=lambda s: s["sequence-number"]):
+        seq = s["sequence-number"]
+        if (
+            s["snapshot-id"] not in main_line
+            or (after_seq is not None and seq <= after_seq)
+            or (until_seq is not None and seq > until_seq)
+            or (from_timestamp_ms is not None and s["timestamp-ms"] < from_timestamp_ms)
+        ):
+            continue
+        op = s.get("summary", {}).get("operation", "append")
+        b = {
+            "snapshot_id": s["snapshot-id"],
+            "sequence_number": seq,
+            "timestamp_ms": s["timestamp-ms"],
+            "operation": op,
+            "data_files": [],
+            "record_count": 0,
+            "pos_delete_files": [],
+            "eq_delete_files": [],
+            "manifests_skipped": 0,
+            "files_skipped": 0,
+        }
+        out.append(b)
+        if not {"appends": op == "append", "changes": op != "replace"}.get(files):
+            continue
+        for mf in avro.read_container(s["manifest-list"])[2]:
+            if mf["added_snapshot_id"] != s["snapshot-id"]:
+                continue
+            if mf["content"] == CONTENT_DATA:
+                if _manifest_pruned(mf, specs, ranges):
+                    b["manifests_skipped"] += 1
+                    continue
+            elif files == "appends":
+                continue
+            for e in avro.read_container(mf["manifest_path"])[2]:
+                if e["status"] != ST_ADDED:
+                    continue
+                df_ = e["data_file"]
+                if df_["content"] == CONTENT_DATA:
+                    if ranges and _entry_pruned(df_.get("partition") or {}, ranges):
+                        b["files_skipped"] += 1
+                        continue
+                    b["data_files"].append(df_["file_path"])
+                    b["record_count"] += df_["record_count"]
+                elif df_["content"] == CONTENT_POSITION_DELETES:
+                    b["pos_delete_files"].append(df_["file_path"])
+                elif df_["content"] == CONTENT_EQUALITY_DELETES:
+                    b["eq_delete_files"].append(
+                        {
+                            "path": df_["file_path"],
+                            "equality_ids": list(df_.get("equality_ids") or []),
+                        }
+                    )
+    return out
+
+
 def added_files(
     location: str,
     *,
@@ -1453,105 +1611,27 @@ def added_files(
 ) -> list[dict]:
     """Resolve the data files each snapshot ADDED, in commit order:
     [{snapshot_id, sequence_number, timestamp_ms, files: [paths],
-      record_count}].  `after_snapshot_id` resumes past consumed snapshots
-    (exclusive); `from_timestamp_ms` is the initial-lookback analog
-    (S3, `scylla.initial.lookback.ms`) — snapshots strictly older are
-    skipped.
-
-    Incremental-delivery rules (the jar path's streaming-skip-delete/
-    overwrite-snapshots semantics):
-    - only snapshots whose summary operation is "append" deliver rows;
-      replace/delete/overwrite snapshots (manifest merges, compaction,
-      row-level deletes) surface as EMPTY batches so lineage stays
-      monotone but no row is ever re-delivered;
-    - within an append snapshot, only entries with status == ADDED in
-      manifests this snapshot added count.  A merged manifest written by
-      a real Iceberg writer carries the prior snapshots' files as
-      status=EXISTING under a fresh added_snapshot_id — those rows were
-      already consumed in their own batch and are skipped here (EXISTING
-      participates only in the current-snapshot full scan, scan_files/
-      live_files).
-
-    `partition_ranges` ({partition_field: (lo, hi)} inclusive) prunes the
-    STREAMING path the same two metadata levels scan_files prunes batch
-    reads — the jarless analog of the reference's per-task
-    `cdc$stream_id IN (...)` scoping (ConfigSerializerUtil.java:39-52):
-    whole manifests are skipped unopened via the manifest-list field
-    summaries, surviving entries are filtered on their partition tuples.
-    Each batch dict carries `manifests_skipped` / `files_skipped`
-    counters so pruning effectiveness is observable per snapshot."""
-    md = current_metadata(location)
-    ranges = partition_ranges or {}
-    specs = _specs_ctx(md) if ranges else {}
-    if ranges:
-        _check_ranges(ranges, specs)
-    out = []
-    after_seq = None
-    snaps = snapshots(location)
-    if after_snapshot_id is not None:
-        for s in snaps:
-            if s["snapshot-id"] == after_snapshot_id:
-                after_seq = s["sequence-number"]
-                break
-        else:
-            raise ValueError(
-                f"resume snapshot {after_snapshot_id} not in table history "
-                "(expired?); re-run with from_timestamp_ms"
-            )
-    # incremental reads follow MAIN's ancestry (Iceberg's incremental
-    # scan contract): snapshots staged on a branch (write-audit-publish)
-    # or stranded past a rollback are invisible until/unless published
-    main_line = _ancestors_of(md, md["current-snapshot-id"])
-    for s in snaps:
-        if s["snapshot-id"] not in main_line:
-            continue
-        if after_seq is not None and s["sequence-number"] <= after_seq:
-            continue
-        if (
-            from_timestamp_ms is not None
-            and s["timestamp-ms"] < from_timestamp_ms
-        ):
-            continue
-        files, n_rows = [], 0
-        manifests_skipped = files_skipped = 0
-        if s.get("summary", {}).get("operation", "append") == "append":
-            _, _, manifests = avro.read_container(s["manifest-list"])
-            for mf in manifests:
-                if mf["content"] != CONTENT_DATA:
-                    continue  # delete manifest: never new rows
-                # only manifests this snapshot added: prior manifests carry
-                # earlier snapshots' files, already consumed in their batch
-                if mf["added_snapshot_id"] != s["snapshot-id"]:
-                    continue
-                if _manifest_pruned(mf, specs, ranges):
-                    manifests_skipped += 1
-                    continue
-                _, _, entries = avro.read_container(mf["manifest_path"])
-                for e in entries:
-                    # ADDED only: a merged manifest re-lists earlier
-                    # snapshots' files as EXISTING — already consumed
-                    if e["status"] != ST_ADDED:
-                        continue
-                    df = e["data_file"]
-                    if df["content"] != CONTENT_DATA:
-                        continue
-                    if ranges and _entry_pruned(df.get("partition") or {}, ranges):
-                        files_skipped += 1
-                        continue
-                    files.append(df["file_path"])
-                    n_rows += df["record_count"]
-        out.append(
-            {
-                "snapshot_id": s["snapshot-id"],
-                "sequence_number": s["sequence-number"],
-                "timestamp_ms": s["timestamp-ms"],
-                "files": files,
-                "record_count": n_rows,
-                "manifests_skipped": manifests_skipped,
-                "files_skipped": files_skipped,
-            }
+      record_count, manifests_skipped, files_skipped}] — the streaming
+    projection of `_snapshot_range` (see there for the bounds, the
+    append-only delivery rule and partition pruning)."""
+    return [
+        {
+            "snapshot_id": b["snapshot_id"],
+            "sequence_number": b["sequence_number"],
+            "timestamp_ms": b["timestamp_ms"],
+            "files": b["data_files"],
+            "record_count": b["record_count"],
+            "manifests_skipped": b["manifests_skipped"],
+            "files_skipped": b["files_skipped"],
+        }
+        for b in _snapshot_range(
+            location,
+            after_snapshot_id=after_snapshot_id,
+            from_timestamp_ms=from_timestamp_ms,
+            partition_ranges=partition_ranges,
+            files="appends",
         )
-    return out
+    ]
 
 
 def live_files(location: str) -> list[str]:
@@ -1763,18 +1843,28 @@ def _with_file_pos(spark, files: list[str], schema=None):
     )
 
 
-def _apply_position_deletes(spark, data_df, delete_files: list[str]):
-    """Filter rows named by position-delete files out of a (__fp, __pos)-
-    annotated scan: one broadcast LEFT ANTI join.  Delete sets are tiny
-    relative to data (CDC merge churn), so broadcast is the right 100-TB
-    plan; Iceberg's own readers do the same positional filtering
-    vectorized inside the scan."""
+def _live_rows(spark, location: str, plan: dict):
+    """Merge-on-read live rows of a scan plan (scan_files' result),
+    annotated with (__fp, __pos): the plan's data rows minus those its
+    position deletes name and those its equality deletes hit
+    (_apply_equality_deletes).  Position deletes apply as one broadcast
+    LEFT ANTI join: delete sets are tiny relative to data (CDC merge
+    churn), so broadcast is the right 100-TB plan; Iceberg's own readers
+    do the same positional filtering vectorized inside the scan."""
     from pyspark.sql import functions as F
 
-    dels = spark.read.parquet(*delete_files).select(
-        F.col("file_path").alias("__fp"), F.col("pos").alias("__pos")
-    )
-    return data_df.join(F.broadcast(dels), ["__fp", "__pos"], "left_anti")
+    out = _with_file_pos(spark, plan["files"])
+    if plan["delete_files"]:
+        dels = spark.read.parquet(*plan["delete_files"]).select(
+            F.col("file_path").alias("__fp"), F.col("pos").alias("__pos")
+        )
+        out = out.join(F.broadcast(dels), ["__fp", "__pos"], "left_anti")
+    if plan["equality_deletes"]:
+        md = current_metadata(location)
+        out = _apply_equality_deletes(
+            spark, out, plan, md["schemas"][md["current-schema-id"]]
+        )
+    return out
 
 
 def _apply_equality_deletes(spark, data_df, plan: dict, schema: dict):
@@ -1785,8 +1875,6 @@ def _apply_equality_deletes(spark, data_df, plan: dict, schema: dict):
     annotate each row with its file's sequence via a broadcast (file →
     seq) join, then one broadcast LEFT ANTI join per equality-column
     group with the `data_seq < delete_seq` condition folded in."""
-    import functools
-
     from pyspark.sql import functions as F
 
     id_to_name = {f["id"]: f["name"] for f in schema["fields"]}
@@ -1875,18 +1963,9 @@ def read_table(
         sch_id = snap.get("schema-id", md["current-schema-id"])
         sch = next(s for s in md["schemas"] if s["schema-id"] == sch_id)
         return spark.createDataFrame([], spark_schema_of(sch))
-    delete_files = plan["delete_files"] if apply_deletes else []
-    eq_deletes = plan["equality_deletes"] if apply_deletes else []
-    if not delete_files and not eq_deletes:
+    if not apply_deletes or not (plan["delete_files"] or plan["equality_deletes"]):
         return spark.read.parquet(*files)
-    out = _with_file_pos(spark, files)
-    if delete_files:
-        out = _apply_position_deletes(spark, out, delete_files)
-    if eq_deletes:
-        out = _apply_equality_deletes(
-            spark, out, plan, md["schemas"][md["current-schema-id"]]
-        )
-    return out.drop("__fp", "__pos")
+    return _live_rows(spark, location, plan).drop("__fp", "__pos")
 
 
 def read_changes(
@@ -1901,7 +1980,7 @@ def read_changes(
     """Incremental (changelog) read: every row APPENDED between the
     bounds, stamped with its commit provenance — the jar path's
     `option("start-snapshot-id", ...)` / `option("end-snapshot-id",
-    ...)` incremental scan.  Bounds follow added_files: start is
+    ...)` incremental scan, over `_snapshot_range`: start is
     EXCLUSIVE (`after_snapshot_id`) or timestamp-based
     (`from_timestamp_ms`); `to_snapshot_id` is INCLUSIVE.  Rows from
     replace/delete/overwrite snapshots never appear (compaction and
@@ -1917,28 +1996,17 @@ def read_changes(
     `_sequence_number`, `_commit_timestamp_ms` columns."""
     from pyspark.sql import functions as F
 
-    batches = added_files(
-        location,
-        after_snapshot_id=after_snapshot_id,
-        from_timestamp_ms=from_timestamp_ms,
-        partition_ranges=partition_ranges,
-    )
-    if to_snapshot_id is not None:
-        if not any(b["snapshot_id"] == to_snapshot_id for b in batches):
-            # bound must exist in history (it may carry no files)
-            _resolve_snapshot(
-                current_metadata(location), snapshot_id=to_snapshot_id
-            )
-        until = next(
-            b["sequence_number"]
-            for b in added_files(location)
-            if b["snapshot_id"] == to_snapshot_id
-        )
-        batches = [b for b in batches if b["sequence_number"] <= until]
     rows = [
         (f, b["snapshot_id"], b["sequence_number"], b["timestamp_ms"])
-        for b in batches
-        for f in b["files"]
+        for b in _snapshot_range(
+            location,
+            after_snapshot_id=after_snapshot_id,
+            to_snapshot_id=to_snapshot_id,
+            from_timestamp_ms=from_timestamp_ms,
+            partition_ranges=partition_ranges,
+            files="appends",
+        )
+        for f in b["data_files"]
     ]
     if not rows:
         sch = current_spark_schema(location)
@@ -1972,118 +2040,6 @@ _CHANGELOG_COLS = (
     "_sequence_number",
     "_commit_timestamp_ms",
 )
-
-
-def _changelog_batches(
-    location: str,
-    *,
-    after_snapshot_id: int | None = None,
-    from_timestamp_ms: int | None = None,
-    to_snapshot_id: int | None = None,
-    partition_ranges: dict[str, tuple] | None = None,
-) -> list[dict]:
-    """Per-snapshot changelog manifest resolution over MAIN's ancestry:
-    for each snapshot in the (exclusive after / inclusive to] range, the
-    data files and position-delete files it ADDED plus a count of added
-    equality-delete files.  Unlike `added_files` (streaming delivery:
-    append snapshots only), delete/overwrite snapshots contribute here —
-    their deletes ARE the logical change.  "replace" snapshots (compaction,
-    manifest rewrites, delete-file rewrites) contribute nothing: rewritten
-    content is not a change.  `partition_ranges` prunes DATA manifests/
-    entries the same two metadata levels the other readers prune (skip
-    counters per batch); delete files carry no partition tuples in this
-    writer, so the delete side never prunes (a non-matching delete file
-    only costs its metadata-scale read)."""
-    md = current_metadata(location)
-    ranges = partition_ranges or {}
-    specs = _specs_ctx(md) if ranges else {}
-    if ranges:
-        _check_ranges(ranges, specs)
-    snaps = snapshots(location)
-    after_seq = None
-    if after_snapshot_id is not None:
-        for s in snaps:
-            if s["snapshot-id"] == after_snapshot_id:
-                after_seq = s["sequence-number"]
-                break
-        else:
-            raise ValueError(
-                f"start snapshot {after_snapshot_id} not in table history "
-                "(expired?); re-run with from_timestamp_ms"
-            )
-    until_seq = None
-    if to_snapshot_id is not None:
-        until_seq = _resolve_snapshot(md, snapshot_id=to_snapshot_id)[
-            "sequence-number"
-        ]
-    main_line = _ancestors_of(md, md["current-snapshot-id"])
-    out = []
-    for s in snaps:
-        if s["snapshot-id"] not in main_line:
-            continue
-        if after_seq is not None and s["sequence-number"] <= after_seq:
-            continue
-        if until_seq is not None and s["sequence-number"] > until_seq:
-            continue
-        if (
-            from_timestamp_ms is not None
-            and s["timestamp-ms"] < from_timestamp_ms
-        ):
-            continue
-        op = s.get("summary", {}).get("operation", "append")
-        data_files: list[str] = []
-        pos_delete_files: list[str] = []
-        eq_delete_files: list[dict] = []
-        manifests_skipped = files_skipped = 0
-        if op != "replace":
-            _, _, manifests = avro.read_container(s["manifest-list"])
-            for mf in manifests:
-                if mf["added_snapshot_id"] != s["snapshot-id"]:
-                    continue
-                if (
-                    ranges
-                    and mf["content"] == CONTENT_DATA
-                    and _manifest_pruned(mf, specs, ranges)
-                ):
-                    manifests_skipped += 1
-                    continue
-                _, _, entries = avro.read_container(mf["manifest_path"])
-                for e in entries:
-                    if e["status"] != ST_ADDED:
-                        continue
-                    df_ = e["data_file"]
-                    if df_["content"] == CONTENT_DATA:
-                        if ranges and _entry_pruned(
-                            df_.get("partition") or {}, ranges
-                        ):
-                            files_skipped += 1
-                            continue
-                        data_files.append(df_["file_path"])
-                    elif df_["content"] == CONTENT_POSITION_DELETES:
-                        pos_delete_files.append(df_["file_path"])
-                    elif df_["content"] == CONTENT_EQUALITY_DELETES:
-                        eq_delete_files.append(
-                            {
-                                "path": df_["file_path"],
-                                "equality_ids": list(
-                                    df_.get("equality_ids") or []
-                                ),
-                            }
-                        )
-        out.append(
-            {
-                "snapshot_id": s["snapshot-id"],
-                "sequence_number": s["sequence-number"],
-                "timestamp_ms": s["timestamp-ms"],
-                "operation": op,
-                "data_files": data_files,
-                "pos_delete_files": pos_delete_files,
-                "eq_delete_files": eq_delete_files,
-                "manifests_skipped": manifests_skipped,
-                "files_skipped": files_skipped,
-            }
-        )
-    return out
 
 
 def read_changelog(
@@ -2182,7 +2138,7 @@ def read_changelog(
             if to_ref not in refs:
                 raise ValueError(f"no ref {to_ref!r} (have {sorted(refs)})")
             to_snapshot_id = refs[to_ref]["snapshot-id"]
-    batches = _changelog_batches(
+    batches = _snapshot_range(
         location,
         after_snapshot_id=after_snapshot_id,
         from_timestamp_ms=from_timestamp_ms,
@@ -2258,7 +2214,7 @@ def read_changelog(
         # delete of the same key); the bounded-history walk happens ONLY
         # here — a position-only range never pays it (a (file, pos) can
         # die exactly once, so pre-range state is irrelevant there)
-        hist = _changelog_batches(
+        hist = _snapshot_range(
             location,
             to_snapshot_id=to_snapshot_id,
             partition_ranges=partition_ranges,
@@ -2340,8 +2296,6 @@ def read_changelog(
         # e.g. a range whose only content is equality deletes over a
         # history with no data rows: nothing changed row-wise
         return spark.createDataFrame([], out_schema)
-    import functools
-
     out = functools.reduce(lambda a, b: a.unionByName(b), parts)
     if identifier_columns:
         missing_keys = [c for c in identifier_columns if c not in data_cols]
@@ -2378,8 +2332,6 @@ def _changelog_eq_kills(
     arbitrary older files).  Compaction resets this cost: replace
     snapshots contribute nothing and post-compaction ranges walk only
     the rewritten history."""
-    import functools
-
     import pyarrow.parquet as pq  # noqa: F401  (parity with caller env)
     from pyspark.sql import functions as F
 
@@ -2707,15 +2659,8 @@ def delete_where(spark, location: str, condition, *, timestamp_ms: int = 0) -> i
     plan = scan_files(location)
     if not plan["files"]:
         return -1
-    data = _with_file_pos(spark, plan["files"])
-    if plan["delete_files"]:
-        # already-deleted rows must not be re-targeted
-        data = _apply_position_deletes(spark, data, plan["delete_files"])
-    if plan["equality_deletes"]:
-        md = current_metadata(location)
-        data = _apply_equality_deletes(
-            spark, data, plan, md["schemas"][md["current-schema-id"]]
-        )
+    # already-deleted rows must not be re-targeted
+    data = _live_rows(spark, location, plan)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     hits = data.where(cond).select(
         F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
@@ -2874,12 +2819,8 @@ def metadata_table(spark, location: str, kind: str):
 
     # manifest-list-backed kinds
     manifests = []
-    if md["current-snapshot-id"] != -1:
-        cur = next(
-            s
-            for s in md["snapshots"]
-            if s["snapshot-id"] == md["current-snapshot-id"]
-        )
+    cur = _resolve_snapshot(md)
+    if cur is not None:
         _, _, manifests = avro.read_container(cur["manifest-list"])
     if kind == "manifests":
         schema = S(
@@ -3098,8 +3039,8 @@ def compact_table(
     delete manifests drop out of scan planning, and the files they
     referenced become reclaimable by expire_snapshots once no retained
     snapshot references them.  The streaming path sees the replace
-    snapshot as an empty heartbeat batch (added_files delivers rows only
-    from append snapshots) — compaction never re-delivers rows.
+    snapshot as an empty heartbeat batch and the changelog skips it
+    (_snapshot_range) — compaction never re-delivers rows.
 
     `sort_by` clusters the rewrite (spec §Sort Orders, recorded in table
     metadata): unpartitioned tables are RANGE-repartitioned on the sort
@@ -3353,6 +3294,28 @@ def fast_forward(
     return target_id
 
 
+def _referenced_files(
+    snaps: list[dict], cache: dict
+) -> tuple[set[str], set[tuple[str, bool]]]:
+    """(manifest paths, {(file path, is a delete file)}) that `snaps`'
+    manifest lists reference.  `cache` maps a manifest path to its file
+    pairs across calls: the same manifest appears in every later
+    snapshot's list, and is read once."""
+    mpaths: set[str] = set()
+    fpaths: set[tuple[str, bool]] = set()
+    for snap in snaps:
+        for mf in avro.read_container(snap["manifest-list"])[2]:
+            mp = mf["manifest_path"]
+            mpaths.add(mp)
+            if mp not in cache:
+                cache[mp] = [
+                    (e["data_file"]["file_path"], mf["content"] == CONTENT_DELETES)
+                    for e in avro.read_container(mp)[2]
+                ]
+            fpaths.update(cache[mp])
+    return mpaths, fpaths
+
+
 def expire_snapshots(
     location: str,
     *,
@@ -3378,9 +3341,11 @@ def expire_snapshots(
     snapshots older than the cutoff AND beyond the newest K expire
     (Iceberg's expire_snapshots(older_than, retain_last) contract).
 
-    A consumer whose resume point was expired anyway gets the explicit
-    `added_files` "resume snapshot ... not in table history (expired?)"
-    error on its next drain, never silent re-delivery or a gap.
+    A consumer whose resume point was expired anyway gets an explicit
+    error on its next pass, never silent re-delivery or a gap: the
+    snapshot-range walk's "resume snapshot ... not in table history
+    (expired?)" (stream, changelog, read_changes) or
+    materialize_increment's "hwm snapshot ... expired" (feed, records).
 
     Returns {snapshots_expired, manifests_deleted, data_files_deleted,
     delete_files_deleted, bytes_reclaimed, metadata_versions_deleted};
@@ -3419,42 +3384,12 @@ def expire_snapshots(
     if not expired:
         return stats
 
-    # referenced-path sets; manifest reads cached (the same manifest
-    # path appears in every later snapshot's manifest list)
-    file_cache: dict[str, list[tuple[str, bool]]] = {}
-
-    def refs(snap):
-        _, _, manifests = avro.read_container(snap["manifest-list"])
-        mpaths, fpaths = set(), set()
-        for mf in manifests:
-            mp = mf["manifest_path"]
-            mpaths.add(mp)
-            if mp not in file_cache:
-                _, _, entries = avro.read_container(mp)
-                file_cache[mp] = [
-                    (
-                        e["data_file"]["file_path"],
-                        mf["content"] == CONTENT_DELETES,
-                    )
-                    for e in entries
-                ]
-            fpaths.update(file_cache[mp])
-        return mpaths, fpaths
-
-    keep_m: set[str] = set()
-    keep_f: set[tuple[str, bool]] = set()
-    for s in retained:
-        mp, fp = refs(s)
-        keep_m |= mp
-        keep_f |= fp
-    dead_m: set[str] = set()
-    dead_f: set[tuple[str, bool]] = set()
-    dead_lists: list[str] = []
-    for s in expired:
-        mp, fp = refs(s)
-        dead_m |= mp - keep_m
-        dead_f |= fp - keep_f
-        dead_lists.append(s["manifest-list"])
+    cache: dict[str, list[tuple[str, bool]]] = {}
+    keep_m, keep_f = _referenced_files(retained, cache)
+    dead_m, dead_f = _referenced_files(expired, cache)
+    dead_m -= keep_m
+    dead_f -= keep_f
+    dead_lists = [s["manifest-list"] for s in expired]
 
     keep_fpaths = {p for p, _ in keep_f}
     doomed_paths = (
@@ -3536,22 +3471,14 @@ def remove_orphan_files(
     are version-managed by expire_snapshots/commits, never orphans).
     Returns {orphans_deleted, bytes_reclaimed, files_scanned};
     dry_run computes the same stats deleting nothing."""
-    md = current_metadata(location)
-    referenced: set[str] = set()
-    manifest_cache: set[str] = set()
-    for s in md.get("snapshots", []):
-        ml = s["manifest-list"]
-        referenced.add(os.path.abspath(ml))
-        _, _, manifests = avro.read_container(ml)
-        for mf in manifests:
-            mp = mf["manifest_path"]
-            referenced.add(os.path.abspath(mp))
-            if mp in manifest_cache:
-                continue
-            manifest_cache.add(mp)
-            _, _, entries = avro.read_container(mp)
-            for e in entries:
-                referenced.add(os.path.abspath(e["data_file"]["file_path"]))
+    snaps = current_metadata(location).get("snapshots", [])
+    mpaths, fpaths = _referenced_files(snaps, {})
+    referenced = {
+        os.path.abspath(p)
+        for p in [s["manifest-list"] for s in snaps]
+        + list(mpaths)
+        + [p for p, _ in fpaths]
+    }
 
     stats = {"orphans_deleted": 0, "bytes_reclaimed": 0, "files_scanned": 0}
     candidates: list[str] = []
@@ -3610,10 +3537,11 @@ def rewrite_manifests(
     strictly-older rule survives the rewrite).  Data entries are sorted
     by partition tuple before chunking so the new manifests stay tight
     under the manifest-list field summaries and manifest-level pruning
-    keeps skipping.  The commit is one `operation="replace"` snapshot:
-    `added_files` delivers rows only from "append" snapshots and only
-    status=ADDED entries of manifests the snapshot itself added, so a
-    streaming consumer sees an empty heartbeat — never re-delivery (the
+    keeps skipping.  The commit is one `operation="replace"` snapshot,
+    and the snapshot-range walk (_snapshot_range) opens no manifest of a
+    replace snapshot and counts only status=ADDED entries of manifests a
+    snapshot itself added, so a streaming consumer sees an empty
+    heartbeat and the changelog nothing — never re-delivery (the
     exact scenario ADVICE r4 #1 warned about with real-writer merges,
     now exercised first-party).  Replaced manifests stay on disk for
     time travel until `expire_snapshots` reclaims them.
@@ -3629,13 +3557,10 @@ def rewrite_manifests(
         "manifests_created": 0,
         "entries_rewritten": 0,
     }
-    if md["current-snapshot-id"] == -1:
+    cur = _resolve_snapshot(md)
+    if cur is None:
         return stats
-    cur = next(
-        s for s in md["snapshots"] if s["snapshot-id"] == md["current-snapshot-id"]
-    )
     _, _, manifests = avro.read_container(cur["manifest-list"])
-    schema = md["schemas"][md["current-schema-id"]]
     specs_by_id = {s["spec-id"]: s["fields"] for s in md["partition-specs"]}
     union_sch = _union_schema(md)
     seq = md["last-sequence-number"] + 1
@@ -3649,22 +3574,21 @@ def rewrite_manifests(
     # is its own spec's — entries of different specs cannot share one
     # manifest); delete manifests carry no partition tuple in this
     # writer, so they merge as one group
-    groups: list[tuple[int, int, str, list[dict]]] = []
+    groups: list[tuple[int, int, list[dict]]] = []
     data_by_spec: dict[int, list[dict]] = {}
     for mf in manifests:
         if mf["content"] == CONTENT_DATA:
             data_by_spec.setdefault(mf.get("partition_spec_id", 0), []).append(mf)
     for spec_id in sorted(data_by_spec):
-        groups.append((CONTENT_DATA, spec_id, "data", data_by_spec[spec_id]))
+        groups.append((CONTENT_DATA, spec_id, data_by_spec[spec_id]))
     groups.append(
         (
             CONTENT_DELETES,
             md["default-spec-id"],
-            "deletes",
             [mf for mf in manifests if mf["content"] == CONTENT_DELETES],
         )
     )
-    for content, spec_id, tag, group in groups:
+    for content, spec_id, group in groups:
         spec_fields = specs_by_id.get(spec_id, []) if content == CONTENT_DATA else []
         result_types = [
             _partition_result_type(f, union_sch) for f in spec_fields
@@ -3708,80 +3632,30 @@ def rewrite_manifests(
                     )
                 )
             )
-        entry_schema = (
-            _entry_schema_for(spec_fields, result_types)
-            if content == CONTENT_DATA
-            else _DELETE_ENTRY_SCHEMA
-        )
         if not entries:
             # every merged manifest held only dead entries: they simply
             # drop out of the new list, no replacement manifest needed
             stats["manifests_replaced"] += len(mergeable)
             continue
+        suffix = f"-s{spec_id}" if content == CONTENT_DATA else "-d"
         for ci in range(0, len(entries), target_entries):
-            chunk = entries[ci : ci + target_entries]
-            suffix = f"-s{spec_id}" if content == CONTENT_DATA else "-d"
-            manifest_path = os.path.join(
-                mdir,
-                f"manifest-{snap_id:020d}-{token}-m{ci // target_entries}"
-                f"{suffix}.avro",
-            )
-            avro.write_container(
-                manifest_path,
-                entry_schema,
-                chunk,
-                metadata={
-                    "schema": json.dumps(schema),
-                    "partition-spec": json.dumps(
-                        spec_fields if content == CONTENT_DATA else []
-                    ),
-                    "partition-spec-id": str(spec_id),
-                    "format-version": "2",
-                    "content": tag,
-                },
-            )
-            summaries = None
-            if content == CONTENT_DATA and spec_fields and chunk:
-                summaries = []
-                for f, rtype in zip(spec_fields, result_types):
-                    vals = [
-                        (e["data_file"].get("partition") or {}).get(f["name"])
-                        for e in chunk
-                    ]
-                    nn = [v for v in vals if v is not None]
-                    summaries.append(
-                        {
-                            "contains_null": len(nn) < len(vals),
-                            "contains_nan": None,
-                            "lower_bound": (
-                                _bound_bytes(rtype, min(nn)) if nn else None
-                            ),
-                            "upper_bound": (
-                                _bound_bytes(rtype, max(nn)) if nn else None
-                            ),
-                        }
-                    )
             created.append(
-                {
-                    "manifest_path": manifest_path,
-                    "manifest_length": os.path.getsize(manifest_path),
-                    "partition_spec_id": spec_id,
-                    "content": content,
-                    "sequence_number": seq,
-                    "min_sequence_number": (
-                        min_seq if min_seq is not None else seq
+                _write_manifest(
+                    md,
+                    os.path.join(
+                        mdir,
+                        f"manifest-{snap_id:020d}-{token}-m{ci // target_entries}"
+                        f"{suffix}.avro",
                     ),
-                    "added_snapshot_id": snap_id,
-                    "added_files_count": 0,
-                    "existing_files_count": len(chunk),
-                    "deleted_files_count": 0,
-                    "added_rows_count": 0,
-                    "existing_rows_count": sum(
-                        e["data_file"]["record_count"] for e in chunk
-                    ),
-                    "deleted_rows_count": 0,
-                    "partitions": summaries,
-                }
+                    entries[ci : ci + target_entries],
+                    content,
+                    spec_id=spec_id,
+                    seq=seq,
+                    snap_id=snap_id,
+                    spec_fields=spec_fields,
+                    result_types=result_types,
+                    min_seq=min_seq,
+                )
             )
         stats["manifests_replaced"] += len(mergeable)
         stats["entries_rewritten"] += len(entries)
@@ -3790,41 +3664,22 @@ def rewrite_manifests(
     stats["manifests_kept"] = len(kept)
     stats["manifests_created"] = len(created)
 
-    list_path = os.path.join(mdir, f"snap-{snap_id:020d}-{token}.avro")
-    avro.write_container(
-        list_path,
-        MANIFEST_FILE_SCHEMA,
+    _commit_manifests(
+        location,
+        md,
+        base_v,
         kept + created,
-        metadata={
-            "snapshot-id": str(snap_id),
-            "sequence-number": str(seq),
-            "format-version": "2",
+        token=token,
+        parent=cur["snapshot-id"],
+        summary={
+            "operation": "replace",
+            "manifests-replaced": str(stats["manifests_replaced"]),
+            "manifests-kept": str(stats["manifests_kept"]),
+            "manifests-created": str(stats["manifests_created"]),
+            "entries-processed": str(stats["entries_rewritten"]),
         },
+        timestamp_ms=timestamp_ms,
     )
-    md["snapshots"].append(
-        {
-            "snapshot-id": snap_id,
-            "parent-snapshot-id": md["current-snapshot-id"],
-            "sequence-number": seq,
-            "timestamp-ms": timestamp_ms,
-            "manifest-list": list_path,
-            "summary": {
-                "operation": "replace",
-                "manifests-replaced": str(stats["manifests_replaced"]),
-                "manifests-kept": str(stats["manifests_kept"]),
-                "manifests-created": str(stats["manifests_created"]),
-                "entries-processed": str(stats["entries_rewritten"]),
-            },
-            "schema-id": md["current-schema-id"],
-        }
-    )
-    md["snapshot-log"].append(
-        {"snapshot-id": snap_id, "timestamp-ms": timestamp_ms}
-    )
-    md["current-snapshot-id"] = snap_id
-    md["last-sequence-number"] = seq
-    md["last-updated-ms"] = timestamp_ms
-    _write_metadata(location, md, base_v + 1)
     stats["snapshot_id"] = snap_id
     return stats
 
@@ -4015,14 +3870,7 @@ def maintain_iceberg_table(
         increment.mark_applied(location, [bid], 0)
     if rewrite_manifests_every and committed:
         md = current_metadata(location)
-        cur = next(
-            (
-                s
-                for s in md["snapshots"]
-                if s["snapshot-id"] == md["current-snapshot-id"]
-            ),
-            None,
-        )
+        cur = _resolve_snapshot(md)
         if cur is not None:
             _, _, mfs = avro.read_container(cur["manifest-list"])
             if len(mfs) >= rewrite_manifests_every:
@@ -4163,20 +4011,10 @@ def maintain_latest_state_mirror(
                 create_table(location, live.schema)
             # stale images of keys touched this pass -> row-level deletes
             hits = None
-            has_prior = not first_time and bool(scan_files(location)["files"])
+            plan = None if first_time else scan_files(location)
+            has_prior = plan is not None and bool(plan["files"])
             if has_prior and delete_mode == "position":
-                plan = scan_files(location)
-                cur = _with_file_pos(spark, plan["files"])
-                if plan["delete_files"]:
-                    cur = _apply_position_deletes(
-                        spark, cur, plan["delete_files"]
-                    )
-                if plan["equality_deletes"]:
-                    md_ = current_metadata(location)
-                    cur = _apply_equality_deletes(
-                        spark, cur, plan, md_["schemas"][md_["current-schema-id"]]
-                    )
-                hits = cur.join(
+                hits = _live_rows(spark, location, plan).join(
                     F.broadcast(upserts.select(*pk)), pk, "left_semi"
                 ).select(
                     F.col("__fp").alias("file_path"),
@@ -4303,8 +4141,11 @@ def materialize_increment(
       of `out_dir/<state_name>`, so a crash anywhere replays at most one
       pass, never duplicates or skips a snapshot;
     - replace snapshots advance the hwm without rows (maintenance never
-      disturbs consumers); an EXPIRED hwm refuses loudly downstream in
-      read_changelog (the retention-gap rule every consumer follows).
+      disturbs consumers); an EXPIRED hwm refuses loudly with a named
+      "hwm snapshot ... expired" error (the retention-gap rule every
+      consumer follows);
+    - the pass's snapshots are `_snapshot_range(after=hwm, to=head)`, the
+      walk the stream and the changelog resolve ranges with.
 
     Returns {"consumed": [snapshot ids], "rows": n, "hwm": head}."""
     from pyspark.sql import functions as F
@@ -4321,43 +4162,32 @@ def materialize_increment(
     last = st.get("hwm")
     if head == -1 or head == last:
         return {"consumed": [], "rows": 0, "hwm": last}
-    line = _ancestors_of(md, head)
-    last_seq = None
-    if last is not None:
-        last_seq = next(
-            (
-                x["sequence-number"]
-                for x in md["snapshots"]
-                if x["snapshot-id"] == last
-            ),
-            None,
-        )
-        if last_seq is None:
-            raise ValueError(
-                f"hwm snapshot {last} of {state_path} expired from table "
-                "history; re-seed the output directory or widen "
-                "expire_snapshots keep_last"
+    try:
+        new_snaps = [
+            b["snapshot_id"]
+            for b in _snapshot_range(
+                location, after_snapshot_id=last, to_snapshot_id=head, files=None
             )
-    new_snaps = [
-        s["snapshot-id"]
-        for s in snapshots(location)
-        if s["snapshot-id"] in line
-        and (last_seq is None or s["sequence-number"] > last_seq)
-    ]
+        ]
+    except ValueError:
+        raise ValueError(
+            f"hwm snapshot {last} of {state_path} expired from table "
+            "history; re-seed the output directory or widen "
+            "expire_snapshots keep_last"
+        ) from None
     os.makedirs(out_dir, exist_ok=True)
     n = 0
     if new_snaps:
         out = build_df(last, head)
         if "batch" not in out.columns:
             out = out.withColumn("batch", F.col("_commit_snapshot_id"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         out.persist()
         try:
-            out.write.mode("overwrite").partitionBy("batch").parquet(out_dir)
+            out.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("batch").parquet(out_dir)
             n = out.count()
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             out.unpersist()
     increment.write_json_atomic(state_path, {**identity, "hwm": head})
     return {"consumed": new_snaps, "rows": n, "hwm": head}
@@ -4557,7 +4387,7 @@ def evolve_partition_spec(
     written data files keep the spec they were written under; only files
     appended AFTER this commit are laid out (and must be partition-pure)
     under the new spec.  Readers handle the mix per manifest: each
-    manifest prunes with its own spec (scan_files/added_files resolve
+    manifest prunes with its own spec (scan_files/_snapshot_range resolve
     `partition_spec_id` per manifest-list record), predicates map through
     EVERY spec's fields (partition_filter_for/partition_range_filter_for),
     and a range on a field some file's spec lacks never prunes that file.

@@ -143,24 +143,15 @@ def materialize_latest(
         # is one Iceberg MERGE INTO and the checkpoint disappears.
         merged = merged.repartition(max(1, len(affected)), "bucket")
         merged = merged.localCheckpoint(eager=True)
-        prev_dyn = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            from scylla_cdc_source_connector_spark.tuning import (
-                payload_write_options,
-            )
+        from scylla_cdc_source_connector_spark.tuning import payload_write_options
 
-            # materialized rows carry the audio payload — byte-sized row
-            # groups keep every bucket splittable for downstream scans
-            payload_write_options(
-                merged.write.mode("overwrite").partitionBy("bucket")
-            ).parquet(data_dir)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_dyn
-            )
+        # materialized rows carry the audio payload — byte-sized row
+        # groups keep every bucket splittable for downstream scans
+        payload_write_options(
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+        ).parquet(data_dir)
         increment.mark_applied(target_dir, todo, n)
         return n
     finally:

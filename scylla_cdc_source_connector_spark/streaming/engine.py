@@ -727,10 +727,12 @@ def run_adhoc_resnapshot(
         floor = min([b for b in committed_batch_ids(cfg) if b < 0], default=0)
         return {"request_id": request_id, "base": floor - n_chunks}
 
-    # a different n_chunks would re-chunk the key space
+    # the file name folds request ids that differ only outside
+    # [A-Za-z0-9_-], so the pin carries the id itself; a different
+    # n_chunks would re-chunk the key space
     block = increment.pin(
         os.path.join(cfg.lineage_dir, f"_resnapshot_{safe}.json"),
-        {"n_chunks": n_chunks},
+        {"request_id": request_id, "n_chunks": n_chunks},
         what="resnapshot request",
         init=allocate,
     )

@@ -986,20 +986,6 @@ def expire_emitted(
     return expired
 
 
-def max_consumed_time_us(cfg: EngineConfig, generation: int) -> dict[str, int]:
-    """Per-shard high-water mark for a generation — the gate input for
-    generation rollover (areTasksFullyConsumedUntil,
-    ScyllaMasterTransport.java:50-70)."""
-    hwm: dict[str, int] = {}
-    for rec in read_lineage(cfg):
-        for s in rec["shards"]:
-            if s["generation"] == generation:
-                hwm[s["shard_id"]] = max(
-                    hwm.get(s["shard_id"], 0), s["window_end_us"]
-                )
-    return hwm
-
-
 #: Writer properties for the production Iceberg emit path — the exact set
 #: iceberg_emit applies (documented here because the sandbox carries no
 #: Iceberg runtime jar; see engine.iceberg_available).

@@ -2914,6 +2914,30 @@ def test_adhoc_resnapshot(spark, tmp_root):
         run_adhoc_resnapshot(spark, cfg, mir, "sig-1", keys=targets, n_chunks=5)
 
 
+def test_adhoc_resnapshot_request_ids_sharing_a_pin_file(spark, tmp_root):
+    """Request ids that map to one pin file name (`a/b` and `a_b`) are
+    told apart: the second request refuses to resume the first one's
+    batch-id block instead of silently emitting nothing."""
+    from scylla_cdc_source_connector_spark.streaming.engine import (
+        run_adhoc_resnapshot,
+    )
+
+    pdf = make_changelog(FixtureSpec(n_events=120, n_clips=20, n_shards=2))
+    loc, _ = _ice_table(tmp_root, pdf, "ice_resnap_ids_src", n_snaps=1)
+    cfg = _cfg(tmp_root, "ice_resnap_ids")
+    run_iceberg_meta_stream(spark, cfg, loc)
+    mir = f"{tmp_root}/ice_resnap_ids_mirror"
+    im.maintain_latest_state_mirror(spark, cfg, mir)
+    key = im.read_table(spark, mir).select("clip_id").first()["clip_id"]
+
+    first = run_adhoc_resnapshot(spark, cfg, mir, "a/b", keys=[key], n_chunks=1)
+    assert first["n_rows"] == 1
+    with pytest.raises(ValueError, match="belongs to resnapshot request"):
+        run_adhoc_resnapshot(spark, cfg, mir, "a_b", keys=[key], n_chunks=1)
+    again = run_adhoc_resnapshot(spark, cfg, mir, "a/b", keys=[key], n_chunks=1)
+    assert again["chunks_run"] == [] and again["batch_ids"] == first["batch_ids"]
+
+
 # ---------------------------------------------------------------------------
 # round 5 (final session): row-level changelog reads + delete-file rewrite
 # ---------------------------------------------------------------------------
@@ -3602,7 +3626,7 @@ def test_read_changelog_partition_scoped(spark, tmp_root):
     }
     assert rows_a | rows_b == full and rows_a.isdisjoint(rows_b)
     # pruning is observable at the metadata level
-    batches = im._changelog_batches(loc, partition_ranges=ra)
+    batches = im._snapshot_range(loc, partition_ranges=ra)
     assert sum(b["files_skipped"] + b["manifests_skipped"] for b in batches) > 0
 
 
