@@ -12,6 +12,9 @@ Checks encode the scale invariants the engine is designed around:
   4. salted aggregation = exactly two exchanges (salted partial + combine)
   5. the streaming sink's own per-batch plan, replay markers included =
      ONE exchange, no join, and a marker scan that reads no payload
+  6. one sink call on a batch with output and no pending rows = THREE
+     Spark jobs (the ordered write's two under AQE + one shard-stats
+     read-back that reads no payload and has no exchange)
 """
 
 from __future__ import annotations
@@ -54,6 +57,69 @@ def audit(df, name: str) -> dict:
         print("PushedFilters:", p[:200])
     print()
     return out
+
+
+def audit_sink_jobs(spark, cfg) -> None:
+    """Invariant 6: run the correlating sink once on a static batch of
+    whole write batches (output, no pending rows) and count its Spark jobs
+    through the status tracker."""
+    import dataclasses
+
+    from scylla_cdc_source_connector_spark.fixtures import (
+        FixtureSpec,
+        make_changelog,
+        write_changelog_chunk,
+    )
+    from scylla_cdc_source_connector_spark.schemas import DEFAULT_TABLE
+    from scylla_cdc_source_connector_spark.streaming import sink as sink_mod
+
+    root = "/tmp/sccs_plan_audit_sink"
+    shutil.rmtree(root, ignore_errors=True)
+    os.makedirs(f"{root}/in")
+    write_changelog_chunk(
+        make_changelog(FixtureSpec(n_events=400, n_clips=80, n_shards=4)),
+        f"{root}/in/part-0.parquet",
+    )
+    cfg = dataclasses.replace(
+        cfg, output_dir=f"{root}/out", lineage_dir=f"{root}/lineage"
+    )
+    batch = spark.read.schema(DEFAULT_TABLE.changelog_schema()).parquet(
+        f"{root}/in"
+    )
+    sc = spark.sparkContext
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    first_exec = sql_store.executionsCount()
+    sc.setJobGroup("plan_audit_sink", "one correlating-sink call")
+    try:
+        sink_mod.make_correlating_sink(cfg)(batch, 0)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    rec = sink_mod.read_lineage_one(cfg, 0)
+    assert rec["n_records"] > 0 and not rec["has_pending"], rec
+    jobs = sc.statusTracker().getJobIdsForGroup("plan_audit_sink")
+    print("===== streaming sink: one micro-batch")
+    print(f"spark jobs: {len(jobs)}")
+    assert len(jobs) == 3, f"sink micro-batch must run 3 Spark jobs, ran {len(jobs)}"
+    execs = sql_store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(first_exec, execs.size())
+    ]
+    out = sink_mod.batch_output_path(cfg, 0)
+    readback = [
+        p for p in plans
+        if re.search(r"Location: \w+ \[\S*" + re.escape(out) + r"\]", p)
+    ]
+    assert len(readback) == 1, "expected one read-back of the batch output"
+    schema = re.search(r"ReadSchema: (.*)", readback[0]).group(1)
+    print("read-back ReadSchema:", schema)
+    print()
+    assert "bytes" not in schema and "transcript" not in schema, (
+        "the shard-stats read-back must not read the payload"
+    )
+    assert "Exchange" not in readback[0], "the read-back must not shuffle"
+    shutil.rmtree(root, ignore_errors=True)
 
 
 def main() -> None:
@@ -154,6 +220,7 @@ def main() -> None:
         "marker scan must read the slim key columns only"
     )
     shutil.rmtree(emitted_dir, ignore_errors=True)
+    audit_sink_jobs(spark, cfg_full)
 
     # composed training recipe: ONE plan tree (no self-join re-executing
     # the upstream), exactly THREE exchanges — correlation, latest-state

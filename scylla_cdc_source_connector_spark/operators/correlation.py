@@ -25,10 +25,12 @@ recognised by OP_EMITTED marker rows (`mark_emitted=True`).
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from scylla_cdc_source_connector_spark.config import EngineConfig
+from scylla_cdc_source_connector_spark.operators.memo import column_memo
 from scylla_cdc_source_connector_spark.schemas import (
     DEFAULT_TABLE,
     DELTA_OPS,
@@ -152,6 +154,32 @@ def correlate_batch(
     column: True for a group holding an OP_EMITTED marker row, i.e. one
     a committed micro-batch already emitted.
     """
+    cluster, keys, aggs = _correlation(
+        changelog.sparkSession.sparkContext,
+        delta_values,
+        delta_flags,
+        table,
+        cluster_by_stream,
+        mark_emitted,
+    )
+    if cluster is not None:
+        changelog = changelog.repartition(cluster)
+    agg = changelog.groupBy(*keys).agg(*aggs)
+    return agg if not require_delta else agg.filter(F.col("delta").isNotNull())
+
+
+@column_memo
+def _correlation(
+    sc: SparkContext,
+    delta_values: bool,
+    delta_flags: bool,
+    table: TableModel,
+    cluster_by_stream: bool,
+    mark_emitted: bool,
+) -> tuple[Column | None, tuple[Column, ...], tuple[Column, ...]]:
+    """correlate_batch's (repartition key, group keys, aggregations).  They
+    depend on the options and the table only, never on a batch, so they
+    are built once per SparkContext (operators/memo.py)."""
     op = F.col("`cdc$operation`")
     seq = F.col("`cdc$batch_seq_no`")
     base_struct = F.struct(*[F.col(f"`{c}`") for c in table.base_columns])
@@ -168,12 +196,12 @@ def correlate_batch(
 
     pk_cols = [f"`{c}`" for c in table.pk_columns]
     if cluster_by_stream:
-        grouped = changelog.repartition(F.col("`cdc$stream_id`")).groupBy(
-            "`cdc$stream_id`", "generation", *pk_cols, "`cdc$time`"
-        )
+        cluster = F.col("`cdc$stream_id`")
+        keys = ["`cdc$stream_id`", "generation", *pk_cols, "`cdc$time`"]
         tail_aggs = [F.max("`cdc$time_us`").alias("cdc$time_us")]
     else:
-        grouped = changelog.groupBy(*pk_cols, "`cdc$time`")
+        cluster = None
+        keys = [*pk_cols, "`cdc$time`"]
         tail_aggs = [
             F.max("`cdc$time_us`").alias("cdc$time_us"),
             F.max("`cdc$stream_id`").alias("cdc$stream_id"),
@@ -181,14 +209,13 @@ def correlate_batch(
         ]
     if mark_emitted:
         tail_aggs.append(F.bool_or(op.eqNullSafe(OP_EMITTED)).alias("emitted"))
-    agg = grouped.agg(
+    aggs = (
         last(op == OP_PRE_IMAGE, base_struct).alias("pre_image"),
         last(op == OP_POST_IMAGE, base_struct).alias("post_image"),
         last(op.isin(list(DELTA_OPS)), delta_struct).alias("delta"),
         *tail_aggs,
     )
-    return agg if not require_delta else agg.filter(F.col("delta").isNotNull())
-
+    return cluster, tuple(F.col(k) for k in keys), aggs
 
 
 def mask_unused_images(correlated: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -198,16 +225,25 @@ def mask_unused_images(correlated: DataFrame, cfg: EngineConfig) -> DataFrame:
     After stores no preImage :275-340).  Even if the changelog carries the
     image rows, they must not leak into the output when the include mode
     doesn't request them."""
-    out = correlated
-    if not cfg.needs_preimage:
-        out = out.withColumn(
-            "pre_image", F.lit(None).cast(out.schema["pre_image"].dataType)
-        )
-    if not cfg.needs_postimage:
-        out = out.withColumn(
-            "post_image", F.lit(None).cast(out.schema["post_image"].dataType)
-        )
-    return out
+    masks = _image_masks(
+        correlated.sparkSession.sparkContext,
+        cfg.needs_preimage,
+        cfg.needs_postimage,
+    )
+    return correlated.withColumns(dict(masks)) if masks else correlated
+
+
+@column_memo
+def _image_masks(
+    sc: SparkContext, keep_pre: bool, keep_post: bool
+) -> tuple[tuple[str, Column], ...]:
+    """mask_unused_images' (image, always-NULL image) pairs: `when(false,
+    image)` is NULL typed like the image, so no schema lookup is needed."""
+    return tuple(
+        (image, F.when(F.lit(False), F.col(image)))
+        for image, keep in (("pre_image", keep_pre), ("post_image", keep_post))
+        if not keep
+    )
 
 
 def is_complete_expr(

@@ -1,0 +1,34 @@
+"""The one memo of Column builders.
+
+Building a Column costs Py4J round trips, and PySpark adds a few more to
+every `pyspark.sql.functions` call to capture its call site.  The
+streaming sink applies the same Columns to every micro-batch, so the
+builders whose Columns depend on hashable settings only are wrapped in
+`column_memo` and a query pays for its plan once, not once per batch:
+
+- bounded: 32 entries per builder (a process runs a handful of queries);
+- thread-safe (functools.lru_cache): the concurrent queries of
+  connector.run_tables share it;
+- the SparkContext the Columns are built on is an argument of every
+  memoized builder, so a Column built on a stopped context is never
+  handed out (a new context is a new key);
+- a builder keyed by an EngineConfig is called with `plan_settings(cfg)`:
+  no Column reads the config's paths, so a query on a new output dir
+  (each generation of engine.run_generations, a fresh namespace) with
+  the same settings reuses the plan instead of building it on its first
+  batch.
+"""
+
+from __future__ import annotations
+
+import dataclasses
+import functools
+
+from scylla_cdc_source_connector_spark.config import EngineConfig
+
+column_memo = functools.lru_cache(maxsize=32)
+
+
+def plan_settings(cfg: EngineConfig) -> EngineConfig:
+    """cfg without its paths: the memo key of a cfg-keyed builder."""
+    return dataclasses.replace(cfg, checkpoint_dir="", output_dir="", lineage_dir="")

@@ -31,6 +31,7 @@ ScyllaChangeRecordEmitter.java:
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -40,6 +41,10 @@ from scylla_cdc_source_connector_spark.config import (
     PkPlacement,
 )
 from scylla_cdc_source_connector_spark.operators.change_typing import op_code_expr
+from scylla_cdc_source_connector_spark.operators.memo import (
+    column_memo,
+    plan_settings,
+)
 from scylla_cdc_source_connector_spark.schemas import (
     DEFAULT_TABLE,
     OP_CODE_CREATE,
@@ -139,6 +144,32 @@ def build_envelopes(
     headers, plus passthrough partition/ordering columns (cdc$stream_id,
     cdc$time, cdc$time_us, generation, clip_id, batch_seq) for the sink.
     """
+    if processing_ts_ms is None:
+        cols, tombstones = _default_envelope(
+            correlated.sparkSession.sparkContext, plan_settings(cfg), table
+        )
+    else:
+        cols, tombstones = _envelope(cfg, processing_ts_ms, table)
+    env = correlated.select(*cols)
+    if tombstones is not None:
+        env = env.select(tombstones).select("r.*")
+    return env
+
+
+@column_memo
+def _default_envelope(
+    sc: SparkContext, cfg: EngineConfig, table: TableModel
+) -> tuple[tuple[Column, ...], Column | None]:
+    """_envelope with processing-time ts_ms: the envelope plan the
+    streaming sink applies to every micro-batch, built once per
+    SparkContext (operators/memo.py)."""
+    return _envelope(cfg, None, table)
+
+
+def _envelope(
+    cfg: EngineConfig, processing_ts_ms: Column | None, table: TableModel
+) -> tuple[tuple[Column, ...], Column | None]:
+    """build_envelopes' (select list, tombstone explode or None)."""
     cfg.validate()
     if processing_ts_ms is None:
         # top-level ts_ms is processing time; lag = ts_ms - source.ts_ms
@@ -236,24 +267,25 @@ def build_envelopes(
         value_fields.append(payload_key.alias(cfg.payload_key_name))
     value_fields.append(processing_ts_ms.cast("long").alias("ts_ms"))
 
-    env = correlated.select(
-        F.lit(cfg.topic).alias("topic"),
-        key,
-        F.struct(*value_fields).alias("value"),
-        headers,
-        *[F.col(f"`{c}`") for c in table.pk_columns],
-        F.col("`cdc$stream_id`"),
-        F.col("`cdc$time`"),
-        F.col("`cdc$time_us`"),
-        F.col("generation"),
-        delta["cdc$batch_seq_no"].alias("cdc$batch_seq_no"),
+    cols = {
+        "topic": F.lit(cfg.topic).alias("topic"),
+        "key": key,
+        "value": F.struct(*value_fields).alias("value"),
+        "headers": headers,
+        **{c: F.col(f"`{c}`") for c in table.pk_columns},
+        "cdc$stream_id": F.col("`cdc$stream_id`"),
+        "cdc$time": F.col("`cdc$time`"),
+        "cdc$time_us": F.col("`cdc$time_us`"),
+        "generation": F.col("generation"),
+        "cdc$batch_seq_no": delta["cdc$batch_seq_no"].alias("cdc$batch_seq_no"),
+    }
+    tombstones = (
+        _tombstone_explode(list(cols)) if cfg.tombstones_on_delete else None
     )
-    if cfg.tombstones_on_delete:
-        env = append_tombstones(env)
-    return env
+    return tuple(cols.values()), tombstones
 
 
-def append_tombstones(envelopes: DataFrame) -> DataFrame:
+def _tombstone_explode(columns: list[str]) -> Column:
     """Debezium `tombstones.on.delete`: after each delete envelope, a
     record with the same topic/key and a NULL value, so log-compacted
     Kafka topics drop the row.  The reference inherits this from the
@@ -268,11 +300,14 @@ def append_tombstones(envelopes: DataFrame) -> DataFrame:
     Shape: ONE pass — each row explodes into [row] or [row, tombstone].
     (A filter+union would reference the upstream plan twice and run the
     correlation aggregation once per branch; explode keeps a single
-    execution of the aggregation, no extra shuffle.)"""
+    execution of the aggregation, no extra shuffle.)
+
+    Returns the explode Column aliased `r` over envelope columns
+    `columns`; select it, then select `r.*`."""
 
     def _variant(value_expr, seq_expr) -> Column:
         fields = []
-        for c in envelopes.columns:
+        for c in columns:
             if c == "value":
                 fields.append(value_expr.alias(c))
             elif c == "cdc$batch_seq_no":
@@ -283,10 +318,9 @@ def append_tombstones(envelopes: DataFrame) -> DataFrame:
 
     seq = F.col("`cdc$batch_seq_no`")
     row = _variant(F.col("value"), seq)
-    tomb = _variant(
-        F.lit(None).cast(envelopes.schema["value"].dataType), seq + 1
-    )
+    # always-NULL value typed like the value itself: no schema lookup
+    tomb = _variant(F.when(F.lit(False), F.col("value")), seq + 1)
     arr = F.when(
         F.col("value.op") == OP_CODE_DELETE, F.array(row, tomb)
     ).otherwise(F.array(row))
-    return envelopes.select(F.explode(arr).alias("r")).select("r.*")
+    return F.explode(arr).alias("r")

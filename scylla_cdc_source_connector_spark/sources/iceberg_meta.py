@@ -2762,12 +2762,15 @@ def metadata_table(spark, location: str, kind: str):
             ]
         )
         by_id = {s["snapshot-id"]: s for s in md["snapshots"]}
+        # a snapshot a rollback moved past stays retained but is no
+        # longer on the current snapshot's parent chain
+        ancestors = _ancestors_of(md, md.get("current-snapshot-id"))
         rows = [
             (
                 e["timestamp-ms"],
                 e["snapshot-id"],
                 by_id.get(e["snapshot-id"], {}).get("parent-snapshot-id"),
-                e["snapshot-id"] in by_id,  # linear history: retained ⇒ ancestor
+                e["snapshot-id"] in ancestors,
             )
             for e in md.get("snapshot-log", [])
         ]

@@ -338,14 +338,15 @@ def run_iceberg_meta_stream(
 
     Returns {"consumed": [snapshot ids run this call],
              "skipped": [snapshot ids already committed],
-             "emitted_total": rows in the exactly-once view afterwards,
+             "emitted_total": rows in the exactly-once view afterwards
+               (sink.emitted_count, a lineage fold — no Spark job),
              "manifests_skipped": pruned-unopened manifest count,
              "files_skipped": entry-level pruned file count}.
     """
     from scylla_cdc_source_connector_spark.sources import iceberg_meta
     from scylla_cdc_source_connector_spark.streaming.sink import (
         committed_batch_ids,
-        read_emitted,
+        emitted_count,
         stamp_source,
     )
 
@@ -438,7 +439,7 @@ def run_iceberg_meta_stream(
     return {
         "consumed": consumed,
         "skipped": skipped,
-        "emitted_total": read_emitted(spark, cfg).count(),
+        "emitted_total": emitted_count(cfg),
         "manifests_skipped": manifests_skipped,
         "files_skipped": files_skipped,
     }
@@ -503,7 +504,6 @@ def run_initial_snapshot_then_stream(
         _commit_lineage,
         _write_batch,
         lineage_path,
-        read_emitted,
         stamp_source,
     )
 
@@ -539,8 +539,10 @@ def run_initial_snapshot_then_stream(
     stamp_source(cfg, identity)
 
     # ---- retention-gap guard: the stream must pick up at hwm + 1 ----
+    # (the range walk with files=None reads the metadata JSON only)
     surviving = sorted(
-        b["sequence_number"] for b in iceberg_meta.added_files(changelog_location)
+        b["sequence_number"]
+        for b in iceberg_meta._snapshot_range(changelog_location, files=None)
     )
     newer = [s for s in surviving if s > hwm]
     if newer and newer[0] > hwm + 1 and hwm + 1 not in surviving:
@@ -604,8 +606,7 @@ def run_initial_snapshot_then_stream(
         "snapshot_hwm": hwm,
         "snapshot_chunks_run": snapshot_chunks_run,
         "snapshot_rows": snapshot_rows,
-        **stream,
-        "emitted_total": read_emitted(spark, cfg).count(),
+        **stream,  # its emitted_total counts the backfill batches too
     }
 
 

@@ -32,11 +32,18 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from scylla_cdc_source_connector_spark.config import EngineConfig
+from scylla_cdc_source_connector_spark.operators.memo import (
+    column_memo,
+    plan_settings,
+)
 from scylla_cdc_source_connector_spark.retry import with_retries
 from scylla_cdc_source_connector_spark.schemas import DEFAULT_TABLE, TableModel
 from scylla_cdc_source_connector_spark.streaming import increment
@@ -116,6 +123,17 @@ def read_emitted(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(*paths)
+
+
+def emitted_count(cfg: EngineConfig) -> int:
+    """Rows in the exactly-once view (read_emitted) with no Spark job: the
+    lineage `n_records` of the committed batches whose output dir still
+    exists — the same rule read_emitted lists its paths by."""
+    return sum(
+        read_lineage_one(cfg, bid)["n_records"]
+        for bid in committed_batch_ids(cfg)
+        if os.path.isdir(batch_output_path(cfg, bid))
+    )
 
 
 def quarantine_path(cfg: EngineConfig, batch_id: int) -> str:
@@ -268,8 +286,6 @@ def emitted_markers(
     emitted: the slim key columns (cdc$stream_id, generation, pk...,
     cdc$time, cdc$time_us) read with an explicit schema — no inference
     job, and the payload is never scanned."""
-    from pyspark.sql.types import StructType
-
     from scylla_cdc_source_connector_spark.schemas import OP_EMITTED
 
     cl = table.changelog_schema()
@@ -280,6 +296,76 @@ def emitted_markers(
         spark.read.schema(StructType([cl[c] for c in keys]))
         .parquet(*paths)
         .withColumn("cdc$operation", F.lit(OP_EMITTED))
+    )
+
+
+@dataclass(frozen=True)
+class _SinkPlan:
+    """The sink's own Columns of its per-batch plan (the correlation and
+    envelope Columns are memoized by their operators).
+
+    None of them depends on a batch: a micro-batch applies them to its own
+    DataFrames and builds only the Columns that carry its values (the
+    confidence-window, marker and expiry floors)."""
+
+    arrived: Column  # rows-arrived Observation aggregate
+    status: tuple[Column, ...]  # max_ev / n_inc Observation aggregates
+    emit: Column  # complete and not marked
+    rank: Column  # per-shard admission order (budget cap)
+    inc_aggs: tuple[Column, ...]  # the incomplete-keys status plan
+    inc_open: Column
+
+
+@column_memo
+def _sink_plan(cfg: EngineConfig, table: TableModel, sc: SparkContext) -> _SinkPlan:
+    from pyspark.sql import Window
+
+    from scylla_cdc_source_connector_spark.operators.correlation import (
+        is_complete_expr,
+    )
+    from scylla_cdc_source_connector_spark.schemas import (
+        DELTA_OPS,
+        OP_EMITTED,
+        OP_POST_IMAGE,
+        OP_PRE_IMAGE,
+    )
+
+    fresh = ~F.col("emitted")
+    complete = is_complete_expr(cfg)
+    op = F.col("`cdc$operation`")
+    seq = F.col("`cdc$batch_seq_no`")
+    is_delta = op.isin(list(DELTA_OPS))
+    done = is_complete_expr(
+        cfg,
+        op=F.col("__delta_op"),
+        has_pre=F.col("__n_pre") > 0,
+        has_post=F.col("__n_post") > 0,
+    )
+    admission = Window.partitionBy("`cdc$stream_id`").orderBy(
+        "`cdc$time_us`",
+        "`cdc$batch_seq_no`",
+        *[f"`{c}`" for c in table.pk_columns],
+    )
+    return _SinkPlan(
+        arrived=F.count(F.lit(1)).alias("n_arrived"),
+        status=(
+            F.max("`cdc$time_us`").alias("max_ev"),
+            F.count(F.when(fresh & ~complete, F.lit(1))).alias("n_inc"),
+        ),
+        emit=fresh & complete,
+        rank=F.row_number().over(admission),
+        inc_aggs=(
+            F.count(F.when(op == OP_PRE_IMAGE, F.lit(1))).alias("__n_pre"),
+            F.count(F.when(op == OP_POST_IMAGE, F.lit(1))).alias("__n_post"),
+            # op of the LAST delta (by batch seq) — matches correlate_batch's
+            # last-one-wins slot
+            F.max_by(F.when(is_delta, op), F.when(is_delta, seq)).alias(
+                "__delta_op"
+            ),
+            F.max("`cdc$time_us`").alias("__ev_us"),
+            F.bool_or(op.eqNullSafe(OP_EMITTED)).alias("__emitted"),
+        ),
+        inc_open=~done & ~F.col("__emitted"),
     )
 
 
@@ -300,10 +386,11 @@ def sink_envelopes(
     (`max_ev`) and the count of incomplete unmarked groups (`n_inc`).
 
     The markers ride the correlation's ONE exchange (the repartition on
-    cdc$stream_id), so the plan has no join and no second exchange."""
+    cdc$stream_id), so the plan has no join and no second exchange.  The
+    operators' Columns come from their memos (operators/memo.py), so a
+    repeat batch builds none of them."""
     from scylla_cdc_source_connector_spark.operators.correlation import (
         correlate_batch,
-        is_complete_expr,
         mask_unused_images,
         needs_delta_flags,
     )
@@ -311,6 +398,8 @@ def sink_envelopes(
         build_envelopes,
     )
 
+    sc = rows.sparkSession.sparkContext
+    plan = _sink_plan(plan_settings(cfg), table, sc)
     if markers is not None:
         rows = rows.unionByName(markers, allowMissingColumns=True)
     # require_delta=False: groups whose delta hasn't arrived yet
@@ -328,15 +417,9 @@ def sink_envelopes(
         ),
         cfg,
     )
-    fresh = ~F.col("emitted")
-    complete = is_complete_expr(cfg)
     if obs is not None:
-        corr = corr.observe(
-            obs,
-            F.max("`cdc$time_us`").alias("max_ev"),
-            F.count(F.when(fresh & ~complete, F.lit(1))).alias("n_inc"),
-        )
-    return build_envelopes(corr.filter(fresh & complete), cfg, table=table)
+        corr = corr.observe(obs, *plan.status)
+    return build_envelopes(corr.filter(plan.emit), cfg, table=table)
 
 
 def _window_markers(
@@ -396,6 +479,20 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
     hwm = max event time seen so far (the engine-maintained watermark,
     persisted in lineage as `max_event_us` — the streaming analog of the
     confidence window S2).
+
+    Plan: every costly Column of the per-batch plan that carries no
+    batch's own values is built once per query, by the module-level memos
+    of operators/memo.py: the correlation aggregations and image masks
+    (operators.correlation), the envelope select list (operators.
+    projection), the Observation aggregates, completeness filter,
+    admission rank and incomplete-keys aggregations (`_sink_plan`, keyed
+    by the cfg's settings without its paths, table and SparkContext) and
+    the shard-stats aggregations (`_shard_stat_aggs`).  The memos live
+    outside this closure, so the new sink run_iceberg_meta_stream builds
+    on every pass reuses them, as does a query on a new output dir, and a
+    restart that adopts a new schema (a new TableModel) builds its own.
+    A micro-batch builds only the confidence-window, marker and expiry
+    floors and its two Observations.
     """
     os.makedirs(cfg.lineage_dir, exist_ok=True)
     os.makedirs(cfg.output_dir, exist_ok=True)
@@ -406,6 +503,7 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
         if os.path.exists(lineage_path(cfg, batch_id)):
             return  # replayed, already-committed batch: idempotent no-op
         spark = raw_df.sparkSession
+        plan = _sink_plan(plan_settings(cfg), table, spark.sparkContext)
 
         # resume state comes from the LATEST committed lineage record only:
         # hwm is monotone, and a later batch without pending means earlier
@@ -422,7 +520,7 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
         # true per-batch arrival count and metrics need not guess how many
         # times the source was rescanned (numInputRows multiplies per scan)
         obs_in = Observation(f"sink-arrived-{batch_id}")
-        raw_df = raw_df.observe(obs_in, F.count(F.lit(1)).alias("n_arrived"))
+        raw_df = raw_df.observe(obs_in, plan.arrived)
         # confidence-window enforcement (S2): drop input rows older than the
         # watermark = max event time of prior batches − confidence window,
         # exactly Spark's withWatermark semantics (watermark advances at
@@ -439,21 +537,14 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
         ):
             pdir = pending_path(cfg, prev_pending)
             # pending rows may predate a schema adoption (restart after
-            # ALTER TABLE): reconcile them to the CURRENT model — adopted
-            # columns surface as NULL, dropped columns vanish — the same
-            # rule the source read applies (ScyllaSchema.
-            # updateChangeSchema analog, latest observed schema wins)
-            pend_df = spark.read.parquet(pdir)
-            have = set(pend_df.columns)
-            pend_df = pend_df.select(
-                *[
-                    F.col(f"`{f.name}`")
-                    if f.name in have
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in raw_df.schema.fields
-                ]
+            # ALTER TABLE): they are read with the CURRENT input schema —
+            # adopted columns surface as NULL, dropped columns vanish — the
+            # same rule the source read applies (ScyllaSchema.
+            # updateChangeSchema analog, latest observed schema wins); the
+            # explicit schema also spares a footer-inference job
+            all_rows = raw_df.unionByName(
+                spark.read.schema(raw_df.schema).parquet(pdir)
             )
-            all_rows = raw_df.unionByName(pend_df)
             # footer-only count of the carried backlog (no Spark job);
             # feeds the provably-nothing-deferred skip below
             import pyarrow.parquet as _pq
@@ -484,19 +575,12 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
         deferred = None
         budget = cfg.max_records_per_trigger_per_shard
         if budget and budget > 0:
-            from pyspark.sql import Window
-
             # the ranking window is consumed twice (admitted + deferred), so
             # THIS path does persist — the budget cap bounds the batch size,
             # keeping the cache small by construction
             all_rows.persist()
             cached = all_rows
-            w_adm = Window.partitionBy("`cdc$stream_id`").orderBy(
-                "`cdc$time_us`",
-                "`cdc$batch_seq_no`",
-                *[f"`{c}`" for c in table.pk_columns],
-            )
-            ranked = all_rows.withColumn("__rn", F.row_number().over(w_adm))
+            ranked = all_rows.withColumn("__rn", plan.rank)
             deferred = ranked.filter(F.col("__rn") > budget).drop("__rn")
             all_rows = ranked.filter(F.col("__rn") <= budget).drop("__rn")
 
@@ -515,7 +599,7 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
             obs = Observation(f"sink-status-{batch_id}")
             env = sink_envelopes(all_rows, markers, cfg, table, obs=obs)
             # the ONE payload pass: scan → correlate → envelope → ordered
-            # write (stats come off a pruned read-back inside _write_batch)
+            # write (stats come off a slim read-back inside _write_batch)
             phases: dict[str, float] = {}
             t_ph = time.time()
             n, shards, n_quar, n_dups = _write_batch(
@@ -638,43 +722,53 @@ def _incomplete_group_keys(
     (ScyllaChangesConsumer.java:147-185).  Replaces the former
     per-group key collection through the Observation: key volume now
     scales on executors, never on the driver."""
-    from scylla_cdc_source_connector_spark.operators.correlation import (
-        is_complete_expr,
-    )
-    from scylla_cdc_source_connector_spark.schemas import (
-        DELTA_OPS,
-        OP_EMITTED,
-        OP_POST_IMAGE,
-        OP_PRE_IMAGE,
-    )
-
+    sc = all_rows.sparkSession.sparkContext
+    plan = _sink_plan(plan_settings(cfg), table, sc)
     if markers is not None:
         all_rows = all_rows.unionByName(markers, allowMissingColumns=True)
-    op = F.col("`cdc$operation`")
-    seq = F.col("`cdc$batch_seq_no`")
-    is_delta = op.isin(list(DELTA_OPS))
-    group_keys = [*table.pk_columns, "cdc$time"]
-    st = all_rows.groupBy(*[f"`{c}`" for c in group_keys]).agg(
-        F.count(F.when(op == OP_PRE_IMAGE, F.lit(1))).alias("__n_pre"),
-        F.count(F.when(op == OP_POST_IMAGE, F.lit(1))).alias("__n_post"),
-        # op of the LAST delta (by batch seq) — matches correlate_batch's
-        # last-one-wins slot
-        F.max_by(F.when(is_delta, op), F.when(is_delta, seq)).alias(
-            "__delta_op"
-        ),
-        F.max("`cdc$time_us`").alias("__ev_us"),
-        F.bool_or(op.eqNullSafe(OP_EMITTED)).alias("__emitted"),
-    )
-    done = is_complete_expr(
-        cfg,
-        op=F.col("__delta_op"),
-        has_pre=F.col("__n_pre") > 0,
-        has_post=F.col("__n_post") > 0,
-    )
+    group_keys = [f"`{c}`" for c in (*table.pk_columns, "cdc$time")]
     ttl_floor = hwm - cfg.incomplete_task_timeout_ms * 1000
-    return st.filter(
-        ~done & ~F.col("__emitted") & (F.col("__ev_us") >= F.lit(ttl_floor))
-    ).select(*[f"`{c}`" for c in group_keys])
+    return (
+        all_rows.groupBy(*group_keys)
+        .agg(*plan.inc_aggs)
+        .filter(plan.inc_open & (F.col("__ev_us") >= ttl_floor))
+        .select(*group_keys)
+    )
+
+
+@column_memo
+def _shard_stat_aggs(table: TableModel, sc: SparkContext) -> tuple[Column, ...]:
+    """_write_batch's per-shard aggregations (lineage `shards` records)."""
+    return (
+        F.min("`cdc$time_us`").alias("window_start_us"),
+        F.max("`cdc$time_us`").alias("window_end_us"),
+        # single-pk tables record the raw id; composite keys a
+        # pipe-joined rendering (lineage is a JSON progress record,
+        # not a resume key — offsets live in the checkpoint)
+        F.max_by(
+            F.concat_ws(
+                "|",
+                *[F.col(f"`{c}`").cast("string") for c in table.pk_columns],
+            ),
+            "`cdc$time_us`",
+        ).alias("last_change_clip_id"),
+        F.count("*").alias("n_records"),
+        # per-op tallies ride the same slim pass and land in lineage
+        # so the Debezium streaming-metrics analog (metrics.
+        # connector_metrics: TotalNumberOfCreate/Update/Delete
+        # EventsSeen) is a driver-only fold, no rescan
+        F.count(F.when(F.col("value.op") == "c", 1)).alias("n_creates"),
+        F.count(F.when(F.col("value.op") == "u", 1)).alias("n_updates"),
+        F.count(F.when(F.col("value.op") == "d", 1)).alias("n_deletes"),
+    )
+
+
+#: the most written rows the shard-stats read-back scans in ONE task.  A
+#: single partition needs no exchange, so the stats are one Spark job
+#: instead of three; past this size the parallel read is faster (4 local
+#: cores: at 200,000 rows both take ~0.5 s, at 4,000,000 rows one task
+#: takes 1.4-1.9 s and the parallel read 0.5-0.6 s)
+_ONE_TASK_READBACK_ROWS = 200_000
 
 
 def _write_batch(
@@ -683,20 +777,28 @@ def _write_batch(
     cfg: EngineConfig,
     table: TableModel = DEFAULT_TABLE,
     stream_clustered: bool = False,
-) -> tuple[int, list[dict]]:
+) -> tuple[int, list[dict], int, int]:
     """Idempotent per-batch output write + per-shard offset stats
     (shared by make_correlating_sink and the snapshot backfills).
 
     The envelope plan executes ONCE, on the ordered write itself; the
-    per-shard offset stats then come from a column-pruned scan of the
-    parquet just written (4 metadata columns out of a payload-bearing
-    row — the read-back never touches the audio bytes), which doubles as
-    the emptiness probe.  (Running isEmpty / write / stats as three
-    separate actions re-executed the whole upstream plan — in the
-    correlating sink that re-ran the correlation aggregation — three times per
-    micro-batch; caching the envelope instead was measured WORSE: the
-    before+after full images make the cache ~2× the payload, and
-    materializing it cost more than the second pass it saved.)
+    per-shard offset stats then come from a read-back of the parquet just
+    written.  The read names an explicit slim schema (cdc$stream_id,
+    generation, pk, cdc$time_us, value.op): the audio bytes are never
+    read, and no footer-inference job runs.  When the part files' footers
+    hold at most _ONE_TASK_READBACK_ROWS rows (every ordinary
+    micro-batch), the read is coalesced to one partition, so the
+    per-shard aggregate needs no exchange and the stats are ONE Spark
+    job; a larger write (a big snapshot chunk) keeps the parallel read.
+    The directory listing doubles as the emptiness probe: an empty batch
+    leaves no output directory.  (Running isEmpty / write / stats as
+    three separate actions re-executed the whole upstream plan — in the
+    correlating sink that re-ran the correlation aggregation — three
+    times per micro-batch; caching the envelope instead was measured
+    WORSE: the before+after full images make the cache ~2× the payload,
+    and materializing it cost more than the second pass it saved.)  The
+    aggregations are built once per table and SparkContext
+    (_shard_stat_aggs, operators/memo.py).
 
     With cfg.audio_validation / normalize / dedup_index on, the verdict
     and resample columns are stamped into the plan BEFORE a persist and
@@ -704,10 +806,9 @@ def _write_batch(
     those paths genuinely reuse the decoded verdict several times, which
     is what persist is for.  The stats .collect() itself is a per-shard
     aggregate, bounded by shard count."""
-    shards: list[dict] = []
-    n = 0
     n_quar = 0
     n_dups = 0
+    spark = env_df.sparkSession
     gate = _audio_gate_exprs(env_df, cfg)
     if gate is not None:
         env_df = gate["df"]
@@ -716,33 +817,8 @@ def _write_batch(
         env_df = norm["df"]
 
     def shard_stats(df: DataFrame) -> list:
-        return (
-            df.groupBy("`cdc$stream_id`", "generation")
-            .agg(
-                F.min("`cdc$time_us`").alias("window_start_us"),
-                F.max("`cdc$time_us`").alias("window_end_us"),
-                # single-pk tables record the raw id; composite keys a
-                # pipe-joined rendering (lineage is a JSON progress record,
-                # not a resume key — offsets live in the checkpoint)
-                F.max_by(
-                    F.concat_ws(
-                        "|",
-                        *[F.col(f"`{c}`").cast("string") for c in table.pk_columns],
-                    ),
-                    "`cdc$time_us`",
-                ).alias("last_change_clip_id"),
-                F.count("*").alias("n_records"),
-                # per-op tallies ride the same pruned pass (value.op is a
-                # nested-schema-pruned read) and land in lineage so the
-                # Debezium streaming-metrics analog (metrics.
-                # connector_metrics: TotalNumberOfCreate/Update/Delete
-                # EventsSeen) is a driver-only fold, no rescan
-                F.count(F.when(F.col("value.op") == "c", 1)).alias("n_creates"),
-                F.count(F.when(F.col("value.op") == "u", 1)).alias("n_updates"),
-                F.count(F.when(F.col("value.op") == "d", 1)).alias("n_deletes"),
-            )
-            .collect()
-        )
+        aggs = _shard_stat_aggs(table, spark.sparkContext)
+        return df.groupBy("`cdc$stream_id`", "generation").agg(*aggs).collect()
 
     def ordered_write(df: DataFrame) -> None:
         # stream_clustered: the correlating sink already shuffled on
@@ -763,26 +839,25 @@ def _write_batch(
         # fast path (no payload post-processing): one plan execution
         out = batch_output_path(cfg, batch_id)
         ordered_write(env_df)
-        if not any(f.startswith("part-") for f in os.listdir(out)):
+        parts = [
+            os.path.join(out, f) for f in os.listdir(out) if f.startswith("part-")
+        ]
+        if not parts:
             shutil.rmtree(out, ignore_errors=True)  # empty batch: no output dir
-            return n, shards, n_quar, n_dups
-        stats = shard_stats(env_df.sparkSession.read.parquet(out))
-        for r in stats:
-            shards.append(
-                {
-                    "shard_id": r["cdc$stream_id"],
-                    "generation": r["generation"],
-                    "window_start_us": r["window_start_us"],
-                    "window_end_us": r["window_end_us"],
-                    "last_change_clip_id": r["last_change_clip_id"],
-                    "n_records": r["n_records"],
-                    "n_creates": r["n_creates"],
-                    "n_updates": r["n_updates"],
-                    "n_deletes": r["n_deletes"],
-                }
-            )
-            n += r["n_records"]
-        return n, shards, n_quar, n_dups
+            return 0, [], n_quar, n_dups
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StringType, StructField
+
+        cl = table.changelog_schema()
+        keys = ("cdc$stream_id", "generation", *table.pk_columns, "cdc$time_us")
+        op = StructField("value", StructType([StructField("op", StringType())]))
+        written = spark.read.schema(
+            StructType([*[cl[c] for c in keys], op])
+        ).parquet(out)
+        n_written = sum(pq.read_metadata(p).num_rows for p in parts)
+        if n_written <= _ONE_TASK_READBACK_ROWS:
+            written = written.coalesce(1)
+        return _shard_records(shard_stats(written)) + (n_quar, n_dups)
 
     persisted = env_df
     persisted.persist()
@@ -806,7 +881,7 @@ def _write_batch(
             env_df = norm["apply"](env_df)
         stats = shard_stats(env_df)
         if not stats:
-            return n, shards, n_quar, n_dups
+            return 0, [], n_quar, n_dups
         ordered_write(env_df)
         if cfg.dedup_index:
             from scylla_cdc_source_connector_spark.streaming.dedup_index import (
@@ -817,22 +892,26 @@ def _write_batch(
             n_dups = maintain_dedup_index(env_df, batch_id, cfg)
     finally:
         persisted.unpersist()
-    for r in stats:
-        shards.append(
-            {
-                "shard_id": r["cdc$stream_id"],
-                "generation": r["generation"],
-                "window_start_us": r["window_start_us"],
-                "window_end_us": r["window_end_us"],
-                "last_change_clip_id": r["last_change_clip_id"],
-                "n_records": r["n_records"],
-                "n_creates": r["n_creates"],
-                "n_updates": r["n_updates"],
-                "n_deletes": r["n_deletes"],
-            }
-        )
-        n += r["n_records"]
-    return n, shards, n_quar, n_dups
+    return _shard_records(stats) + (n_quar, n_dups)
+
+
+def _shard_records(stats: list) -> tuple[int, list[dict]]:
+    """(records, lineage `shards` entries) of the per-shard stats rows."""
+    shards = [
+        {
+            "shard_id": r["cdc$stream_id"],
+            "generation": r["generation"],
+            "window_start_us": r["window_start_us"],
+            "window_end_us": r["window_end_us"],
+            "last_change_clip_id": r["last_change_clip_id"],
+            "n_records": r["n_records"],
+            "n_creates": r["n_creates"],
+            "n_updates": r["n_updates"],
+            "n_deletes": r["n_deletes"],
+        }
+        for r in stats
+    ]
+    return sum(s["n_records"] for s in shards), shards
 
 
 def _audio_gate_exprs(env_df: DataFrame, cfg: EngineConfig):

@@ -1661,6 +1661,11 @@ def test_rollback_to(spark, tmp_root):
     assert im.current_metadata(loc)["current-snapshot-id"] == 1
     assert im.read_table(spark, loc).count() == 1
     assert len(im.snapshots(loc)) == 3  # nothing deleted
+    # $history: 2 and 3 are retained but off the current parent chain
+    hist = im.metadata_table(spark, loc, "history").collect()
+    assert [(r["snapshot_id"], r["is_current_ancestor"]) for r in hist] == [
+        (1, True), (2, False), (3, False), (1, True)
+    ]
 
     im.rollback_to(loc, 3, timestamp_ms=5000)  # roll forward again
     assert im.read_table(spark, loc).count() == 3
@@ -2840,8 +2845,19 @@ def test_initial_snapshot_retention_gap_refused(spark, tmp_root):
     im.expire_snapshots(loc, keep_last=1)  # sequence 2 is gone forever
 
     cfg_b = _cfg(tmp_root, "ice_gap_b")
-    with pytest.raises(ValueError, match="retention gap"):
-        run_initial_snapshot_then_stream(spark, cfg_b, mir, loc)
+    # the guard answers from the metadata JSON: no manifest list or
+    # manifest is opened before it refuses
+    opened = []
+    real_read = im.avro.read_container
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            im.avro,
+            "read_container",
+            lambda path, *a, **kw: opened.append(path) or real_read(path, *a, **kw),
+        )
+        with pytest.raises(ValueError, match="retention gap"):
+            run_initial_snapshot_then_stream(spark, cfg_b, mir, loc)
+    assert opened == []
 
     # empty mirror: refuse with guidance
     cfg_c = _cfg(tmp_root, "ice_gap_c")
