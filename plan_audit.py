@@ -15,6 +15,9 @@ Checks encode the scale invariants the engine is designed around:
   6. one sink call on a batch with output and no pending rows = THREE
      Spark jobs (the ordered write's two under AQE + one shard-stats
      read-back that reads no payload and has no exchange)
+  7. the Iceberg changelog, feed and merge-on-read plans hold their
+     driver-built lookup tables as LocalTableScans, never as a Scan
+     ExistingRDD of Python rows
 """
 
 from __future__ import annotations
@@ -478,10 +481,42 @@ def main() -> None:
         im_mod.read_changelog(spark, iloc, identifier_columns=["k"]),
         "changelog + update pairing",
     )
-    assert r17["exchanges"] == 2, (
-        "pairing = carry-over hash agg + (key, ordinal) window — exactly "
-        "TWO exchanges"
+    assert r17["exchanges"] == 1, (
+        "pairing = ONE hash repartition on (key, ordinal) that the "
+        "carry-over agg and the pairing window both reuse"
     )
+
+    # invariant 7: lookup tables built on the driver reach the plan as
+    # LocalTableScans (a Scan ExistingRDD broadcast runs a Python-worker
+    # job); the equality-delete table exercises read_table's seq map
+    eloc = "/tmp/sccs_planaudit_ice_eq"
+    _sh.rmtree(eloc, ignore_errors=True)
+    os.makedirs(eloc + "/data")
+    im_mod.create_table(
+        eloc, _T.StructType([_T.StructField("k", _T.StringType(), False)])
+    )
+    _pq.write_table(_pa.table({"k": ["a", "b", "c"]}), f"{eloc}/data/f0.parquet")
+    im_mod.append_files(eloc, [f"{eloc}/data/f0.parquet"], timestamp_ms=1)
+    im_mod.write_equality_deletes(
+        spark, eloc, spark.range(1).select(F.lit("b").alias("k")), ["k"]
+    )
+    for df, name in (
+        (im_mod.read_changes(spark, iloc), "read_changes"),
+        (im_mod.read_changelog(spark, iloc), "read_changelog (plain)"),
+        (
+            im_mod.read_changelog(spark, iloc, identifier_columns=["k"]),
+            "read_changelog (paired)",
+        ),
+        (im_mod.read_table(spark, eloc), "read_table (equality deletes)"),
+    ):
+        txt = _capture(df)
+        print(f"===== lookup tables of {name}")
+        print(f"LocalTableScan: {txt.count('LocalTableScan')}")
+        assert "Scan ExistingRDD" not in txt, (
+            f"{name}: a lookup table is a LogicalRDD of Python rows"
+        )
+        assert "LocalTableScan" in txt, f"{name}: no LocalTableScan lookup"
+    print()
 
     sdf = im_mod.read_table(spark, iloc)
     hashed = sdf.select(
@@ -533,10 +568,10 @@ def main() -> None:
         ),
         "changelog -> Debezium envelopes (Iceberg wire-out)",
     )
-    assert r21["exchanges"] == 2, (
+    assert r21["exchanges"] == 1, (
         "changelog wire-out adds ZERO exchanges over pairing: the "
-        "envelope hash-agg on (key, ordinal) reuses the pairing window's "
-        "HashPartitioning — carry-over agg + window are the only two"
+        "envelope hash-agg on (key, ordinal) reuses pairing's one "
+        "(key, ordinal) HashPartitioning"
     )
 
     print("ALL PLAN INVARIANTS HOLD")

@@ -1821,6 +1821,59 @@ def scan_files(
 #: pass-through of the scheme-less part
 _FILE_URI_RE = "^file:/+"
 
+#: the spec's position-delete file schema (field ids 2147483546/
+#: 2147483545); every read of a delete file names it, so no read runs a
+#: footer-inference job
+_POS_DELETE_SCHEMA = "file_path string, pos long"
+
+
+def _local_table(spark, rows, schema):
+    """A driver-built table (a lookup map a plan broadcast-joins, or an
+    empty result) as a `LocalRelation`: the rows go to the JVM as one
+    pyarrow Table, so the plan holds a LocalTableScan that is broadcast
+    from the driver.  `spark.createDataFrame(rows, schema)` on Python
+    rows plans a LogicalRDD instead, and every broadcast of it runs a
+    job through the Python workers.  `schema` is a DDL string or a
+    StructType."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    st = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow = to_arrow_schema(st)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    tbl = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(tbl, st)
+
+
+def _parquet_files(d: str) -> tuple[list[str], int]:
+    """The parquet files directly under `d` and their rows, read from the
+    footers (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    files = sorted(
+        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+    )
+    return files, sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def _write_files(df, out_dir: str) -> tuple[list[str], int]:
+    """Write `df` as parquet under `out_dir` (overwrite) and return (its
+    files, their rows), counted from the footers: no probe job before the
+    write and no count job after it.  A write that held no rows leaves no
+    directory and returns ([], 0)."""
+    import shutil
+
+    df.write.mode("overwrite").parquet(out_dir)
+    files, n = _parquet_files(out_dir)
+    if not n:
+        shutil.rmtree(out_dir)
+        return [], 0
+    return files, n
+
 
 def _with_file_pos(spark, files: list[str], schema=None):
     """Data-file scan annotated with (__fp, __pos) — the row's exact
@@ -1855,8 +1908,10 @@ def _live_rows(spark, location: str, plan: dict):
 
     out = _with_file_pos(spark, plan["files"])
     if plan["delete_files"]:
-        dels = spark.read.parquet(*plan["delete_files"]).select(
-            F.col("file_path").alias("__fp"), F.col("pos").alias("__pos")
+        dels = (
+            spark.read.schema(_POS_DELETE_SCHEMA)
+            .parquet(*plan["delete_files"])
+            .select(F.col("file_path").alias("__fp"), F.col("pos").alias("__pos"))
         )
         out = out.join(F.broadcast(dels), ["__fp", "__pos"], "left_anti")
     if plan["equality_deletes"]:
@@ -1878,7 +1933,8 @@ def _apply_equality_deletes(spark, data_df, plan: dict, schema: dict):
     from pyspark.sql import functions as F
 
     id_to_name = {f["id"]: f["name"] for f in schema["fields"]}
-    seq_df = spark.createDataFrame(
+    seq_df = _local_table(
+        spark,
         list(zip(plan["files"], plan["file_sequences"])),
         "__fp string, __data_seq long",
     )
@@ -1962,7 +2018,7 @@ def read_table(
         # result, not a broken table; the schema is the SNAPSHOT's
         sch_id = snap.get("schema-id", md["current-schema-id"])
         sch = next(s for s in md["schemas"] if s["schema-id"] == sch_id)
-        return spark.createDataFrame([], spark_schema_of(sch))
+        return _local_table(spark, [], spark_schema_of(sch))
     if not apply_deletes or not (plan["delete_files"] or plan["equality_deletes"]):
         return spark.read.parquet(*files)
     return _live_rows(spark, location, plan).drop("__fp", "__pos")
@@ -2020,8 +2076,9 @@ def read_changes(
                 StructField("_commit_timestamp_ms", LongType()),
             ]
         )
-        return spark.createDataFrame([], empty)
-    fmap = spark.createDataFrame(
+        return _local_table(spark, [], empty)
+    fmap = _local_table(
+        spark,
         rows,
         "__fp string, _snapshot_id long, _sequence_number long, "
         "_commit_timestamp_ms long",
@@ -2094,9 +2151,12 @@ def read_changelog(
     Scale shape: ONE parquet scan for all INSERT rows + a broadcast
     file→commit map (never a union of per-snapshot plans); ONE
     positionally-annotated scan over the union of delete-targeted data
-    files inner-joined (broadcast — churn ≪ data) with the delete rows;
-    update pairing adds one hash-agg exchange (carry-over removal) and
-    one window exchange on (key, ordinal); net_changes is a single
+    files inner-joined (broadcast — churn ≪ data) with the delete rows,
+    read with the spec's delete-file schema (no inference job).  The
+    maps are driver-built LocalRelations (_local_table), so their
+    broadcasts run no Python-worker job.  Update pairing adds ONE
+    exchange, a hash repartition on (key, ordinal) that carry-over
+    removal and the pairing window share; net_changes is a single
     full-row hash-agg.
 
     `partition_ranges` scopes the replay (e.g. one hot key's bucket via
@@ -2166,7 +2226,7 @@ def read_changelog(
         ]
     )
     if not contributing:
-        return spark.createDataFrame([], out_schema)
+        return _local_table(spark, [], out_schema)
 
     def _prov(b):
         return (
@@ -2185,9 +2245,7 @@ def read_changelog(
         (f, *_prov(b)) for b in contributing for f in b["data_files"]
     ]
     if ins_rows:
-        fmap = spark.createDataFrame(
-            ins_rows, "__fp string, " + prov_schema
-        )
+        fmap = _local_table(spark, ins_rows, "__fp string, " + prov_schema)
         ins = (
             spark.read.schema(sch)
             .parquet(*[r[0] for r in ins_rows])
@@ -2250,11 +2308,10 @@ def read_changelog(
                 f"orphan-reclaimed): {missing[:3]}... — narrow the range "
                 "past the expiry horizon"
             )
-        dmap = spark.createDataFrame(
-            del_rows, "__dfp string, " + prov_schema
-        )
+        dmap = _local_table(spark, del_rows, "__dfp string, " + prov_schema)
         dels = (
-            spark.read.parquet(*[r[0] for r in del_rows])
+            spark.read.schema(_POS_DELETE_SCHEMA)
+            .parquet(*[r[0] for r in del_rows])
             .withColumn(
                 "__dfp",
                 F.regexp_replace(
@@ -2295,7 +2352,7 @@ def read_changelog(
     if not parts:
         # e.g. a range whose only content is equality deletes over a
         # history with no data rows: nothing changed row-wise
-        return spark.createDataFrame([], out_schema)
+        return _local_table(spark, [], out_schema)
     out = functools.reduce(lambda a, b: a.unionByName(b), parts)
     if identifier_columns:
         missing_keys = [c for c in identifier_columns if c not in data_cols]
@@ -2349,7 +2406,7 @@ def _changelog_eq_kills(
             "changelog kill attribution needs historical data files no "
             f"longer on disk: {missing[:3]}... — compact or narrow the range"
         )
-    seq_map = spark.createDataFrame(cand_rows, "__fp string, __dseq long")
+    seq_map = _local_table(spark, cand_rows, "__fp string, __dseq long")
     cand = _with_file_pos(
         spark,
         sorted({f for f, _ in cand_rows}),
@@ -2362,11 +2419,12 @@ def _changelog_eq_kills(
         for p in b["pos_delete_files"]
     ]
     if pos_files:
-        pmap = spark.createDataFrame(
-            pos_files, "__dfp string, __kseq long, __ksnap long"
+        pmap = _local_table(
+            spark, pos_files, "__dfp string, __kseq long, __ksnap long"
         )
         events.append(
-            spark.read.parquet(*[p for p, _, _ in pos_files])
+            spark.read.schema(_POS_DELETE_SCHEMA)
+            .parquet(*[p for p, _, _ in pos_files])
             .withColumn(
                 "__dfp",
                 F.regexp_replace(
@@ -2443,7 +2501,8 @@ def _changelog_eq_kills(
     firstkill = ev.groupBy("__fp", "__pos").agg(
         F.min(F.struct("__kseq", "__ksnap")).alias("__k")
     )
-    provmap = spark.createDataFrame(
+    provmap = _local_table(
+        spark,
         [(b["snapshot_id"], *prov_fn(b)) for b in contributing],
         "__ksnap long, _change_ordinal int, _commit_snapshot_id long, "
         "_sequence_number long, _commit_timestamp_ms long",
@@ -2483,11 +2542,20 @@ def _changelog_compute_updates(out, data_cols, identifier_columns):
     rewritten to the same content is not a change); (2) update pairing —
     a surviving DELETE+INSERT on the same key within one commit becomes
     UPDATE_BEFORE/UPDATE_AFTER.  >1 row on a pairing side per (key,
-    commit) raises in-plan (raise_error — no extra validation job)."""
+    commit) raises in-plan (raise_error — no extra validation job).
+
+    ONE payload shuffle: the rows are hash-partitioned once on (key,
+    `_change_ordinal`).  Both groupings fit inside it — the carry-over
+    aggregate groups by the full row plus provenance, a superset — so
+    the aggregate, the pairing window and a downstream (key, ordinal)
+    aggregation (changelog_kafka_envelopes) add no exchange."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     prov = list(_CHANGELOG_COLS[1:])
+    out = out.repartition(
+        *[F.col(f"`{c}`") for c in identifier_columns], "_change_ordinal"
+    )
     g = out.groupBy(*data_cols, *prov).agg(
         F.count(F.when(F.col("_change_type") == "INSERT", 1)).alias("__ni"),
         F.count(F.when(F.col("_change_type") == "DELETE", 1)).alias("__nd"),
@@ -2562,30 +2630,30 @@ def write_position_deletes(
     """Commit `deletes_df` (columns file_path:string, pos:long — the
     spec's position-delete shape, field ids 2147483546/2147483545) as one
     delete (or overwrite, with `data_files`) snapshot.  The delete rows
-    are written sorted by (file_path, pos) as the spec requires.  Returns
-    the snapshot id."""
+    are written sorted by (file_path, pos) as the spec requires, with no
+    emptiness probe before the write: the written file's footer says
+    whether it holds rows.  If it holds none its directory is removed and
+    `data_files` alone commit as an "append" snapshot, or, with no data
+    files either, nothing commits.  Returns the snapshot id, or -1 when
+    nothing was committed."""
     md = current_metadata(location)
     seq = md["last-sequence-number"] + 1
     out_dir = os.path.join(
         location, "data", f"deletes-{seq:020d}-{uuid.uuid4().hex[:8]}"
     )
-    (
+    delete_files, _ = _write_files(
         deletes_df.select("file_path", "pos")
         .repartition(1)
-        .sortWithinPartitions("file_path", "pos")
-        .write.mode("overwrite")
-        .parquet(out_dir)
+        .sortWithinPartitions("file_path", "pos"),
+        out_dir,
     )
-    delete_files = sorted(
-        os.path.join(out_dir, f)
-        for f in os.listdir(out_dir)
-        if f.endswith(".parquet")
-    )
+    if not delete_files and not data_files:
+        return -1
     return _commit_snapshot(
         location,
         data_files or [],
         delete_files,
-        operation=operation,
+        operation=operation if delete_files else "append",
         timestamp_ms=timestamp_ms,
         summary_extra=summary_extra,
     )
@@ -2665,9 +2733,6 @@ def delete_where(spark, location: str, condition, *, timestamp_ms: int = 0) -> i
     hits = data.where(cond).select(
         F.col("__fp").alias("file_path"), F.col("__pos").alias("pos")
     )
-    # cheap emptiness probe before committing a snapshot
-    if hits.isEmpty():
-        return -1
     return write_position_deletes(
         spark, location, hits, timestamp_ms=timestamp_ms
     )
@@ -3696,10 +3761,10 @@ def rewrite_position_delete_files(
 ) -> dict:
     """Delete-file maintenance — the jar's `rewrite_position_delete_files`
     procedure: merge ALL live position-delete files into ONE sorted file
-    and drop DANGLING delete rows (rows whose target data file is no
-    longer in the live data set), committed as one "replace" snapshot
-    that carries the prior DATA manifests untouched (carry_content=
-    "data").  This keeps merge-on-read viable without the full data
+    (none when every row dangles) and drop DANGLING delete rows (rows
+    whose target data file is no longer in the live data set), committed
+    as one "replace" snapshot that carries the prior DATA manifests
+    untouched (carry_content="data").  This keeps merge-on-read viable without the full data
     rewrite compact_table does: a mirror that ran 10^4 upsert passes has
     10^4 tiny delete files, every one of which every read must open and
     broadcast — after the rewrite, reads pay ONE.
@@ -3730,10 +3795,8 @@ def rewrite_position_delete_files(
             "delete_rows": 0,
             "snapshot_id": None,
         }
-    live = spark.createDataFrame(
-        [(f,) for f in plan["files"]], "file_path string"
-    )
-    dels = spark.read.parquet(*old).select("file_path", "pos").distinct()
+    live = _local_table(spark, [(f,) for f in plan["files"]], "file_path string")
+    dels = spark.read.schema(_POS_DELETE_SCHEMA).parquet(*old).distinct()
     kept = dels.join(F.broadcast(live), "file_path", "left_semi")
     n_before = dels.count()
     md = current_metadata(location)
@@ -3741,20 +3804,9 @@ def rewrite_position_delete_files(
     out_dir = os.path.join(
         location, "data", f"deletes-rw-{seq:020d}-{uuid.uuid4().hex[:8]}"
     )
-    (
-        kept.repartition(1)
-        .sortWithinPartitions("file_path", "pos")
-        .write.mode("overwrite")
-        .parquet(out_dir)
+    new_files, n_after = _write_files(
+        kept.repartition(1).sortWithinPartitions("file_path", "pos"), out_dir
     )
-    new_files = sorted(
-        os.path.join(out_dir, f)
-        for f in os.listdir(out_dir)
-        if f.endswith(".parquet")
-    )
-    import pyarrow.parquet as pq
-
-    n_after = sum(pq.read_metadata(f).num_rows for f in new_files)
     snap_id = _commit_snapshot(
         location,
         [],
@@ -4012,47 +4064,31 @@ def maintain_latest_state_mirror(
             live = upserts.where(~F.col("__deleted")).drop("__deleted")
             if first_time:
                 create_table(location, live.schema)
-            # stale images of keys touched this pass -> row-level deletes
-            hits = None
+            # no emptiness probes: both sides are written, and what the
+            # footers hold picks the commit (append, overwrite or none)
+            #
+            # sort each pass's files on the key: files stay
+            # hash-partitioned (no new exchange), but WITHIN a file the
+            # parquet row-group stats become disjoint, so a point lookup
+            # prunes row groups even before compact_sort_by gives
+            # disjoint per-FILE bounds
+            data_files, _ = _write_files(
+                live.sortWithinPartitions(*pk),
+                os.path.join(location, "data", f"merge-{max(merge_bids):012d}"),
+            )
             plan = None if first_time else scan_files(location)
             has_prior = plan is not None and bool(plan["files"])
-            if has_prior and delete_mode == "position":
-                hits = _live_rows(spark, location, plan).join(
-                    F.broadcast(upserts.select(*pk)), pk, "left_semi"
-                ).select(
-                    F.col("__fp").alias("file_path"),
-                    F.col("__pos").alias("pos"),
-                )
-                if hits.isEmpty():
-                    hits = None
-            data_files = []
-            if not live.isEmpty():
-                out_dir = os.path.join(
-                    location, "data", f"merge-{max(merge_bids):012d}"
-                )
-                # sort each pass's files on the key: files stay
-                # hash-partitioned (no new exchange), but WITHIN a file
-                # the parquet row-group stats become disjoint, so a point
-                # lookup prunes row groups even before compact_sort_by
-                # gives disjoint per-FILE bounds
-                live.sortWithinPartitions(*pk).write.mode(
-                    "overwrite"
-                ).parquet(out_dir)
-                data_files = sorted(
-                    os.path.join(out_dir, f)
-                    for f in os.listdir(out_dir)
-                    if f.endswith(".parquet")
-                )
             ts = max(
                 sink_mod.read_lineage_one(cfg, b).get("committed_at_ms", 0)
                 for b in merge_bids
             )
             stamp = {"sccs-batch-ids": json.dumps(merge_bids)}
+            sid = -1
             if has_prior and delete_mode == "equality":
                 # no scan: the pass's keys ARE the delete set (older
                 # images vanish; this snapshot's own appends survive the
                 # strictly-older sequence rule)
-                write_equality_deletes(
+                sid = write_equality_deletes(
                     spark,
                     location,
                     upserts.select(*pk),
@@ -4062,20 +4098,25 @@ def maintain_latest_state_mirror(
                     operation="overwrite",
                     summary_extra=stamp,
                 )
-                committed += 1
-            elif hits is not None:
-                write_position_deletes(
+            elif has_prior:
+                # stale images of keys touched this pass -> row-level
+                # deletes; none written commits the appends alone
+                sid = write_position_deletes(
                     spark,
                     location,
-                    hits,
+                    _live_rows(spark, location, plan)
+                    .join(F.broadcast(upserts.select(*pk)), pk, "left_semi")
+                    .select(
+                        F.col("__fp").alias("file_path"),
+                        F.col("__pos").alias("pos"),
+                    ),
                     data_files=data_files,
                     timestamp_ms=ts,
                     operation="overwrite",
                     summary_extra=stamp,
                 )
-                committed += 1
             elif data_files:
-                _commit_snapshot(
+                sid = _commit_snapshot(
                     location,
                     data_files,
                     [],
@@ -4083,7 +4124,7 @@ def maintain_latest_state_mirror(
                     timestamp_ms=ts,
                     summary_extra=stamp,
                 )
-                committed += 1
+            committed += sid != -1
         finally:
             upserts.unpersist()
     increment.mark_applied(location, with_data, 0)
@@ -4139,7 +4180,10 @@ def materialize_increment(
     - `build_df(last_hwm, head)` returns the pass's rows WITH a `batch`
       column (the committing snapshot id); they land under
       `out_dir/batch=<id>/` by idempotent dynamic-partition overwrite
-      (reruns of a crashed pass rewrite the same dirs byte-for-byte);
+      (reruns of a crashed pass rewrite the same dirs byte-for-byte).
+      The plan runs once, as the write: nothing is cached, and the row
+      count is the sum of the footers of the consumed snapshots'
+      `batch=<id>` dirs (a replace snapshot has none);
     - the high-water mark commits LAST via increment.write_json_atomic
       of `out_dir/<state_name>`, so a crash anywhere replays at most one
       pass, never duplicates or skips a snapshot;
@@ -4184,14 +4228,13 @@ def materialize_increment(
         out = build_df(last, head)
         if "batch" not in out.columns:
             out = out.withColumn("batch", F.col("_commit_snapshot_id"))
-        out.persist()
-        try:
-            out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("batch").parquet(out_dir)
-            n = out.count()
-        finally:
-            out.unpersist()
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch").parquet(out_dir)
+        # the pass's rows, from the footers of its batch dirs (no count
+        # job, no cache): dynamic overwrite replaced exactly these dirs
+        dirs = [os.path.join(out_dir, f"batch={sid}") for sid in new_snaps]
+        n = sum(_parquet_files(d)[1] for d in dirs if os.path.isdir(d))
     increment.write_json_atomic(state_path, {**identity, "hwm": head})
     return {"consumed": new_snaps, "rows": n, "hwm": head}
 

@@ -105,13 +105,16 @@ def register_consumer(cfg, target_dir: str, *, name: str) -> None:
     """Record a downstream consumer with the sink, so
     `expire_emitted(keep_min_applied=True)` can refuse to expire batches
     it hasn't applied yet — the Kafka analog is retention honouring
-    consumer lag.  Idempotent; the last registration of a name wins."""
+    consumer lag.  Idempotent; the last registration of a name wins, and
+    the record is rewritten only when it changes (a steady consumer's
+    pass reads it and writes nothing)."""
     d = os.path.join(cfg.output_dir, "_consumers")
+    path = os.path.join(d, f"{name}.json")
+    rec = {"name": name, "target_dir": os.path.abspath(target_dir)}
+    if read_json(path) == rec:
+        return
     os.makedirs(d, exist_ok=True)
-    write_json_atomic(
-        os.path.join(d, f"{name}.json"),
-        {"name": name, "target_dir": os.path.abspath(target_dir)},
-    )
+    write_json_atomic(path, rec)
 
 
 def registered_consumers(cfg) -> dict[str, str]:

@@ -188,9 +188,22 @@ def _make_heartbeat_emitter(cfg: EngineConfig):
     downstream-visible progress signal: emitted unconditionally for an
     EMPTY batch (the offset advance has no other carrier) and
     timer-gated otherwise.  Written idempotently per batch_id
-    (overwrite), read via read_heartbeats."""
+    (overwrite), read via read_heartbeats.
 
-    state = {"last_ms": 0.0}
+    The per-shard high-water offsets an empty window carries live in the
+    emitter's state: folded from lineage once, at the first empty
+    window, then kept current from the `shards` of every call (each call
+    precedes its batch's lineage commit), so an idle stream reads no
+    lineage per trigger."""
+
+    state: dict = {"last_ms": 0.0, "hwm": None}
+
+    def advance(shards: list[dict]) -> None:
+        hwm = state["hwm"]
+        for s in shards:
+            cur = hwm.get(s["shard_id"])
+            if cur is None or s["window_end_us"] >= cur["window_end_us"]:
+                hwm[s["shard_id"]] = s
 
     def emit(
         spark: SparkSession,
@@ -200,6 +213,8 @@ def _make_heartbeat_emitter(cfg: EngineConfig):
     ) -> None:
         if cfg.heartbeat_interval_ms <= 0:
             return
+        if state["hwm"] is not None:
+            advance(shards)
         now_ms = time.time() * 1000
         expired = now_ms - state["last_ms"] >= cfg.heartbeat_interval_ms
         if n_records > 0 and not expired:
@@ -207,13 +222,11 @@ def _make_heartbeat_emitter(cfg: EngineConfig):
         if not shards:
             # empty window: carry the last committed per-shard offsets so
             # consumers see WHERE progress stands, not just that it moved
-            hwm: dict[str, dict] = {}
-            for rec in read_lineage(cfg):
-                for s in rec["shards"]:
-                    cur = hwm.get(s["shard_id"])
-                    if cur is None or s["window_end_us"] >= cur["window_end_us"]:
-                        hwm[s["shard_id"]] = s
-            shards = list(hwm.values())
+            if state["hwm"] is None:
+                state["hwm"] = {}
+                for rec in read_lineage(cfg):
+                    advance(rec["shards"])
+            shards = list(state["hwm"].values())
         rows = [
             (
                 f"__heartbeat.{cfg.connector_name}",

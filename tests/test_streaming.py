@@ -935,3 +935,97 @@ def test_iceberg_sink_seam(spark, stream_pdf):
         "write.distribution-mode",
         "sort-order",
     }
+
+
+def test_heartbeat_offsets_fold_lineage_once(spark, tmp_root, monkeypatch):
+    """An idle stream's heartbeats carry the per-shard high-water offsets
+    without re-reading lineage per trigger: over 20 empty windows after 50
+    committed batches the emitter folds lineage once, and every empty
+    window's records equal the full fold of the lineage committed by then
+    (later windows included, carried from the `shards` of each call)."""
+    import builtins
+
+    from scylla_cdc_source_connector_spark.streaming import increment
+
+    cfg = _cfg(tmp_root, "hb_fold", heartbeat_interval_ms=10**9)
+    os.makedirs(cfg.lineage_dir, exist_ok=True)
+    rng = np.random.default_rng(5)
+
+    def shards_of():
+        return [
+            {"shard_id": f"s{s}", "generation": int(rng.integers(0, 2)),
+             "window_end_us": int(rng.integers(0, 40)) * 1000}
+            for s in rng.choice(4, size=int(rng.integers(1, 4)), replace=False)
+        ]
+
+    def commit(bid, n, shards):
+        increment.write_json_atomic(
+            sink_mod.lineage_path(cfg, bid),
+            {"batch_id": bid, "n_records": n, "shards": shards},
+        )
+
+    def full_fold():
+        hwm = {}
+        for b in sink_mod.committed_batch_ids(cfg):
+            for s in real_one(cfg, b)["shards"]:
+                cur = hwm.get(s["shard_id"])
+                if cur is None or s["window_end_us"] >= cur["window_end_us"]:
+                    hwm[s["shard_id"]] = s
+        return {(s["shard_id"], s["generation"], s["window_end_us"]) for s in hwm.values()}
+
+    real_one, real_open = sink_mod.read_lineage_one, builtins.open
+    for bid in range(50):
+        commit(bid, 3, shards_of())
+    emit = sink_mod._make_heartbeat_emitter(cfg)
+
+    reads, opens = [], []
+    monkeypatch.setattr(
+        sink_mod, "read_lineage_one",
+        lambda c, b: reads.append(b) or real_one(c, b),
+    )
+
+    def counting_open(path, *a, **kw):
+        if str(path).startswith(cfg.lineage_dir):
+            opens.append(path)
+        return real_open(path, *a, **kw)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    bid, want = 50, {}
+    for _ in range(20):
+        emit(spark, bid, 0, [])
+        commit(bid, 0, [])
+        monkeypatch.setattr(builtins, "open", real_open)
+        want[bid] = full_fold()
+        monkeypatch.setattr(builtins, "open", counting_open)
+        shards = shards_of()
+        emit(spark, bid + 1, 3, shards)
+        commit(bid + 1, 3, shards)
+        bid += 2
+    monkeypatch.setattr(builtins, "open", real_open)
+    assert len(reads) == 50 and len(opens) == 50 + 40  # one fold + the commits
+    hb = sink_mod.read_heartbeats(spark, cfg)
+    for b, rows in want.items():
+        got = {
+            (r["shard_id"], r["generation"], r["window_end_us"])
+            for r in hb.where(F.col("batch_id") == b).collect()
+        }
+        assert got == rows, b
+
+
+def test_consumer_registration_written_only_on_change(tmp_root):
+    """A steady consumer's pass leaves its `_consumers/<name>.json` as it
+    is (same inode, same mtime); a changed target dir rewrites it."""
+    from scylla_cdc_source_connector_spark.streaming import increment
+
+    cfg = _cfg(tmp_root, "consumer_reg")
+    path = os.path.join(cfg.output_dir, "_consumers", "c.json")
+    increment.unapplied_batches(cfg, f"{tmp_root}/consumer_reg/t1", name="c")
+    st = os.stat(path)
+    increment.unapplied_batches(cfg, f"{tmp_root}/consumer_reg/t1", name="c")
+    st2 = os.stat(path)
+    assert (st2.st_ino, st2.st_mtime_ns) == (st.st_ino, st.st_mtime_ns)
+    increment.unapplied_batches(cfg, f"{tmp_root}/consumer_reg/t2", name="c")
+    assert os.stat(path).st_ino != st.st_ino
+    assert increment.registered_consumers(cfg) == {
+        "c": os.path.abspath(f"{tmp_root}/consumer_reg/t2")
+    }
