@@ -12,9 +12,10 @@ Checks encode the scale invariants the engine is designed around:
   4. salted aggregation = exactly two exchanges (salted partial + combine)
   5. the streaming sink's own per-batch plan, replay markers included =
      ONE exchange, no join, and a marker scan that reads no payload
-  6. one sink call on a batch with output and no pending rows = THREE
-     Spark jobs (the ordered write's two under AQE + one shard-stats
-     read-back that reads no payload and has no exchange)
+  6. one sink call on a batch with output and no pending rows = TWO
+     Spark jobs (the ordered write's two under AQE) and no Spark read of
+     the batch output (the shard stats are folded from its files on the
+     driver)
   7. the Iceberg changelog, feed and merge-on-read plans hold their
      driver-built lookup tables as LocalTableScans, never as a Scan
      ExistingRDD of Python rows
@@ -103,7 +104,7 @@ def audit_sink_jobs(spark, cfg) -> None:
     jobs = sc.statusTracker().getJobIdsForGroup("plan_audit_sink")
     print("===== streaming sink: one micro-batch")
     print(f"spark jobs: {len(jobs)}")
-    assert len(jobs) == 3, f"sink micro-batch must run 3 Spark jobs, ran {len(jobs)}"
+    assert len(jobs) == 2, f"sink micro-batch must run 2 Spark jobs, ran {len(jobs)}"
     execs = sql_store.executionsList()
     plans = [
         execs.apply(i).physicalPlanDescription()
@@ -114,14 +115,9 @@ def audit_sink_jobs(spark, cfg) -> None:
         p for p in plans
         if re.search(r"Location: \w+ \[\S*" + re.escape(out) + r"\]", p)
     ]
-    assert len(readback) == 1, "expected one read-back of the batch output"
-    schema = re.search(r"ReadSchema: (.*)", readback[0]).group(1)
-    print("read-back ReadSchema:", schema)
+    print(f"spark reads of the batch output: {len(readback)}")
     print()
-    assert "bytes" not in schema and "transcript" not in schema, (
-        "the shard-stats read-back must not read the payload"
-    )
-    assert "Exchange" not in readback[0], "the read-back must not shuffle"
+    assert not readback, "the sink must not read its batch output back"
     shutil.rmtree(root, ignore_errors=True)
 
 

@@ -127,6 +127,10 @@ def _before_for_update(
     )
 
 
+#: the correlated rows' processing-time column build_envelopes adds
+_TS_MS = "__ts_ms"
+
+
 def build_envelopes(
     correlated: DataFrame,
     cfg: EngineConfig,
@@ -143,39 +147,33 @@ def build_envelopes(
     Output columns: topic, key, value{source, before, after, op, ts_ms},
     headers, plus passthrough partition/ordering columns (cdc$stream_id,
     cdc$time, cdc$time_us, generation, clip_id, batch_seq) for the sink.
+
+    The top-level ts_ms is processing time, `processing_ts_ms` when given
+    (the streaming sink passes its batch's one value through
+    memo.batch_value).  It enters as a column of the correlated rows, so
+    the select list does not depend on it and is built once per settings
+    (_envelope).
     """
     if processing_ts_ms is None:
-        cols, tombstones = _default_envelope(
-            correlated.sparkSession.sparkContext, plan_settings(cfg), table
-        )
-    else:
-        cols, tombstones = _envelope(cfg, processing_ts_ms, table)
-    env = correlated.select(*cols)
+        # top-level ts_ms is processing time; lag = ts_ms - source.ts_ms
+        # (README.md:188-194)
+        processing_ts_ms = F.unix_millis(F.current_timestamp())
+    cols, tombstones = _envelope(
+        correlated.sparkSession.sparkContext, plan_settings(cfg), table
+    )
+    env = correlated.withColumn(_TS_MS, processing_ts_ms).select(*cols)
     if tombstones is not None:
         env = env.select(tombstones).select("r.*")
     return env
 
 
 @column_memo
-def _default_envelope(
+def _envelope(
     sc: SparkContext, cfg: EngineConfig, table: TableModel
 ) -> tuple[tuple[Column, ...], Column | None]:
-    """_envelope with processing-time ts_ms: the envelope plan the
-    streaming sink applies to every micro-batch, built once per
-    SparkContext (operators/memo.py)."""
-    return _envelope(cfg, None, table)
-
-
-def _envelope(
-    cfg: EngineConfig, processing_ts_ms: Column | None, table: TableModel
-) -> tuple[tuple[Column, ...], Column | None]:
-    """build_envelopes' (select list, tombstone explode or None)."""
+    """build_envelopes' (select list, tombstone explode or None), built
+    once per SparkContext and settings (operators/memo.py)."""
     cfg.validate()
-    if processing_ts_ms is None:
-        # top-level ts_ms is processing time; lag = ts_ms - source.ts_ms
-        # (README.md:188-194)
-        processing_ts_ms = F.unix_millis(F.current_timestamp())
-
     delta = F.col("delta")
     pre = F.col("pre_image")
     post = F.col("post_image")
@@ -265,7 +263,7 @@ def _envelope(
     value_fields = [source, before, after, op.alias("op")]
     if payload_key is not None:
         value_fields.append(payload_key.alias(cfg.payload_key_name))
-    value_fields.append(processing_ts_ms.cast("long").alias("ts_ms"))
+    value_fields.append(F.col(_TS_MS).cast("long").alias("ts_ms"))
 
     cols = {
         "topic": F.lit(cfg.topic).alias("topic"),

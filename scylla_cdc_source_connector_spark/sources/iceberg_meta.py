@@ -1860,6 +1860,26 @@ def _parquet_files(d: str) -> tuple[list[str], int]:
     return files, sum(pq.read_metadata(f).num_rows for f in files)
 
 
+def _footer_schema(path: str):
+    """The schema Spark's footer inference would give a read whose first
+    file is `path` (a parquet file, or a directory whose first part file
+    is taken): the Spark row metadata in that file's footer, read with
+    pyarrow — no Spark job.  None when the footer holds none (a file
+    Spark did not write), and the read keeps inference."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    if os.path.isdir(path):
+        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        if not files:
+            return None
+        path = os.path.join(path, files[0])
+    row = (pq.read_schema(path).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    return None if row is None else StructType.fromJson(json.loads(row))
+
+
 def _write_files(df, out_dir: str) -> tuple[list[str], int]:
     """Write `df` as parquet under `out_dir` (overwrite) and return (its
     files, their rows), counted from the footers: no probe job before the
@@ -1903,10 +1923,12 @@ def _live_rows(spark, location: str, plan: dict):
     (_apply_equality_deletes).  Position deletes apply as one broadcast
     LEFT ANTI join: delete sets are tiny relative to data (CDC merge
     churn), so broadcast is the right 100-TB plan; Iceberg's own readers
-    do the same positional filtering vectorized inside the scan."""
+    do the same positional filtering vectorized inside the scan.  The
+    data-file scan names the schema inference would read off the first
+    file's footer (_footer_schema), so it runs no inference job."""
     from pyspark.sql import functions as F
 
-    out = _with_file_pos(spark, plan["files"])
+    out = _with_file_pos(spark, plan["files"], _footer_schema(plan["files"][0]))
     if plan["delete_files"]:
         dels = (
             spark.read.schema(_POS_DELETE_SCHEMA)
@@ -4040,9 +4062,11 @@ def maintain_latest_state_mirror(
     if merge_bids:
         pk = list(table.pk_columns)
         img = list(table.non_pk_columns)
-        env = spark.read.parquet(
-            *[sink_mod.batch_output_path(cfg, b) for b in merge_bids]
-        )
+        dirs = [sink_mod.batch_output_path(cfg, b) for b in merge_bids]
+        # the schema inference would read, without its job
+        schema = _footer_schema(dirs[0])
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        env = reader.parquet(*dirs)
         flat = env.select(
             *[F.col(c) for c in pk],
             F.col("`cdc$time_us`").alias("__ts_us"),

@@ -41,6 +41,7 @@ from pyspark.sql.types import StructType
 
 from scylla_cdc_source_connector_spark.config import EngineConfig
 from scylla_cdc_source_connector_spark.operators.memo import (
+    batch_value,
     column_memo,
     plan_settings,
 )
@@ -271,9 +272,7 @@ def _make_heartbeat_emitter(cfg: EngineConfig):
             }
         )
         d = heartbeat_path(cfg, batch_id)
-        import shutil as _shutil
-
-        _shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(d, ignore_errors=True)
         os.makedirs(d)
         pq.write_table(tbl, os.path.join(d, "part-0.parquet"))
         state["last_ms"] = now_ms
@@ -388,6 +387,7 @@ def sink_envelopes(
     cfg: EngineConfig,
     table: TableModel = DEFAULT_TABLE,
     obs: Observation | None = None,
+    ts_ms: Column | None = None,
 ) -> DataFrame:
     """The correlating sink's per-batch envelope plan.
 
@@ -397,6 +397,7 @@ def sink_envelopes(
     dropped.  The envelopes are those of the complete, unmarked groups.
     `obs` observes, while the plan executes, the max event time
     (`max_ev`) and the count of incomplete unmarked groups (`n_inc`).
+    `ts_ms` is the envelopes' processing time (build_envelopes).
 
     The markers ride the correlation's ONE exchange (the repartition on
     cdc$stream_id), so the plan has no join and no second exchange.  The
@@ -432,7 +433,9 @@ def sink_envelopes(
     )
     if obs is not None:
         corr = corr.observe(obs, *plan.status)
-    return build_envelopes(corr.filter(plan.emit), cfg, table=table)
+    return build_envelopes(
+        corr.filter(plan.emit), cfg, processing_ts_ms=ts_ms, table=table
+    )
 
 
 def _window_markers(
@@ -446,7 +449,9 @@ def _window_markers(
     confidence window [hwm − confidence_window, hwm] — the only groups a
     row that passes the confidence filter can belong to.  Lineage is
     walked back from the newest batch and stops at the first whose
-    `max_event_us` (monotone) is below the window."""
+    `max_event_us` (monotone) is below the window.  The floor enters the
+    plan through memo.batch_value, so the plan's generated code does not
+    change with it."""
     if not hwm:
         return None
     floor = hwm - cfg.confidence_window_ms * 1000
@@ -459,7 +464,7 @@ def _window_markers(
     if not paths:
         return None
     return emitted_markers(spark, paths, table).filter(
-        F.col("`cdc$time_us`") >= floor
+        F.col("`cdc$time_us`") >= batch_value(floor)
     )
 
 
@@ -499,13 +504,15 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
     (operators.correlation), the envelope select list (operators.
     projection), the Observation aggregates, completeness filter,
     admission rank and incomplete-keys aggregations (`_sink_plan`, keyed
-    by the cfg's settings without its paths, table and SparkContext) and
-    the shard-stats aggregations (`_shard_stat_aggs`).  The memos live
-    outside this closure, so the new sink run_iceberg_meta_stream builds
-    on every pass reuses them, as does a query on a new output dir, and a
-    restart that adopts a new schema (a new TableModel) builds its own.
-    A micro-batch builds only the confidence-window, marker and expiry
-    floors and its two Observations.
+    by the cfg's settings without its paths, table and SparkContext).
+    The memos live outside this closure, so the new sink
+    run_iceberg_meta_stream builds on every pass reuses them, as does a
+    query on a new output dir, and a restart that adopts a new schema (a
+    new TableModel) builds its own.  A micro-batch builds only its two
+    Observations and the Columns of its own values: the confidence-window,
+    marker and expiry floors and the processing time `ts_ms`.  Those go
+    through memo.batch_value, never a literal, so a repeat batch compiles
+    no code: its plan's generated Java source equals the last batch's.
     """
     os.makedirs(cfg.lineage_dir, exist_ok=True)
     os.makedirs(cfg.output_dir, exist_ok=True)
@@ -541,7 +548,7 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
         if prev_hwm > 0:
             raw_df = raw_df.filter(
                 F.col("`cdc$time_us`")
-                >= prev_hwm - cfg.confidence_window_ms * 1000
+                >= batch_value(prev_hwm - cfg.confidence_window_ms * 1000)
             )
         all_rows = raw_df
         n_carried = 0
@@ -610,9 +617,16 @@ def make_correlating_sink(cfg: EngineConfig, table: TableModel = DEFAULT_TABLE):
             group_keys = [*table.pk_columns, "cdc$time"]
             markers = _window_markers(spark, cfg, table, bids, prev_hwm)
             obs = Observation(f"sink-status-{batch_id}")
-            env = sink_envelopes(all_rows, markers, cfg, table, obs=obs)
+            env = sink_envelopes(
+                all_rows,
+                markers,
+                cfg,
+                table,
+                obs=obs,
+                ts_ms=batch_value(int(time.time() * 1000)),
+            )
             # the ONE payload pass: scan → correlate → envelope → ordered
-            # write (stats come off a slim read-back inside _write_batch)
+            # write (stats are folded from the written files on the driver)
             phases: dict[str, float] = {}
             t_ph = time.time()
             n, shards, n_quar, n_dups = _write_batch(
@@ -740,7 +754,7 @@ def _incomplete_group_keys(
     if markers is not None:
         all_rows = all_rows.unionByName(markers, allowMissingColumns=True)
     group_keys = [f"`{c}`" for c in (*table.pk_columns, "cdc$time")]
-    ttl_floor = hwm - cfg.incomplete_task_timeout_ms * 1000
+    ttl_floor = batch_value(hwm - cfg.incomplete_task_timeout_ms * 1000)
     return (
         all_rows.groupBy(*group_keys)
         .agg(*plan.inc_aggs)
@@ -749,39 +763,8 @@ def _incomplete_group_keys(
     )
 
 
-@column_memo
-def _shard_stat_aggs(table: TableModel, sc: SparkContext) -> tuple[Column, ...]:
-    """_write_batch's per-shard aggregations (lineage `shards` records)."""
-    return (
-        F.min("`cdc$time_us`").alias("window_start_us"),
-        F.max("`cdc$time_us`").alias("window_end_us"),
-        # single-pk tables record the raw id; composite keys a
-        # pipe-joined rendering (lineage is a JSON progress record,
-        # not a resume key — offsets live in the checkpoint)
-        F.max_by(
-            F.concat_ws(
-                "|",
-                *[F.col(f"`{c}`").cast("string") for c in table.pk_columns],
-            ),
-            "`cdc$time_us`",
-        ).alias("last_change_clip_id"),
-        F.count("*").alias("n_records"),
-        # per-op tallies ride the same slim pass and land in lineage
-        # so the Debezium streaming-metrics analog (metrics.
-        # connector_metrics: TotalNumberOfCreate/Update/Delete
-        # EventsSeen) is a driver-only fold, no rescan
-        F.count(F.when(F.col("value.op") == "c", 1)).alias("n_creates"),
-        F.count(F.when(F.col("value.op") == "u", 1)).alias("n_updates"),
-        F.count(F.when(F.col("value.op") == "d", 1)).alias("n_deletes"),
-    )
-
-
-#: the most written rows the shard-stats read-back scans in ONE task.  A
-#: single partition needs no exchange, so the stats are one Spark job
-#: instead of three; past this size the parallel read is faster (4 local
-#: cores: at 200,000 rows both take ~0.5 s, at 4,000,000 rows one task
-#: takes 1.4-1.9 s and the parallel read 0.5-0.6 s)
-_ONE_TASK_READBACK_ROWS = 200_000
+#: rows of the slim columns the shard-stats fold holds at a time
+_FOLD_ROWS = 1 << 18
 
 
 def _write_batch(
@@ -794,46 +777,34 @@ def _write_batch(
     """Idempotent per-batch output write + per-shard offset stats
     (shared by make_correlating_sink and the snapshot backfills).
 
-    The envelope plan executes ONCE, on the ordered write itself; the
-    per-shard offset stats then come from a read-back of the parquet just
-    written.  The read names an explicit slim schema (cdc$stream_id,
-    generation, pk, cdc$time_us, value.op): the audio bytes are never
-    read, and no footer-inference job runs.  When the part files' footers
-    hold at most _ONE_TASK_READBACK_ROWS rows (every ordinary
-    micro-batch), the read is coalesced to one partition, so the
-    per-shard aggregate needs no exchange and the stats are ONE Spark
-    job; a larger write (a big snapshot chunk) keeps the parallel read.
-    The directory listing doubles as the emptiness probe: an empty batch
-    leaves no output directory.  (Running isEmpty / write / stats as
-    three separate actions re-executed the whole upstream plan — in the
-    correlating sink that re-ran the correlation aggregation — three
-    times per micro-batch; caching the envelope instead was measured
-    WORSE: the before+after full images make the cache ~2× the payload,
-    and materializing it cost more than the second pass it saved.)  The
-    aggregations are built once per table and SparkContext
-    (_shard_stat_aggs, operators/memo.py).
+    The envelope plan executes ONCE, on the ordered write itself (two
+    Spark jobs under AQE); the per-shard offset stats are then folded on
+    the driver from the part files just written (_fold_shard_stats), so
+    no Spark job reads the output back.  The fold doubles as the
+    emptiness probe: a batch that wrote no rows leaves no output
+    directory.  (Running isEmpty / write / stats as three separate
+    actions re-executed the whole upstream plan — in the correlating sink
+    that re-ran the correlation aggregation — three times per
+    micro-batch; caching the envelope instead was measured WORSE: the
+    before+after full images make the cache ~2× the payload, and
+    materializing it cost more than the second pass it saved.)
 
     With cfg.audio_validation / normalize / dedup_index on, the verdict
     and resample columns are stamped into the plan BEFORE a persist and
     the derived outputs (quarantine, emit, index) all read the cache —
     those paths genuinely reuse the decoded verdict several times, which
-    is what persist is for.  The stats .collect() itself is a per-shard
-    aggregate, bounded by shard count."""
+    is what persist is for."""
     n_quar = 0
     n_dups = 0
-    spark = env_df.sparkSession
     gate = _audio_gate_exprs(env_df, cfg)
     if gate is not None:
         env_df = gate["df"]
     norm = _normalize_exprs(env_df, cfg)
     if norm is not None:
         env_df = norm["df"]
+    out = batch_output_path(cfg, batch_id)
 
-    def shard_stats(df: DataFrame) -> list:
-        aggs = _shard_stat_aggs(table, spark.sparkContext)
-        return df.groupBy("`cdc$stream_id`", "generation").agg(*aggs).collect()
-
-    def ordered_write(df: DataFrame) -> None:
+    def ordered_write(df: DataFrame) -> tuple[int, list[dict]]:
         # stream_clustered: the correlating sink already shuffled on
         # cdc$stream_id (correlate_batch cluster_by_stream), so the
         # envelopes are shard-clustered as-is and repartitioning again
@@ -845,32 +816,16 @@ def _write_batch(
             .write.mode("overwrite")
             .option("compression", cfg.output_compression)
             .option("parquet.block.size", str(cfg.output_row_group_bytes))
-            .parquet(batch_output_path(cfg, batch_id))
+            .parquet(out)
         )
+        n, shards = _fold_shard_stats(out, table)
+        if not n:
+            shutil.rmtree(out, ignore_errors=True)  # empty batch: no output dir
+        return n, shards
 
     if gate is None and norm is None and not cfg.dedup_index:
         # fast path (no payload post-processing): one plan execution
-        out = batch_output_path(cfg, batch_id)
-        ordered_write(env_df)
-        parts = [
-            os.path.join(out, f) for f in os.listdir(out) if f.startswith("part-")
-        ]
-        if not parts:
-            shutil.rmtree(out, ignore_errors=True)  # empty batch: no output dir
-            return 0, [], n_quar, n_dups
-        import pyarrow.parquet as pq
-        from pyspark.sql.types import StringType, StructField
-
-        cl = table.changelog_schema()
-        keys = ("cdc$stream_id", "generation", *table.pk_columns, "cdc$time_us")
-        op = StructField("value", StructType([StructField("op", StringType())]))
-        written = spark.read.schema(
-            StructType([*[cl[c] for c in keys], op])
-        ).parquet(out)
-        n_written = sum(pq.read_metadata(p).num_rows for p in parts)
-        if n_written <= _ONE_TASK_READBACK_ROWS:
-            written = written.coalesce(1)
-        return _shard_records(shard_stats(written)) + (n_quar, n_dups)
+        return ordered_write(env_df) + (n_quar, n_dups)
 
     persisted = env_df
     persisted.persist()
@@ -892,11 +847,8 @@ def _write_batch(
             env_df = persisted.filter(gate["pass"]).drop("__audio_verdict")
         if norm is not None:
             env_df = norm["apply"](env_df)
-        stats = shard_stats(env_df)
-        if not stats:
-            return 0, [], n_quar, n_dups
-        ordered_write(env_df)
-        if cfg.dedup_index:
+        n, shards = ordered_write(env_df)
+        if n and cfg.dedup_index:
             from scylla_cdc_source_connector_spark.streaming.dedup_index import (
                 maintain_dedup_index,
             )
@@ -905,26 +857,105 @@ def _write_batch(
             n_dups = maintain_dedup_index(env_df, batch_id, cfg)
     finally:
         persisted.unpersist()
-    return _shard_records(stats) + (n_quar, n_dups)
+    return n, shards, n_quar, n_dups
 
 
-def _shard_records(stats: list) -> tuple[int, list[dict]]:
-    """(records, lineage `shards` entries) of the per-shard stats rows."""
-    shards = [
-        {
-            "shard_id": r["cdc$stream_id"],
-            "generation": r["generation"],
-            "window_start_us": r["window_start_us"],
-            "window_end_us": r["window_end_us"],
-            "last_change_clip_id": r["last_change_clip_id"],
-            "n_records": r["n_records"],
-            "n_creates": r["n_creates"],
-            "n_updates": r["n_updates"],
-            "n_deletes": r["n_deletes"],
-        }
-        for r in stats
-    ]
+def _fold_shard_stats(out: str, table: TableModel) -> tuple[int, list[dict]]:
+    """(records, lineage `shards` entries) of the part files under `out`,
+    folded on the driver with pyarrow — no Spark job.
+
+    Only the slim columns are read (cdc$stream_id, generation, pk,
+    cdc$time_us, cdc$batch_seq_no, value.op; never the payload), at most
+    _FOLD_ROWS rows at a time: each chunk is grouped by (shard,
+    generation) with one vectorized group_by, and the partials merge into
+    one dict per shard.  Driver memory is therefore one chunk of slim
+    columns plus one record per shard, whatever the batch size.
+
+    `last_change_clip_id` is the pk of the shard's row with the greatest
+    (cdc$time_us, cdc$batch_seq_no), rendered like Spark's
+    concat_ws('|', cast(pk AS string)) (single-pk tables record the raw
+    id; lineage is a JSON progress record, not a resume key — offsets live
+    in the checkpoint).  _write_batch sorts each part file on exactly that
+    order, so a chunk's last row of a shard is its greatest, and the
+    partials merge by comparing (cdc$time_us, cdc$batch_seq_no).  The
+    per-op tallies land in lineage so the Debezium streaming-metrics
+    analog (metrics.connector_metrics: TotalNumberOfCreate/Update/Delete
+    EventsSeen) is a driver-only fold, no rescan."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    keys = ["cdc$stream_id", "generation"]
+    pk = table.pk_columns
+    ops = {"n_creates": "c", "n_updates": "u", "n_deletes": "d"}
+    last = pc.ScalarAggregateOptions(skip_nulls=False)
+    cols = [*keys, *pk, "cdc$time_us", "cdc$batch_seq_no", "value.op"]
+    merged: dict[tuple, dict] = {}  # (shard, generation) -> lineage record
+    latest: dict[tuple, tuple] = {}  # -> (cdc$time_us, cdc$batch_seq_no)
+    for f in sorted(f for f in os.listdir(out) if f.startswith("part-")):
+        pf = pq.ParquetFile(os.path.join(out, f))
+        for chunk in pf.iter_batches(batch_size=_FOLD_ROWS, columns=cols):
+            op = pc.struct_field(chunk.column("value"), "op")
+            # the aggregated columns are "__"-named: no clash with a pk column
+            t = pa.table(
+                {
+                    **{c: chunk.column(c) for c in (*keys, *pk)},
+                    "__t": chunk.column("cdc$time_us"),
+                    "__s": chunk.column("cdc$batch_seq_no"),
+                    **{
+                        f"__{n}": pc.fill_null(pc.equal(op, v), False).cast(pa.int64())
+                        for n, v in ops.items()
+                    },
+                }
+            )
+            partials = t.group_by(keys, use_threads=False).aggregate(
+                [
+                    ("__t", "min"),
+                    ("__t", "max"),
+                    ("__t", "count"),
+                    *[(f"__{n}", "sum") for n in ops],
+                    *[(c, "last", last) for c in ("__t", "__s", *pk)],
+                ]
+            )
+            for r in partials.to_pylist():
+                key = (r["cdc$stream_id"], r["generation"])
+                m = merged.setdefault(
+                    key,
+                    {
+                        "shard_id": key[0],
+                        "generation": key[1],
+                        "window_start_us": r["__t_min"],
+                        "window_end_us": r["__t_max"],
+                        "last_change_clip_id": None,
+                        "n_records": 0,
+                        **{n: 0 for n in ops},
+                    },
+                )
+                m["window_start_us"] = min(m["window_start_us"], r["__t_min"])
+                m["window_end_us"] = max(m["window_end_us"], r["__t_max"])
+                m["n_records"] += r["__t_count"]
+                for n in ops:
+                    m[n] += r[f"__{n}_sum"]
+                at = (r["__t_last"], r["__s_last"])
+                if at >= latest.get(key, at):
+                    latest[key] = at
+                    m["last_change_clip_id"] = "|".join(
+                        _cast_to_string(r[f"{c}_last"])
+                        for c in pk
+                        if r[f"{c}_last"] is not None
+                    )
+    shards = [merged[key] for key in sorted(merged)]
     return sum(s["n_records"] for s in shards), shards
+
+
+def _cast_to_string(v) -> str:
+    """Spark's cast(v AS string) for a pk value (string, integral,
+    boolean, date; other types render as Python's str)."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, bytes):
+        return v.decode("utf-8", "replace")
+    return str(v)
 
 
 def _audio_gate_exprs(env_df: DataFrame, cfg: EngineConfig):

@@ -288,10 +288,11 @@ def _jobs(spark, group, fn):
 
 
 def test_cdc_out_passes_job_counts(spark, tmp_root):
-    """On a mirror of three snapshots, one more wave's mirror pass runs 9
+    """On a mirror of three snapshots, one more wave's mirror pass runs 7
     Spark jobs and its records pass 5: no emptiness probe, no count, no
-    Python-worker broadcast of a lookup table and no schema inference on
-    a position-delete file (at the parent commit: 14 and 10)."""
+    Python-worker broadcast of a lookup table, no schema inference on a
+    position-delete file, and none on the envelope read or the mirror's
+    data-file scan (their schema comes off a footer, read with pyarrow)."""
     pdf = make_changelog(FixtureSpec(n_events=400, n_clips=40, n_shards=2))
     src = f"{tmp_root}/cdc_out_jobs_src"
     shutil.rmtree(src, ignore_errors=True)
@@ -316,4 +317,4 @@ def test_cdc_out_passes_job_counts(spark, tmp_root):
         ]
     ops = [s["summary"]["operation"] for s in im.snapshots(mir)]
     assert ops == ["append", "overwrite", "overwrite", "overwrite"]
-    assert counts == [9, 5]
+    assert counts == [7, 5]

@@ -1,14 +1,18 @@
 """The correlating sink's per-batch plan, driven on static batches.
 
 Pins what the lineage `shards` records hold (against a brute-force fold
-over the exactly-once view), the driver-only `emitted_count` fold, that
-the plan's Column lists are built once per query, not once per
-micro-batch, and that a large write keeps the parallel stats read-back."""
+over the exactly-once view, and the driver-side stats fold against a
+Spark aggregate), the driver-only `emitted_count` fold, that the plan's
+Column lists are built once per query, not once per micro-batch, and that
+a repeat micro-batch compiles no code."""
 
 from __future__ import annotations
 
 import dataclasses
 import os
+import time
+
+import numpy as np
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,7 +23,11 @@ from scylla_cdc_source_connector_spark.fixtures import (
     make_changelog,
     write_changelog_chunk,
 )
-from scylla_cdc_source_connector_spark.schemas import DEFAULT_TABLE, OP_POST_IMAGE
+from scylla_cdc_source_connector_spark.schemas import (
+    DEFAULT_TABLE,
+    OP_POST_IMAGE,
+    TableModel,
+)
 from scylla_cdc_source_connector_spark.streaming import sink as sink_mod
 
 
@@ -253,37 +261,133 @@ def test_plan_memo_under_concurrent_queries(spark, tmp_root):
         assert len(held) == 1, "threads on one key hold different plans"
 
 
-def test_large_write_keeps_the_parallel_read_back(
-    spark, tmp_root, stream_pdf, monkeypatch
+def _split_cuts(pdf, k: int) -> list[int]:
+    """Row offsets cutting `pdf` into k batches, every interior cut one row
+    inside a multi-row (stream, cdc$time) write batch, so every batch
+    carries pending rows in and out."""
+    st = pdf["cdc$stream_id"].to_numpy()
+    tu = pdf["cdc$time_us"].to_numpy()
+    starts = np.flatnonzero(np.r_[True, (st[1:] != st[:-1]) | (tu[1:] != tu[:-1])])
+    sizes = np.diff(np.r_[starts, len(pdf)])
+    cuts = []
+    for i in range(1, k):
+        j = np.searchsorted(starts, len(pdf) * i // k)
+        while sizes[j] < 2:
+            j += 1
+        cuts.append(int(starts[j]) + 1)
+    return [0, *cuts, len(pdf)]
+
+
+def test_repeat_batch_compiles_no_code(spark, tmp_root, stream_pdf, monkeypatch):
+    """From the third sink call on (the first builds the plan, the second
+    is the first with a confidence floor, markers and carried pending
+    rows) a micro-batch compiles no code: its per-batch values (the
+    floors, the processing time) reach the plan through memo.batch_value,
+    so the generated Java source equals the last batch's.  Each batch's
+    envelopes carry one `ts_ms`, taken within the sink call."""
+    cfg = _cfg(tmp_root, "no_recompile")
+    bounds = _split_cuts(stream_pdf, 5)
+    batches = _batches(spark, tmp_root, "no_recompile", stream_pdf, bounds)
+    real_markers = sink_mod._window_markers
+    marked = []
+
+    def window_markers(*a, **kw):
+        m = real_markers(*a, **kw)
+        marked.append(m is not None)
+        return m
+
+    monkeypatch.setattr(sink_mod, "_window_markers", window_markers)
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = compiles.METRIC_COMPILATION_TIME()
+    sink = sink_mod.make_correlating_sink(cfg)
+    per_call = []
+    for bid, df in enumerate(batches):
+        before, t0 = compiled.getCount(), int(time.time() * 1000)
+        sink(df, bid)
+        t1 = int(time.time() * 1000)
+        per_call.append(compiled.getCount() - before)
+        ts = {
+            r[0]
+            for r in spark.read.parquet(sink_mod.batch_output_path(cfg, bid))
+            .where("value IS NOT NULL")
+            .select("value.ts_ms")
+            .collect()
+        }
+        assert len(ts) == 1 and t0 <= ts.pop() <= t1, (bid, ts, t0, t1)
+    lineage = sink_mod.read_lineage(cfg)
+    assert marked == [False] + [True] * (len(batches) - 1)
+    assert all(r["has_pending"] for r in lineage[:-1])
+    assert per_call[0] > 0
+    assert per_call[2:] == [0] * (len(batches) - 2), per_call
+
+
+#: a composite key of an int and a string (test_composite_pk's shape)
+_COMPOSITE = TableModel(
+    columns=(("pk1", "int"), ("pk2", "string"), ("v", "string")),
+    partition_key=("pk1",),
+    clustering_key=("pk2",),
+)
+
+
+@pytest.mark.parametrize("name", ["default", "composite"])
+def test_shard_stats_fold_matches_spark_aggregate(
+    spark, tmp_root, stream_pdf, monkeypatch, name
 ):
-    """Past _ONE_TASK_READBACK_ROWS the shard stats come off the parallel
-    read-back (an exchange, no one-task scan); the records are the same."""
+    """The driver-side fold of _write_batch equals a Spark groupBy over the
+    files it wrote: a multi-file, many-row-group output, tombstones tying
+    their delete's cdc$time_us, folded in one-row-group chunks and in
+    chunks of 7 rows (partials merged across chunks and row groups)."""
     from scylla_cdc_source_connector_spark.plans.pipeline import cdc_envelopes
 
-    cfg = _cfg(tmp_root, "read_back")
-    (df,) = _batches(spark, tmp_root, "read_back", stream_pdf, [0, len(stream_pdf)])
+    table = {"default": DEFAULT_TABLE, "composite": _COMPOSITE}[name]
+    cfg = _cfg(tmp_root, f"fold_{name}", output_row_group_bytes=1024)
+    (df,) = _batches(spark, tmp_root, f"fold_{name}", stream_pdf, [0, len(stream_pdf)])
     env = cdc_envelopes(df, cfg, processing_ts_ms=F.lit(0))
+    if table is _COMPOSITE:
+        # the composite key: an int that repeats across clips + the clip id
+        env = env.withColumns(
+            {
+                "pk1": (F.crc32("clip_id") % 3).cast("int"),
+                "pk2": F.col("clip_id"),
+            }
+        ).drop("clip_id")
 
-    plans = []
-
-    def stats_of(bid: int) -> list[dict]:
-        real = type(df).groupBy
-
-        def grouped(self, *cols):
-            plans.append(self._jdf.queryExecution().executedPlan().toString())
-            return real(self, *cols)
-
-        with monkeypatch.context() as m:
-            m.setattr(type(df), "groupBy", grouped)
-            n, shards, _, _ = sink_mod._write_batch(env, bid, cfg)
+    def fold(bid: int) -> list[dict]:
+        n, shards, _, _ = sink_mod._write_batch(env, bid, cfg, table=table)
         assert n == sum(s["n_records"] for s in shards) > 0
-        return sorted(shards, key=lambda s: (s["shard_id"], s["generation"]))
+        return shards
 
-    one_task = stats_of(0)
-    monkeypatch.setattr(sink_mod, "_ONE_TASK_READBACK_ROWS", 0)
-    parallel = stats_of(1)
-    assert "Coalesce 1" in plans[0] and "Coalesce" not in plans[1], plans
-    for a, b in zip(one_task, parallel, strict=True):
-        # max_by breaks ties at the max time arbitrarily
-        a.pop("last_change_clip_id"), b.pop("last_change_clip_id")
-        assert a == b
+    out = sink_mod.batch_output_path(cfg, 0)
+    whole = fold(0)
+    monkeypatch.setattr(sink_mod, "_FOLD_ROWS", 7)
+    chunked = fold(1)
+
+    import pyarrow.parquet as pq
+
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert len(parts) > 1
+    assert max(pq.ParquetFile(os.path.join(out, f)).num_row_groups for f in parts) > 1
+
+    t, seq = F.col("`cdc$time_us`"), F.col("`cdc$batch_seq_no`")
+    op = F.col("value.op")
+    want = [
+        r.asDict()
+        for r in spark.read.parquet(out)
+        .groupBy(F.col("`cdc$stream_id`").alias("shard_id"), "generation")
+        .agg(
+            F.min(t).alias("window_start_us"),
+            F.max(t).alias("window_end_us"),
+            F.max_by(
+                F.concat_ws("|", *[F.col(c).cast("string") for c in table.pk_columns]),
+                F.struct(t, seq),
+            ).alias("last_change_clip_id"),
+            F.count("*").alias("n_records"),
+            F.count(F.when(op == "c", 1)).alias("n_creates"),
+            F.count(F.when(op == "u", 1)).alias("n_updates"),
+            F.count(F.when(op == "d", 1)).alias("n_deletes"),
+        )
+        .orderBy("shard_id", "generation")
+        .collect()
+    ]
+    assert whole == want
+    assert chunked == want
